@@ -1727,7 +1727,7 @@ object SparkEntry {
     "q_compact_roundtrip" -> ((s, d) => {
       // fragment the documents table into many tiny files (the shape a
       // long-running streaming sink accumulates), compact in place
-      // (distributed bin rewrite + manifest-atomic swap + vacuum,
+      // (distributed bin rewrite + atomic log switch + vacuum,
       // StrawCompaction), then aggregate the compacted table. The oracle is
       // the same aggregation over the original parquet — a green row proves
       // the rewrite preserved the data multiset exactly; the require pins

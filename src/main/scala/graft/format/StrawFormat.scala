@@ -25,11 +25,7 @@ import scala.collection.mutable.ArrayBuffer
   * are flattened into separately addressable leaves, each with its own
   * [[ColumnMeta]] and per-page stats, as the reference does
   * (src/write/common.rs:60-68) — so reading one struct field reads only
-  * that leaf's bytes, and struct-field predicates prune pages. v1 files
-  * (magic `GRAFT1`/`GRAFTEND`) serialized a nested column's children into
-  * one page blob; that layout cannot express leaf projection and was
-  * DROPPED in a documented breaking bump — readers reject v1 files with an
-  * explicit rewrite message rather than carrying a second decode path.
+  * that leaf's bytes, and struct-field predicates prune pages.
   *
   * Unlike the reference footer (length + num_values per page only,
   * src/lib.rs:75-80) every page carries optional zone-map stats
@@ -39,20 +35,14 @@ import scala.collection.mutable.ArrayBuffer
 object StrawFormat {
   val Magic: Array[Byte] = Array('G', 'R', 'A', 'F', 'T', '2', 0, 0).map(_.toByte)
   val EofMagic: Array[Byte] = "GRAFTEN2".getBytes("UTF-8")
-  val EofMagicV1: Array[Byte] = "GRAFTEND".getBytes("UTF-8")
   val Extension = ".strb"
 
   /** Stats kind per page: how min/max longs are to be compared. */
   val StatsNone = 0
   val StatsSigned = 1 // integer-family & sortable-encoded floating point
   val StatsPrefix = 2 // unsigned big-endian 8-byte string prefix
-  /** Wide decimals, LEGACY kind (still readable): sortableDouble of the
-    * value's nearest-double approximation. Monotone NON-strict, so sound as
-    * page bounds, but LOSSY: adjacent decimals can collapse to one double —
-    * strict comparisons must be blurred to inclusive ones (like
-    * StatsPrefix), and MIN/MAX aggregate pushdown must not reconstruct
-    * values from them. New files write [[StatsDecimal128]] instead. */
-  val StatsDoubleApprox = 3
+  // kind 3 is retired (a lossy wide-decimal encoding): it still parses,
+  // but no reader prunes or aggregates with it
   /** Wide decimals (precision 19..38): EXACT unscaled-i128 min/max, stored
     * as two planes — (min, max) hold the high 64 bits, (min2, max2) the low
     * 64. Comparison is signed-hi then unsigned-lo. Exact stats make range
@@ -245,11 +235,6 @@ object MetaIO {
     val n = tail.length
     require(n >= 16, "file too small for strawboat footer")
     val eof = java.util.Arrays.copyOfRange(tail, n - 8, n)
-    if (java.util.Arrays.equals(eof, EofMagicV1))
-      throw new IllegalArgumentException(
-        "strawboat: file written by format v1 (nested-blob layout) — v2 is a " +
-          "breaking bump to the per-leaf column layout; rewrite the file with " +
-          "the current writer")
     require(java.util.Arrays.equals(eof, EofMagic), "bad strawboat EOF magic")
     val szBuf = ByteIO.reader(tail, n - 16, 8)
     val schemaLen = szBuf.getInt()
@@ -263,11 +248,18 @@ object MetaIO {
     val in = ByteIO.reader(tail, schemaOff + schemaLen, metaLen)
     val numRows = in.getLong()
     val numCols = in.getInt()
+    // bound on-disk counts by the bytes left for their minimum records
+    // (column: offset + numPages = 12; page: numValues + compressedLen +
+    // nullCount + kind = 17) before allocating from them
+    require(numCols >= 0 && numCols <= in.remaining() / 12,
+      s"corrupt strawboat footer: numCols=$numCols")
     val cols = new Array[ColumnMeta](numCols)
     var c = 0
     while (c < numCols) {
       val offset = in.getLong()
       val numPages = in.getInt()
+      require(numPages >= 0 && numPages <= in.remaining() / 17,
+        s"corrupt strawboat footer: numPages=$numPages")
       val pages = new Array[PageMeta](numPages)
       var p = 0
       while (p < numPages) {
@@ -777,8 +769,7 @@ final class StructColumnWriter(opts: WriteOptions, fields: Array[ColumnWriter])
   * (reference: src/write/primitive.rs:71-78). Zone maps store the EXACT
   * unscaled-i128 min/max over the same two planes
   * ([[StrawFormat.StatsDecimal128]]) — strict range pruning and footer-only
-  * MIN/MAX aggregation both stay valid (the legacy
-  * [[StrawFormat.StatsDoubleApprox]] kind remains readable). */
+  * MIN/MAX aggregation both stay valid. */
 final class Decimal128ColumnWriter(opts: WriteOptions, precision: Int, scale: Int)
   extends LeafColumnWriter(opts) {
   private var hi = new Array[Long](1024)
@@ -995,18 +986,13 @@ final class StrawFileWriter(schema: StructType, opts: WriteOptions) {
   private var approxBuffered = 0L
   private var approxUnknown = false
 
-  /** DEV_WRITER_TIMING: per-column append/encode nanos, dumped to stderr at
-    * [[writeTo]]. Dev-only instrumentation (null ⇒ zero overhead). */
-  private final class DevTiming {
-    val appendNs = new java.util.concurrent.atomic.AtomicLongArray(writers.length)
-    val encodeNs = new java.util.concurrent.atomic.AtomicLongArray(writers.length)
-  }
-  private val devTiming: DevTiming =
-    if (sys.env.contains("DEV_WRITER_TIMING")) new DevTiming else null
-  /** Dev A/B escape hatch: DEV_WRITER_SERIAL forces the pre-r19 serial
-    * append/encode paths (also makes DEV_WRITER_TIMING per-column numbers
-    * true CPU rather than wall-inside-a-parallel-region). */
-  private val parallelWriter = !sys.env.contains("DEV_WRITER_SERIAL")
+  // columnar ingest split: vector-capable columns append straight from
+  // their vectors; the rest read the batch's row view ([[writeColumnar]])
+  private val rowFallback: IndexedSeq[Int] = writers.indices.filter(c => writers(c) match {
+    case l: LeafColumnWriter => !l.vectorCapable
+    case _ => true
+  })
+  private val vectored: IndexedSeq[Int] = writers.indices.filterNot(rowFallback.contains)
 
   private def bufferedExact: Long = {
     var total = 0L
@@ -1055,24 +1041,15 @@ final class StrawFileWriter(schema: StructType, opts: WriteOptions) {
     // serially column after column on that task's core. The row-view
     // fallback columns share the batch's ONE mutable row cursor and must
     // stay serial; they run after the parallel wave.
-    val rowFallback = writers.indices.filter(c => writers(c) match {
-      case l: LeafColumnWriter => !l.vectorCapable
-      case _ => true
-    })
-    val vectored = writers.indices.filterNot(rowFallback.contains)
-    if (parallelWriter && vectored.size > 1 && n >= 1024)
+    if (vectored.size > 1 && n >= 1024)
       java.util.stream.IntStream.range(0, vectored.size).parallel().forEach { k =>
         val c = vectored(k)
-        val t0 = if (devTiming == null) 0L else System.nanoTime()
         writers(c).asInstanceOf[LeafColumnWriter]
           .appendVector(batch.column(c), start, n)
-        if (devTiming != null) devTiming.appendNs.addAndGet(c, System.nanoTime() - t0): Unit
       }
     else vectored.foreach { c =>
-      val t0 = if (devTiming == null) 0L else System.nanoTime()
       writers(c).asInstanceOf[LeafColumnWriter]
         .appendVector(batch.column(c), start, n)
-      if (devTiming != null) devTiming.appendNs.addAndGet(c, System.nanoTime() - t0): Unit
     }
     rowFallback.foreach { c =>
       val w = writers(c)
@@ -1139,20 +1116,16 @@ final class StrawFileWriter(schema: StructType, opts: WriteOptions) {
       // self-balance instead of oversubscribing cores x tables threads.
       // Output bytes are IDENTICAL: each column's bytes land in its own
       // buffer; assembly order below is unchanged.
-      if (parallelWriter && writers.length > 1 && rowsInPage >= 1024)
+      if (writers.length > 1 && rowsInPage >= 1024)
         java.util.stream.IntStream.range(0, writers.length).parallel().forEach { c =>
-          val t0 = if (devTiming == null) 0L else System.nanoTime()
           writers(c).encodeLeaves(Array.emptyByteArray, colBufs, stats, leafStarts(c))
           writers(c).clearPage()
-          if (devTiming != null) devTiming.encodeNs.addAndGet(c, System.nanoTime() - t0): Unit
         }
       else {
         var c = 0
         while (c < writers.length) {
-          val t0 = if (devTiming == null) 0L else System.nanoTime()
           writers(c).encodeLeaves(Array.emptyByteArray, colBufs, stats, leafStarts(c))
           writers(c).clearPage()
-          if (devTiming != null) devTiming.encodeNs.addAndGet(c, System.nanoTime() - t0): Unit
           c += 1
         }
       }
@@ -1183,11 +1156,6 @@ final class StrawFileWriter(schema: StructType, opts: WriteOptions) {
     * group), not the 3× of a concat-then-copy approach. */
   def writeTo(os: java.io.OutputStream): Long = {
     flushPages()
-    if (devTiming != null && totalRows > 0)
-      System.err.println("WRITER_TIMING rows=" + totalRows + " " +
-        schema.fields.indices.map(c => schema.fields(c).name + ":a=" +
-          (devTiming.appendNs.get(c) / 1000000) + "ms,e=" +
-          (devTiming.encodeNs.get(c) / 1000000) + "ms").mkString(" "))
     os.write(StrawFormat.Magic)
     var fileLen = StrawFormat.Magic.length.toLong
     val metas = new Array[ColumnMeta](totalLeaves)

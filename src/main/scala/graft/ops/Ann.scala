@@ -48,21 +48,6 @@ object Ann {
         col("_e.score").as(scoreCol), (col("_r") + 1).cast("int").as("rank"))
   }
 
-  /** One driver-side materialization of a probe's bounded query frame.
-    *
-    * Every persisted-index probe needs its (derived) query frame several
-    * times — the probed-cell set, the broadcast build of the prepared
-    * query side (codes / dot tables), and the rerank's broadcast of the
-    * original query floats — and each use of a SOURCE-backed frame pays
-    * its own Spark job (scan + kernel evaluation): r18 profiling put the
-    * IVF-PQ/IVF-BQ probes at 10-11 jobs for ≤0.2 s of task time, i.e.
-    * job-latency-bound. The frame is query-scale by contract (every probe
-    * already broadcasts it), so collect it ONCE and reuse: the returned
-    * local relation broadcasts with NO job (LocalTableScan collects
-    * driver-side), and bounded driver-side sets (probed cells, candidate
-    * ids) read the same rows. The collected values are whatever the
-    * codegen'd kernels produced — the driver re-implements no math, so
-    * results are byte-identical. */
   /** Driver-held rows as a ONE-slice DataFrame. A plain local relation
     * (`createDataFrame(list, schema)`) plans as LocalTableScan, whose RDD
     * spreads the rows over up to `leafNodeDefaultParallelism` (= cores)
@@ -75,6 +60,10 @@ object Ann {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
+  /** Collect a probe's bounded query frame ONCE: the rows feed driver-side
+    * sets (probed cells, candidate ids) and the one-slice relation over
+    * them ([[localDF]]) feeds every broadcast build, so reuses of a
+    * source-backed frame pay no further scan job. */
   private def localize(spark: SparkSession, df: DataFrame)
       : (Array[org.apache.spark.sql.Row], DataFrame) = {
     val rows = df.collect()

@@ -22,7 +22,7 @@ import graft.format._
   * metadata).
   *
   * Strings are excluded from MIN/MAX (their zone maps are 8-byte prefixes,
-  * not exact); legacy lossy wide-decimal stats make [[compute]] bail. */
+  * not exact). */
 object AggPushdown {
 
   sealed trait Spec
@@ -42,9 +42,8 @@ object AggPushdown {
   }
 
   /** Types whose zone maps are exact & invertible to the column value.
-    * Wide decimals qualify since StatsDecimal128 (exact i128 planes) — a
-    * legacy file still carrying lossy StatsDoubleApprox pages makes
-    * [[compute]] bail per page, so correctness never depends on file age. */
+    * Wide decimals qualify through StatsDecimal128 (exact i128 planes); a
+    * page of any other kind makes [[compute]] bail. */
   private def statsExact(dt: DataType): Boolean = dt match {
     case BooleanType | ByteType | ShortType | IntegerType | DateType |
          LongType | TimestampType | TimestampNTZType | FloatType | DoubleType => true
@@ -259,9 +258,8 @@ object AggPushdown {
 
   /** Compute the result rows from file footers alone — one row for a global
     * aggregate, one row per partition value for GROUP BY the partition
-    * column — or None if any page lacks the stats needed (written before
-    * stats existed, legacy lossy wide-decimal files) or, for the grouped
-    * form, any file is not hive-partitioned on the grouping column. */
+    * column — or None if any page lacks the exact stats needed or, for the
+    * grouped form, any file is not hive-partitioned on the grouping column. */
   def compute(path: String, schema: StructType, grp: Option[Int],
       specs: Seq[Spec], asOf: Option[Long] = None): Option[Seq[InternalRow]] = {
     val needCount = specs.collect { case CountColSpec(f) => f }.distinct
@@ -270,16 +268,15 @@ object AggPushdown {
     val needSum = specs.collect { case SumSpec(f) => f }.distinct
     // prefetch with the bounded parallel pool (same pattern as inferSchema),
     // then accumulate in path order for deterministic group ordering. A
-    // manifest-carried file-stats footer (ManifestStats) substitutes for
+    // log-carried file-stats footer (ManifestStats) substitutes for
     // the real one — the aggregate then reads NO file at all — but only
     // when its counts are un-clamped (numValues == numRows): the synthetic
     // page clamps to Int range, and a clamped nullCount would make
     // COUNT(col) wrong, so oversized files fall back to their real footer.
     // With SUM specs, a synthetic entry must additionally carry sums on
-    // the SUMMED fields' leaves (older manifest snapshots don't; other
-    // columns — dates, strings, floats — never have them and must not
-    // block the manifest path) — otherwise the real footer answers for
-    // that file instead of failing the whole pushdown.
+    // the SUMMED fields' leaves (other columns — dates, strings, floats —
+    // never have them and must not block the log path) — otherwise the real
+    // footer answers for that file instead of failing the whole pushdown.
     def synthCoversSum(synth: graft.format.StrawFooter): Boolean =
       needSum.forall { f =>
         val ci = synth.schema.fields.indexWhere(_.name == schema.fields(f).name)

@@ -19,7 +19,7 @@ package graft.spark
   * — a rename or drop/re-add changes the logical view without touching
   * files, and must not hit the old column's numbers. "Surviving" is
   * deliberate, not an approximation of "snapshot": the merged stats must
-  * reflect the files left after directory/manifest pruning (a
+  * reflect the files left after directory/file-stats pruning (a
   * region-partitioned query should see the pruned region's NDV and
   * min/max, not the table's), so two queries whose filters prune
   * DIFFERENT file subsets rightly occupy different entries and each pays

@@ -35,7 +35,7 @@ import graft.format.{StrawFileWriter, WriteOptions}
   * partitioned table has no `col=value` directories to infer from).
   *
   * Scale notes: `loadTable` resolves the schema through the same
-  * manifest/log-served, footer-cache-backed inference as the path reader —
+  * log-served, footer-cache-backed inference as the path reader —
   * repeated planning over an unchanged table costs zero footer IO. Inserts
   * into a partitioned table inherit the table's partition columns, so plain
   * `INSERT INTO` maintains the hive layout (and the clustered write
@@ -277,7 +277,7 @@ class StrawCatalog extends TableCatalog with SupportsNamespaces
     val st = f.getFileStatus(new Path(dir, fileName))
     val meta = StrawIO.FileMeta(f.makeQualified(st.getPath).toString,
       st.getModificationTime, st.getLen)
-    StrawLog.commit(dir, Seq(StrawManifest.entryFor(meta)), op = "create")
+    StrawLog.commit(dir, Seq(StrawLog.entryFor(meta)), op = "create")
     new StrawboatTable(dir, schema, partitionBy, propertiesArg = keep)
   }
 
@@ -506,7 +506,7 @@ class StrawCatalog extends TableCatalog with SupportsNamespaces
         leaf, add.dataType, nullable = true)))
     // the marker is a DATA FILE: its footer must carry physical spellings
     val meta = writeSchemaMarker(dir, nextMap.toPhysical(newSchema))
-    StrawLog.commit(dir, Seq(StrawManifest.entryFor(meta)),
+    StrawLog.commit(dir, Seq(StrawLog.entryFor(meta)),
       op = s"add column $fullPath", expectVersion = Some(v0),
       mappingUpdate =
         if (spelling.isDefined) Some((curMap, nextMap)) else None): Unit
@@ -553,7 +553,7 @@ class StrawCatalog extends TableCatalog with SupportsNamespaces
       StructType(st.fields.map(f =>
         if (f.name == leaf) f.copy(dataType = to) else f)))
     val meta = writeSchemaMarker(dir, StrawLog.mappingAt(dir).toPhysical(widened))
-    StrawLog.commit(dir, Seq(StrawManifest.entryFor(meta)),
+    StrawLog.commit(dir, Seq(StrawLog.entryFor(meta)),
       op = s"alter column $name type $to", expectVersion = Some(v0)): Unit
   }
 
@@ -668,7 +668,7 @@ class StrawCatalog extends TableCatalog with SupportsNamespaces
 /** The catalog's per-table sidecar (`_straw_table.json`): partition columns
   * and table properties — metadata the data files cannot carry (an empty
   * partitioned table has no `col=value` directories to infer from). Format:
-  * one flat JSON object, hand-rolled like the manifest (no JSON dependency).
+  * one flat JSON object, hand-rolled (no JSON dependency).
   */
 final case class StrawTableSidecar(partitionBy: Seq[String],
     properties: Map[String, String])

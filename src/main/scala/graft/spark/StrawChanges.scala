@@ -191,7 +191,7 @@ object StrawChanges {
       s"strawboat: change range end $toVersion is beyond the latest " +
         s"committed version $latest of $dir")
 
-    def snapAt(v: Long): Seq[StrawManifest.Entry] =
+    def snapAt(v: Long): Seq[StrawLog.Entry] =
       if (v < 1) Seq.empty
       else StrawLog.snapshotAt(dir, v).getOrElse(throw new IllegalStateException(
         s"strawboat: version $v of $dir is not resolvable (vacuumed log?) — " +

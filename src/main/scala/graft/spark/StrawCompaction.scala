@@ -45,7 +45,7 @@ import graft.format.WriteOptions
   * the input vacuum leaves unreferenced INPUTS, reclaimed the same way. A
   * concurrent committer that removed any input first surfaces as a clean
   * [[StrawLog.ConflictException]] no-op. Only a directory-WALKING reader
-  * (log and manifest both deleted/corrupt) can transiently see both
+  * (log deleted) can transiently see both
   * generations mid-vacuum. Readers that captured a pre-compaction snapshot
   * can fail (not mis-answer) when the vacuum deletes inputs under them.
   *
@@ -614,7 +614,7 @@ private[spark] object MaintenanceOps {
     * debris swept; a crash between commit and vacuum leaves unreferenced
     * files for [[StrawLog.vacuumUnreferenced]]. */
   def commitSwitchAndVacuum(dir: String, jobId: String,
-      adds: Seq[StrawManifest.Entry], removes: Set[String], op: String,
+      adds: Seq[StrawLog.Entry], removes: Set[String], op: String,
       dvs: Seq[StrawLog.DvUpdate] = Seq.empty,
       alsoVacuum: Seq[String] = Seq.empty,
       alsoRollback: Seq[String] = Seq.empty,
@@ -686,11 +686,7 @@ object StrawCompaction {
       inputFiles: Int,
       outputFiles: Int,
       rewrittenBytes: Long,
-      skippedFiles: Int,
-      /** Always true since the [[StrawLog]] switch: a failed commit now
-        * rolls back and throws instead of degrading. Retained for caller
-        * compatibility. */
-      manifestSwapped: Boolean = true) {
+      skippedFiles: Int) {
     def filesRemoved: Int = inputFiles - outputFiles
   }
 
@@ -894,7 +890,7 @@ object StrawCompaction {
     val fresh = MaintenanceOps.renameVisibleStamped(dir, jobId,
       staged.toSeq.map { case (bin, names) => (bin.maxMtime, names) })
     val inputs = bins.flatMap(_.files.map(_.meta.path)).toSet
-    val adds = StrawIO.mapParallel(fresh)(StrawManifest.entryFor)
+    val adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
     MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, inputs, op = "compact",
       // materialized-away sidecars are reclaimed with their data files
       alsoVacuum = bins.flatMap(_.files.flatMap(bf => Option(bf.dvPath))),
@@ -907,8 +903,7 @@ object StrawCompaction {
       inputFiles = inputs.size,
       outputFiles = fresh.size,
       rewrittenBytes = bins.foldLeft(0L)(_ + _.bytes),
-      skippedFiles = live.size - inputs.size,
-      manifestSwapped = true)
+      skippedFiles = live.size - inputs.size)
   }
 
   /** Re-bucket `dir` into `n` hash buckets on `col` — bucket-count (or
@@ -1031,7 +1026,7 @@ object StrawCompaction {
     val fresh = MaintenanceOps.renameVisibleStamped(dir, jobId,
       staged.toSeq.map { case (bin, names) => (bin.maxMtime, names) })
     val inputs = bins.flatMap(_.files.map(_.meta.path)).toSet
-    val adds = StrawIO.mapParallel(fresh)(StrawManifest.entryFor)
+    val adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
     MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, inputs,
       op = s"rebucket $col $n",
       alsoVacuum = bins.flatMap(_.files.flatMap(bf => Option(bf.dvPath))),
@@ -1046,7 +1041,6 @@ object StrawCompaction {
       inputFiles = inputs.size,
       outputFiles = fresh.size,
       rewrittenBytes = bins.foldLeft(0L)(_ + _.bytes),
-      skippedFiles = live.size - inputs.size,
-      manifestSwapped = true)
+      skippedFiles = live.size - inputs.size)
   }
 }

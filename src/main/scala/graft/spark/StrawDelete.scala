@@ -125,7 +125,7 @@ object StrawDelete {
     // table stays self-describing and reads back empty
     val adds =
       if (dvUpdates.isEmpty && removes.size == listed.size)
-        Seq(StrawManifest.entryFor(writeEmptyMarker(dir,
+        Seq(StrawLog.entryFor(writeEmptyMarker(dir,
           StrawLog.mappingAt(dir).toPhysical(schema), opts)))
       else Seq.empty
     MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "delete",
@@ -186,7 +186,7 @@ object StrawDelete {
     if (fresh.isEmpty && removes.size == listed.size)
       freshAll :+= writeEmptyMarker(dir,
         StrawLog.mappingAt(dir).toPhysical(schema), opts)
-    val adds = StrawIO.mapParallel(freshAll)(StrawManifest.entryFor)
+    val adds = StrawIO.mapParallel(freshAll)(StrawLog.entryFor)
     MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "delete",
       alsoVacuum = replacedDvs,
       // conflict if a concurrent row delete swapped an input's DV after

@@ -4,14 +4,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.spark.StrawIO.FileMeta
-import graft.spark.StrawManifest.Entry
 
 /** Transaction log: the table's commit history as a `_straw_log/` directory
   * of version-numbered action files, making every table mutation — batch
   * append/truncate, streaming epoch, compaction — one ATOMIC metadata
-  * operation with snapshot isolation. This closes the crash/concurrency
-  * windows the walk-union [[StrawManifest]] protocol documented as "closed
-  * only by a true transaction log":
+  * operation with snapshot isolation. The log is the table's only
+  * committed-files snapshot: planning resolves a table to the entries of
+  * its latest version (zero directory walks), and a table without a log is
+  * listed by walking its directory. The log guarantees:
   *
   *  - a reader (planning a query) resolves the table to the entries of the
   *    latest complete log version — a crash after the data-file rename
@@ -22,16 +22,15 @@ import graft.spark.StrawManifest.Entry
   *    after — a reader sees the old or the new generation, never both and
   *    never neither;
   *  - concurrent committers race on `createLink`/rename-claimed version
-  *    files instead of silently overwriting each other's walk-based
-  *    manifests: the loser re-reads and retries (appends commute) or fails
+  *    files: the loser re-reads and retries (appends commute) or fails
   *    cleanly (conflicting removes);
   *  - streaming epochs carry an idempotence action (`X query version`):
   *    a replayed epoch whose log commit already won is recognized and
   *    dropped even when the engine's own marker was lost in a crash;
-  *  - commits are O(changed files), not O(table): the old protocol re-walked
-  *    the directory and rewrote the full manifest every commit — at 100k
-  *    files that is the dominant commit cost and an eventual-consistency
-  *    hazard on object stores. A log commit writes one small delta file.
+  *  - commits are O(changed files), not O(table): a log commit writes one
+  *    small delta file instead of re-walking the directory — at 100k files
+  *    a walk is the dominant cost and an eventual-consistency hazard on
+  *    object stores.
   *
   * Old versions remain readable ([[snapshotAt]] — time travel /
   * `versionAsOf`) until their files are reclaimed by compaction's vacuum or
@@ -42,8 +41,7 @@ import graft.spark.StrawManifest.Entry
   * 00000000000000000001.commit      // one per version, atomically claimed
   * 00000000000000000010.checkpoint  // full snapshot every Nth version
   * }}}
-  * Commit/checkpoint body is line-framed UTF-8, the [[StrawManifest]] v3
-  * grammar plus remove/dv/txn actions:
+  * Commit/checkpoint body is line-framed UTF-8:
   * {{{
   * strawboat-log v1 <uuid>
   * S<idx>\t<schema json>                     (schema dictionary)
@@ -54,6 +52,16 @@ import graft.spark.StrawManifest.Entry
   * C\t<name>\t<b64(expr)|->                  (CHECK constraint set / drop)
   * E                                         (completeness terminator)
   * }}}
+  * An `A` action may reference its file's schema (deduplicated in the `S`
+  * dictionary, parsed once per distinct schema) and a [[ManifestStats]]
+  * blob of per-leaf (kind, min, max, nullCount, sum) merged over the
+  * file's pages. Planning turns the blob into a synthetic one-page footer
+  * and runs the ordinary [[ZoneMapFilter]] over it, so a selective filter
+  * prunes WHOLE FILES before any footer IO. Stats are computed once at
+  * commit time and carried forward verbatim; an entry without stats never
+  * prunes. The relative path is LAST so the fixed-position fields parse
+  * even though it is unconstrained; schema JSON escapes control
+  * characters, so line/tab framing is safe.
   * A `C` action sets (payload = base64 of the SQL expression, framing-safe)
   * or drops (payload `-`) a named CHECK constraint; replay folds them into
   * [[Snapshot.constraints]] and checkpoints re-emit the live set.
@@ -70,14 +78,13 @@ import graft.spark.StrawManifest.Entry
   * without an atomic claim degrade to last-writer-wins on a same-version
   * race, the same caveat Delta has without a coordinating LogStore.
   *
-  * Trust model mirrors the manifest: this library's committers are the only
-  * writers. Files dropped in externally are not seen; delete `_straw_log/`
-  * (and `_strawboat_manifest`) to force directory walking. A replay problem
-  * on an EXISTING log (corrupt or missing version file) fails reads loudly
-  * after a retry — a silent walk fallback could expose uncommitted renamed
-  * files and resurrect rows deleted via deletion vectors, so only the
-  * absence of a log (or its explicit deletion, the escape hatch) selects
-  * the listing path.
+  * Trust model: this library's committers are the only writers. Files
+  * dropped in externally are not seen; delete `_straw_log/` to force
+  * directory walking. A replay problem on an EXISTING log (corrupt or
+  * missing version file) fails reads loudly after a retry — a silent walk
+  * fallback could expose uncommitted renamed files and resurrect rows
+  * deleted via deletion vectors, so only the absence of a log (or its
+  * explicit deletion, the escape hatch) selects the listing path.
   */
 object StrawLog {
   val DirName = "_straw_log"
@@ -119,6 +126,44 @@ object StrawLog {
       mapping: ColumnMappingState = ColumnMappingState.Empty) {
     lazy val pathSet: Set[String] = entries.map(_.meta.path).toSet
   }
+
+  /** One live data file of a snapshot: its version-keyed identity plus
+    * optional file-level stats (`schemaJson`/`statsB64` null when absent).
+    * `schemaParsed` is the pre-parsed schema when the producer had it in
+    * hand (the `S` dictionary parses each distinct schema ONCE for all its
+    * files — 100k same-schema entries must not mean 100k JSON parses).
+    * `dv` is the file's deletion vector, null for a fully-live file. */
+  final case class Entry(meta: FileMeta, schemaJson: String, statsB64: String,
+      schemaParsed: StructType = null,
+      dv: DeletionVector.DvInfo = null) {
+    /** Rows the file contributes to the table (footer rows minus dead). */
+    def liveRowsOf(footerRows: Long): Long =
+      if (dv == null) footerRows else math.max(0L, footerRows - dv.cardinality)
+    /** Synthetic one-page-per-leaf footer for file-level pruning, or None
+      * when this entry carries no stats (or they fail to parse — stats
+      * accelerate, never wall). Memoized: entries are shared across cached
+      * snapshots, so each file's stats decode once. */
+    lazy val synthetic: Option[graft.format.StrawFooter] =
+      if (schemaJson == null || statsB64 == null) None
+      else
+        try {
+          val schema =
+            if (schemaParsed != null) schemaParsed
+            else DataType.fromJson(schemaJson).asInstanceOf[StructType]
+          Some(ManifestStats.decode(schema,
+            java.util.Base64.getDecoder.decode(statsB64)))
+        } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** The entry for a just-written file, with file-level stats from its
+    * (cached) footer; stats-less on any error — a commit must never fail
+    * because statistics couldn't be derived. */
+  def entryFor(m: FileMeta): Entry =
+    try {
+      val footer = FooterCache.get(m.path, m.mtime, m.len)
+      Entry(m, footer.schema.json,
+        java.util.Base64.getEncoder.encodeToString(ManifestStats.encode(footer)))
+    } catch { case scala.util.control.NonFatal(_) => Entry(m, null, null) }
 
   def logDir(table: String): Path = new Path(table, DirName)
 
@@ -184,7 +229,7 @@ object StrawLog {
   private val writeLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Raw FS (no checksum sidecars) — single-file atomic ops, as manifest. */
+  /** Raw FS (no checksum sidecars) — single-file atomic ops. */
   private def rawFs(dir: String): FileSystem =
     StrawIO.fs(dir) match {
       case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
@@ -304,8 +349,9 @@ object StrawLog {
     if (unchanged) Some(h) else None
   }
 
-  /** The latest snapshot, or None when the table has no (readable) log —
-    * callers fall back to the legacy manifest, then to walking. */
+  /** The latest snapshot, or None when the table has no log — callers
+    * fall back to walking. A log that exists but cannot be read throws
+    * ([[resolve]]). */
   def snapshot(table: String): Option[Snapshot] = resolve(table, None)
 
   /** The snapshot AS OF `version` (time travel). None when the log is
@@ -338,9 +384,9 @@ object StrawLog {
   }
 
   /** Resolution failure classes: None = genuinely no log (or the asOf
-    * version was never committed / was vacuumed) — callers fall back to the
-    * legacy manifest or a walk. A log that EXISTS but cannot be replayed
-    * (IO error, corrupt version file, replay gap) THROWS after one retry
+    * version was never committed / was vacuumed) — callers fall back to a
+    * walk. A log that EXISTS but cannot be replayed (IO error, corrupt
+    * version file, replay gap) THROWS after one retry
     * instead: silently degrading to a directory walk would expose
     * uncommitted renamed files, mid-vacuum both-generations states, and —
     * worst — resurrect rows deleted via deletion vectors (the walk cannot
@@ -496,9 +542,8 @@ object StrawLog {
     var op = ""
     try {
       body.dropRight(1).foreach { line =>
-        if (line.startsWith("S")) StrawManifest.parseSchemaLine(line, schemas, "log")
-        else if (line.startsWith("A\t"))
-          out += AddAction(StrawManifest.parseEntryLine(line, schemas, qdir, "log"))
+        if (line.startsWith("S")) parseSchemaLine(line, schemas)
+        else if (line.startsWith("A\t")) out += AddAction(parseAddLine(line, schemas, qdir))
         else if (line.startsWith("R\t")) {
           out += RemoveAction(s"$qdir/${line.substring(2)}")
         } else if (line.startsWith("D\t")) {
@@ -539,6 +584,56 @@ object StrawLog {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
+  /** Write the `S<idx>\t<schema json>` dictionary of `sorted`'s distinct
+    * schemas; returns each schema's index for [[appendAddLine]]. */
+  private def appendSchemaDict(sb: StringBuilder,
+      sorted: Seq[Entry]): scala.collection.Map[String, Int] = {
+    val schemaIdx = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    sorted.foreach { e =>
+      if (e.schemaJson != null && !schemaIdx.contains(e.schemaJson)) {
+        val idx = schemaIdx.size
+        schemaIdx(e.schemaJson) = idx
+        sb.append('S').append(idx).append('\t').append(e.schemaJson).append('\n')
+      }
+    }
+    schemaIdx
+  }
+
+  private def appendAddLine(sb: StringBuilder, e: Entry,
+      schemaIdx: scala.collection.Map[String, Int], prefix: String): Unit = {
+    require(e.meta.path.startsWith(prefix), s"log entry outside table: ${e.meta.path}")
+    sb.append("A\t").append(e.meta.mtime).append('\t').append(e.meta.len)
+      .append('\t')
+      .append(if (e.schemaJson == null) "-" else schemaIdx(e.schemaJson).toString)
+      .append('\t')
+      .append(if (e.statsB64 == null) "-" else e.statsB64)
+      .append('\t')
+      .append(e.meta.path.substring(prefix.length)).append('\n')
+  }
+
+  /** Parse one `S<idx>\t<json>` dictionary line; each DISTINCT schema
+    * parses once, every entry of that schema shares the instance. */
+  private def parseSchemaLine(line: String,
+      schemas: scala.collection.mutable.ArrayBuffer[(String, StructType)]): Unit = {
+    val t = line.indexOf('\t')
+    require(t > 0 && line.substring(1, t).toInt == schemas.size,
+      s"bad log schema line: $line")
+    val json = line.substring(t + 1)
+    schemas += ((json, DataType.fromJson(json).asInstanceOf[StructType]))
+  }
+
+  private def parseAddLine(line: String,
+      schemas: scala.collection.IndexedSeq[(String, StructType)], qdir: String): Entry = {
+    val parts = line.split('\t') // path (last) re-joined below if it had tabs
+    require(parts.length >= 6, s"bad log line: $line")
+    val relPath = parts.drop(5).mkString("\t")
+    val (schemaJson, schemaParsed) =
+      if (parts(3) == "-") (null, null) else schemas(parts(3).toInt)
+    val statsB64 = if (parts(4) == "-") null else parts(4)
+    Entry(FileMeta(s"$qdir/$relPath", parts(1).toLong, parts(2).toLong),
+      schemaJson, statsB64, schemaParsed)
+  }
+
   private def serialize(adds: Seq[Entry], removes: Seq[String],
       txns: Map[String, Long], qdir: String, op: String,
       dvs: Seq[(String, DeletionVector.DvInfo)] = Seq.empty,
@@ -550,7 +645,7 @@ object StrawLog {
     if (op.nonEmpty)
       sb.append("O\t").append(op.replace('\n', ' ').replace('\t', ' ')).append('\n')
     val sorted = adds.sortBy(_.meta.path)
-    val schemaIdx = StrawManifest.appendSchemaDict(sb, sorted)
+    val schemaIdx = appendSchemaDict(sb, sorted)
     // R before A before D: replay applies actions in file order — a DV
     // must attach after its file's add, and if the adds/removes
     // disjointness requirement is ever relaxed, an in-place path
@@ -559,7 +654,7 @@ object StrawLog {
       require(p.startsWith(prefix), s"log remove outside table: $p")
       sb.append("R\t").append(p.substring(prefix.length)).append('\n')
     }
-    sorted.foreach(StrawManifest.appendEntryLine(sb, 'A', _, schemaIdx, prefix, "log"))
+    sorted.foreach(appendAddLine(sb, _, schemaIdx, prefix))
     dvs.sortBy(_._1).foreach { case (dataPath, dv) =>
       require(dataPath.startsWith(prefix), s"log dv outside table: $dataPath")
       val dataRel = dataPath.substring(prefix.length)
@@ -699,11 +794,8 @@ object StrawLog {
   /** Commit `adds` (absolute-path entries, stats optional) and `removes`
     * (absolute paths) as the next log version and return it.
     *
-    * First commit on a table BOOTSTRAPS the log: the current table state
-    * (legacy manifest when present — its stats carry over — else one
-    * directory walk) is folded into version 1 as adds, and the legacy
-    * manifest file is retired so a later log-read failure can never fall
-    * back to a STALE pre-log snapshot.
+    * First commit on a table BOOTSTRAPS the log: one directory walk folds
+    * the files already present into version 1 as stats-less adds.
     *
     * `txn = (appId, version)` makes the commit idempotent per appId: when
     * the log already records `appId` at `version` or later the commit is a
@@ -876,11 +968,10 @@ object StrawLog {
         val bootstrap: Seq[Entry] =
           if (cur.isDefined) Seq.empty
           else {
-            // fold the pre-log table state into version 1; prefer the legacy
-            // manifest (zero walks, stats carry), else walk once
-            val prior = StrawManifest.readLegacyEntries(table)
-              .getOrElse(StrawIO.walkFilesMeta(table).map(Entry(_, null, null)))
-            prior.filterNot(e => addPaths(e.meta.path) || removes(e.meta.path))
+            // fold the pre-log table state into version 1 (one walk)
+            StrawIO.walkFilesMeta(table)
+              .filterNot(m => addPaths(m.path) || removes(m.path))
+              .map(Entry(_, null, null))
           }
         if (cur.isEmpty) {
           // bootstrap: DV targets must exist in the folded state, and no
@@ -905,7 +996,6 @@ object StrawLog {
         try { os.write(body.getBytes("UTF-8")); ok = true }
         finally { os.close(); if (!ok) f.delete(tmp, false): Unit }
         if (claim(f, tmp, commitPath(ld, next), body.takeWhile(_ != '\n'))) {
-          if (cur.isEmpty) StrawManifest.invalidate(table) // retire legacy snapshot
           afterCommit(table, f, ld, qdir, next, cur, body, ckptEvery)
           return next
         }
@@ -930,8 +1020,8 @@ object StrawLog {
     * The snapshot is derived INCREMENTALLY: the just-written body (the
     * exact bytes replay will read) is parsed and applied on top of the
     * previous snapshot — O(this commit), not an O(table) checkpoint
-    * replay per commit. Unchanged [[StrawManifest.Entry]] objects (stats
-    * strings, memoized synthetic footers included) are shared with the
+    * replay per commit. Unchanged [[Entry]] objects (stats strings,
+    * memoized synthetic footers included) are shared with the
     * previous version, so a long run of small commits costs O(deltas) of
     * cache memory, not versions x table-size. Replay-from-disk stays the
     * canonical path for cold resolves; the induction base is a replayed
@@ -1198,7 +1288,7 @@ object StrawLog {
   }
 
   /** External-writer escape hatch: delete the whole log (readers fall back
-    * to the legacy manifest or directory walking). Also drops the table's
+    * to directory walking). Also drops the table's
     * pinned timestampAsOf resolutions — first-resolution-wins stability is
     * only sound within one log incarnation. NOTE: on a STREAMING SINK this
     * forfeits epoch idempotence — the log's txn actions are the replay

@@ -675,7 +675,7 @@ object StrawMerge {
     val removes = full.map(c => q(c.input)).toSet
     val dvUpdates = partial.map(c => StrawLog.DvUpdate(q(c.input), c.newDv,
       Option(c.oldDvPath))).toSeq
-    val adds = StrawIO.mapParallel(fresh)(StrawManifest.entryFor)
+    val adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
     MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "merge",
       dvs = dvUpdates,
       // partial files keep their superseded sidecar for the age-based

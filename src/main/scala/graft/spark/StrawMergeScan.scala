@@ -433,11 +433,11 @@ object StrawMergeScan {
     val removes = full.map(c => q(c.input)).toSet
     val dvUpdates = partial.map(c => StrawLog.DvUpdate(q(c.input), c.newDv,
       Option(c.oldDvPath))).toSeq
-    var adds = StrawIO.mapParallel(fresh)(StrawManifest.entryFor)
+    var adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
     // a merge that deletes every row of every file and inserts nothing
     // leaves a schema marker so the table stays self-describing
     if (adds.isEmpty && dvUpdates.isEmpty && removes.size == listed.size)
-      adds = Seq(StrawManifest.entryFor(StrawDelete.writeEmptyMarker(dir,
+      adds = Seq(StrawLog.entryFor(StrawDelete.writeEmptyMarker(dir,
         mapping.toPhysical(schema), opts0)))
     MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "merge",
       dvs = dvUpdates,

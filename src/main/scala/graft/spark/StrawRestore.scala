@@ -64,7 +64,7 @@ object StrawRestore {
     val curBy = cur.entries.map(e => e.meta.path -> e).toMap
     val oldBy = old.entries.map(e => e.meta.path -> e).toMap
 
-    def dvName(e: StrawManifest.Entry): Option[String] =
+    def dvName(e: StrawLog.Entry): Option[String] =
       Option(e.dv).map(_.path)
 
     // files the target holds that the present does not: re-add, and

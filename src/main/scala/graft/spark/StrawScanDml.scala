@@ -70,7 +70,7 @@ object StrawScanDml {
         // table stays self-describing (mirror of StrawDelete.deleteViaDv)
         val adds =
           if (dvUpdates.isEmpty && removes.size == listed.size)
-            Seq(StrawManifest.entryFor(StrawDelete.writeEmptyMarker(dir,
+            Seq(StrawLog.entryFor(StrawDelete.writeEmptyMarker(dir,
               mapping.toPhysical(schema), opts)))
           else Seq.empty
         MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "delete",
@@ -156,7 +156,7 @@ object StrawScanDml {
         val removes = full.map(c => q(c.input)).toSet
         val dvUpdates = partial.map(c => StrawLog.DvUpdate(q(c.input), c.newDv,
           Option(c.oldDvPath))).toSeq
-        val adds = StrawIO.mapParallel(fresh)(StrawManifest.entryFor)
+        val adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
         MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "update",
           dvs = dvUpdates,
           alsoVacuum = full.flatMap(c => Option(c.oldDvPath)).toSeq,

@@ -282,7 +282,7 @@ object StrawUpdate {
     val removes = full.map(c => q(c.input)).toSet
     val dvUpdates = partial.map(c => StrawLog.DvUpdate(q(c.input), c.newDv,
       Option(c.oldDvPath))).toSeq
-    val adds = StrawIO.mapParallel(fresh)(StrawManifest.entryFor)
+    val adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
     MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "update",
       dvs = dvUpdates,
       // partial files keep their superseded sidecar for the age-based
@@ -328,7 +328,7 @@ object StrawUpdate {
       .map(c => f.makeQualified(new Path(c.meta.path)).toString -> Option(c.dv))
       .toMap
     val replacedDvs = removes.toSeq.flatMap(p => candDv.getOrElse(p, None).map(_.path))
-    val adds = StrawIO.mapParallel(fresh)(StrawManifest.entryFor)
+    val adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
     MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "update",
       alsoVacuum = replacedDvs,
       // conflict if a concurrent row delete swapped an input's DV after

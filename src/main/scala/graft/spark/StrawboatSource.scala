@@ -56,23 +56,23 @@ class StrawboatDataSource extends TableProvider with DataSourceRegister {
     // below stays the default because it is what makes schema-evolved
     // appends read correctly (new columns surface, absent ones null-fill).
     val mergeSchema = Option(options.get("mergeSchema")).forall(_.toBoolean)
-    // log/v3-manifest entries carry each file's schema (parsed once per
-    // DISTINCT schema) — inference is zero footer IO on a manifested table.
+    // log entries carry each file's schema (parsed once per DISTINCT
+    // schema) — inference is zero footer IO on a table with a log.
     // With versionAsOf the PINNED snapshot's schemas apply: the table reads
     // exactly as it did at that version, dropping later-added columns.
-    val snapshotEntries: Option[Seq[StrawManifest.Entry]] = asOf match {
-      case Some(v) => StrawLog.snapshotAt(dir, v).map(_.entries)
-      case None => StrawManifest.readEntries(dir)
+    val snapshot = asOf match {
+      case Some(v) => StrawLog.snapshotAt(dir, v)
+      case None => StrawLog.snapshot(dir)
     }
-    val manifestSchemas: Option[Seq[(String, StructType)]] =
-      snapshotEntries.filter(es =>
+    val logSchemas: Option[Seq[(String, StructType)]] =
+      snapshot.map(_.entries).filter(es =>
         es.nonEmpty && es.forall(_.schemaParsed != null))
         .map(_.map(e => (e.meta.path, e.schemaParsed)))
     // file schemas are PHYSICAL; rename/drop history maps them to the live
     // logical namespace (dropped spellings vanish from the table schema)
     val mapping = StrawLog.mappingAt(dir, asOf)
     if (!mergeSchema) {
-      manifestSchemas.foreach(ms => return mapping.toLogical(ms.head._2))
+      logSchemas.foreach(ms => return mapping.toLogical(ms.head._2))
       val one = files.head
       return mapping.toLogical(FooterCache.get(one.path, one.mtime, one.len).schema)
     }
@@ -80,10 +80,10 @@ class StrawboatDataSource extends TableProvider with DataSourceRegister {
     // (the read path null-fills them per file) and WIDEN across lossless
     // type evolution (int→long, float→double: the merged column takes the
     // wider type, readers convert per file); incompatible types fail here
-    // with both definitions named. Schemas come from the manifest when it
+    // with both definitions named. Schemas come from the log when it
     // has them, else from the version-keyed footer cache: repeated planning
     // over an unchanged table costs zero footer IO either way.
-    val schemas = manifestSchemas.getOrElse(
+    val schemas = logSchemas.getOrElse(
       StrawIO.mapParallel(files)(f =>
         (f.path, FooterCache.get(f.path, f.mtime, f.len).schema)))
     StrawSchemaResolver.merge(
@@ -243,11 +243,11 @@ object StrawIO {
   final case class FileMeta(path: String, mtime: Long, len: Long)
 
   /** Count of actual recursive directory walks performed — the observable
-    * for "a repeat query performs zero directory listings" (manifest) and
+    * for "a repeat query performs zero directory listings" (log) and
     * "a hot-path commit performs zero table walks". */
   val listings = new java.util.concurrent.atomic.AtomicLong()
 
-  /** All data files under `dir` by RECURSIVE WALK (no manifest), sorted. */
+  /** All data files under `dir` by RECURSIVE WALK (no log), sorted. */
   def walkFilesMeta(dir: String): Seq[FileMeta] = {
     val p = new Path(dir)
     val f = fs(dir)
@@ -265,7 +265,7 @@ object StrawIO {
   /** Entries of the PINNED log version for time travel (`versionAsOf`).
     * LOUD on an unavailable version: silently serving the latest snapshot
     * instead would answer a different question. */
-  private def entriesAt(dir: String, version: Long): Seq[StrawManifest.Entry] =
+  private def entriesAt(dir: String, version: Long): Seq[StrawLog.Entry] =
     StrawLog.snapshotAt(dir, version).getOrElse(throw new IllegalArgumentException(
       s"strawboat: versionAsOf $version is not available for $dir — the table " +
         "has no transaction log, the version was never committed, or its log " +
@@ -275,9 +275,9 @@ object StrawIO {
   /** All data files under `dir` (or `dir` itself if a file), recursive so
     * hive-style partition subdirectories are seen, path-sorted, with the
     * (mtime, length) version key from the same listing. Served from the
-    * table's [[StrawLog]] snapshot / committed-files [[StrawManifest]] when
-    * one exists (one cached small read instead of a directory walk); falls
-    * back to walking. `asOf` pins a historical log version (time travel). */
+    * table's [[StrawLog]] snapshot when it has a log (one cached small read
+    * instead of a directory walk); falls back to walking. `asOf` pins a
+    * historical log version (time travel). */
   def listFilesMeta(dir: String, asOf: Option[Long] = None): Seq[FileMeta] = {
     asOf.foreach(v => return entriesAt(dir, v).map(_.meta))
     val p = new Path(dir)
@@ -286,20 +286,20 @@ object StrawIO {
     else {
       val st0 = f.getFileStatus(p)
       if (st0.isFile) Seq(FileMeta(dir, st0.getModificationTime, st0.getLen))
-      else StrawManifest.read(dir).getOrElse(walkFilesMeta(dir))
+      else StrawLog.snapshot(dir).map(_.entries.map(_.meta)).getOrElse(walkFilesMeta(dir))
     }
   }
 
   def listFiles(dir: String): Seq[String] = listFilesMeta(dir).map(_.path)
 
-  /** One planned-over data file: its identity, the manifest-carried
+  /** One planned-over data file: its identity, the log-carried
     * synthetic stats footer when the snapshot has one (file-level pruning
     * input), and its deletion vector (null when fully live — only a log
     * snapshot can carry one). */
   final case class Listed(meta: FileMeta, synth: Option[graft.format.StrawFooter],
       dv: DeletionVector.DvInfo)
 
-  /** [[listFilesMeta]] plus each file's manifest-carried synthetic stats
+  /** [[listFilesMeta]] plus each file's log-carried synthetic stats
     * footer ([[ManifestStats]]) when the snapshot has them — the input to
     * FILE-level pruning (drop a file before its real footer is ever read) —
     * and its deletion vector. Files without stats are never pruned. */
@@ -313,8 +313,8 @@ object StrawIO {
       val st0 = f.getFileStatus(p)
       if (st0.isFile)
         Seq(Listed(FileMeta(dir, st0.getModificationTime, st0.getLen), None, null))
-      else StrawManifest.readEntries(dir) match {
-        case Some(entries) => entries.map(e => Listed(e.meta, e.synthetic, e.dv))
+      else StrawLog.snapshot(dir) match {
+        case Some(snap) => snap.entries.map(e => Listed(e.meta, e.synthetic, e.dv))
         case None => walkFilesMeta(dir).map(Listed(_, None, null))
       }
     }
@@ -818,7 +818,7 @@ class StrawScanBuilder(path: String, fullSchema: StructType,
           // estimating them again would double-count their selectivity
           val toEstimate = evaluable.filterNot(
             f => StrawScan.partitionApplied(f, metas.map(_.meta.path)))
-          // manifest-carried file stats stand in for real footers (their
+          // log-carried file stats stand in for real footers (their
           // one-page shape estimates coarser, which only biases the
           // consume-vs-residual heuristic, never correctness)
           val mapping = StrawLog.mappingAt(path, asOf)
@@ -1062,7 +1062,7 @@ class StrawScan(
     * scans of an unchanged table pay one directory listing and zero footer
     * reads. Invalidated when a runtime filter narrows the file set. */
   /** One planned-over file. The REAL footer loads lazily — a full scan of
-    * small files whose snapshot carries stats plans from the log/manifest
+    * small files whose snapshot carries stats plans from the log
     * alone (zero footer IO at any file count); page-level needs (filter
     * zone maps, top-n, limits, big-file splitting, CBO ndv sweeps) force
     * the load, pre-warmed in parallel by [[warmFooters]]. */
@@ -1096,7 +1096,7 @@ class StrawScan(
     var c = footersCache
     if (c == null) {
       // three pruning tiers before any real footer IO: hive directory
-      // pruning, then FILE-level stats from the manifest (a synthetic
+      // pruning, then FILE-level stats from the log (a synthetic
       // one-page footer per file runs the ordinary zone-map satisfiability
       // — a file whose stats exclude every filter costs nothing at all).
       // DV'd files keep their full stats: zone maps over dead rows only
@@ -2293,18 +2293,18 @@ object StrawSchemaResolver {
   }
 
   /** The table's CURRENT merged schema, or None when the directory holds no
-    * data yet (first write). Same sources as `inferSchema`: log/manifest
+    * data yet (first write). Same sources as `inferSchema`: log entry
     * schemas when present (zero footer IO), footers otherwise. */
   def tableSchemaOf(dir: String): Option[StructType] = {
     val files =
       try StrawIO.listFilesMeta(dir)
       catch { case scala.util.control.NonFatal(_) => return None }
     if (files.isEmpty) return None
-    val manifestSchemas = StrawManifest.readEntries(dir)
+    val logSchemas = StrawLog.snapshot(dir).map(_.entries)
       .filter(es => es.nonEmpty && es.forall(_.schemaParsed != null))
       .map(_.map(e => (e.meta.path, e.schemaParsed)))
     val mapping = StrawLog.mappingAt(dir)
-    Some(merge(manifestSchemas.getOrElse(
+    Some(merge(logSchemas.getOrElse(
       StrawIO.mapParallel(files)(f =>
         (f.path, FooterCache.get(f.path, f.mtime, f.len).schema)))
       .map { case (p, s) => (p, mapping.toLogical(s)) }))
@@ -2518,7 +2518,7 @@ case class StrawCommitMessage(files: Seq[String]) extends WriterCommitMessage
 
 /** Job-level commit protocol (parquet-commit-protocol style). Tasks write
   * rolled files under a job-scoped STAGED suffix (`<name>.strb.<job>.stage`)
-  * that readers never list (the directory listing is the manifest, and only
+  * that readers never list (the log names the visible files, and only
   * `*.strb` is data). Files become visible ONLY when the driver renames
   * them in BatchWrite/StreamingWrite.commit from the winners' commit
   * messages — so a task killed after rolling (abort() never runs) or a
@@ -2542,7 +2542,7 @@ object StrawCommitProtocol {
     StrawIO.mapParallel(staged) { s =>
       val sp = new Path(s)
       val dst = new Path(sp.getParent, sp.getName.stripSuffix(suffix))
-      // capture the length now — rename preserves it, and the manifest
+      // capture the length now — rename preserves it, and the log
       // entry then needs no post-rename status RPC
       val len = f.getFileStatus(sp).getLen
       // bump mtime BEFORE the rename that makes the file visible: a reader
@@ -2679,7 +2679,7 @@ class StrawBatchWrite(path: String, schema: StructType, truncate: Boolean,
     // truncate/compaction) rolls the renamed outputs back so the job fails
     // as a clean no-op, mirroring StrawCompaction.
     if (freshMeta.nonEmpty || removes.nonEmpty) {
-      val adds = StrawIO.mapParallel(freshMeta)(StrawManifest.entryFor)
+      val adds = StrawIO.mapParallel(freshMeta)(StrawLog.entryFor)
       try StrawLog.commit(path, adds, removes,
         op = if (truncate) "truncate"
         else if (dynamicOverwrite) "overwrite (dynamic)" else "append")

@@ -204,7 +204,7 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
       StrawStreamOffset(Long.MinValue,
         availableNowSnapshot.getOrElse(currentFiles()).map(m => (m.mtime, m.path)))
 
-  /** Visible files in admission order — manifest-aware ([[StrawIO
+  /** Visible files in admission order — log-aware ([[StrawIO
     * .listFilesMeta]]), recursive so hive-partitioned sinks stream too. */
   private def currentFiles(): Seq[StrawIO.FileMeta] =
     StrawIO.listFilesMeta(path).sortBy(m => (m.mtime, m.path))
@@ -310,7 +310,7 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
   }
 
   /** Apply one admission limit to the candidate list (in admission order).
-    * Byte caps use the length carried from the listing/manifest itself —
+    * Byte caps use the length carried from the listing/log itself —
     * zero per-candidate status RPCs even on a deep backlog — and always
     * admit at least one file so a single over-cap file can't wedge the
     * stream. */
@@ -446,9 +446,9 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
     // under-delivery on replay is the correct bias, and rows the stream
     // already shipped are out of reach regardless (no retraction).
     val dvByPath: Map[String, DeletionVector.DvInfo] =
-      StrawManifest.readEntries(path) match {
-        case Some(entries) =>
-          entries.collect { case e if e.dv != null => e.meta.path -> e.dv }.toMap
+      StrawLog.snapshot(path) match {
+        case Some(snap) =>
+          snap.entries.collect { case e if e.dv != null => e.meta.path -> e.dv }.toMap
         case None => Map.empty
       }
     // footers via the bounded parallel pool + version-keyed cache, like the
@@ -558,7 +558,7 @@ class StrawStreamingWrite(path: String, schema: StructType,
     val staged = messages.flatMap { case StrawCommitMessage(fs) => fs }.toSeq
     // Epoch idempotence is a TXN ACTION in the transaction log: the log
     // commit that makes the epoch's files visible and the replay guard are
-    // one atomic write, so there is no marker-vs-manifest crash window left.
+    // one atomic write, so there is no marker-vs-log crash window left.
     // The engine-visible queryId is the txn app id; "none" (non-streaming
     // construction paths) falls back to marker files, whose window is the
     // pre-log behavior. Markers written by pre-log code are still honored.
@@ -573,7 +573,7 @@ class StrawStreamingWrite(path: String, schema: StructType,
       staged.foreach(s => f.delete(new org.apache.hadoop.fs.Path(s), false))
     } else {
       val fresh = StrawCommitProtocol.finalizeFiles(path, jobId, staged)
-      val adds = StrawIO.mapParallel(fresh)(StrawManifest.entryFor)
+      val adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
       StrawLog.commit(path, adds, txn = txn, op = s"streaming epoch $epochId")
       if (txn.isEmpty) f.create(marker, true).close()
       StrawBucket.recordSpec(path, opts, truncate = false)

@@ -67,14 +67,6 @@ object ZoneMapFilter {
           Some((bd.underlying().setScale(d.scale).unscaledValue().longValueExact(), StatsSigned))
         case _ => None
       }
-      case _: DecimalType => // precision 19..38: lossy sortable-double bounds
-        v match {
-          case bd: java.math.BigDecimal =>
-            Some((sortableDouble(bd.doubleValue()), StatsDoubleApprox))
-          case bd: BigDecimal =>
-            Some((sortableDouble(bd.underlying().doubleValue()), StatsDoubleApprox))
-          case _ => None
-        }
       case StringType => v match {
         case s: String => Some((prefixLong(s.getBytes("UTF-8")), StatsPrefix))
         case u: org.apache.spark.unsafe.types.UTF8String =>
@@ -88,8 +80,7 @@ object ZoneMapFilter {
   /** Kinds whose encoded stat collapses several values into one long, so
     * strict range bounds must be widened to inclusive ones.
     * [[StrawFormat.StatsDecimal128]] is exact — strict bounds stand. */
-  private def lossyKind(kind: Int): Boolean =
-    kind == StrawFormat.StatsPrefix || kind == StrawFormat.StatsDoubleApprox
+  private def lossyKind(kind: Int): Boolean = kind == StrawFormat.StatsPrefix
 
   /** Exact i128 planes (hi, lo) of a wide-decimal literal at the column's
     * scale, or None when not exactly representable (a literal whose scale
@@ -136,7 +127,10 @@ object ZoneMapFilter {
   }
 
   private def encodable(schema: StructType, attr: String, v: Any): Boolean =
-    leafOf(schema, attr).exists { case (_, dt) => toStatsLong(dt, v).isDefined }
+    leafOf(schema, attr).exists {
+      case (_, d: DecimalType) if d.precision > 18 => toStats128(d, v).isDefined
+      case (_, dt) => toStatsLong(dt, v).isDefined
+    }
 
   // -------------------------------------------------------------------------
   // Selectivity estimation (drives the consume-vs-residual filter decision;
@@ -264,8 +258,7 @@ object ZoneMapFilter {
 
     // (compare(literal, pageMin), compare(literal, pageMax)) under the
     // PAGE's stats kind, or None when the literal can't be encoded for it —
-    // kind-aware so wide-decimal literals match both the exact
-    // StatsDecimal128 of new files and the lossy StatsDoubleApprox of old
+    // wide-decimal literals compare as exact i128 planes (StatsDecimal128)
     def encComp(dt: DataType, v: Any, pm: PageMeta): Option[(Int, Int)] =
       pm.statsKind match {
         case StrawFormat.StatsDecimal128 => dt match {
@@ -336,7 +329,7 @@ object ZoneMapFilter {
         if (v == null) mayMatch(schema, footer, p, IsNull(a))
         else mayMatch(schema, footer, p, EqualTo(a, v))
       case GreaterThan(a, v) =>
-        // prefix / double-approx stats blur strict bounds: treat > as >=
+        // prefix stats blur strict bounds: treat > as >=
         // there (conservative — multiple values share an encoded stat)
         cmpRange(a, v)((pm, _, toMax) =>
           if (lossyKind(pm.statsKind)) toMax <= 0 else toMax < 0)

@@ -301,13 +301,26 @@ class RoundTripSpec extends AnyFunSuite {
     val rows = (0 until 4000).map(i => new GenericInternalRow(Array[Any](i.toLong)))
     val w = new StrawFileWriter(schema, WriteOptions(maxPageSize = 1000))
     rows.foreach(w.write)
-    val in = new ByteArrayInput(w.finish())
-    val footer = StrawFileReader.readFooter(in)
+    val img = w.finish()
+    val footer = StrawFileReader.readFooter(new ByteArrayInput(img))
     val pages = footer.columns(0).pages
     assert(pages.length == 4)
     pages.zipWithIndex.foreach { case (p, i) =>
       assert(p.statsKind == StrawFormat.StatsSigned)
       assert(p.min == i * 1000L && p.max == i * 1000L + 999L)
+    }
+    // hostile counts fail cleanly instead of sizing an allocation: meta
+    // starts with numRows i64 | numCols i32 | column 0's offset i64 |
+    // column 0's numPages i32
+    val metaStart = img.length - 16 -
+      ByteBuffer.wrap(img).order(ByteOrder.LITTLE_ENDIAN).getInt(img.length - 12)
+    for (at <- Seq(metaStart + 8, metaStart + 20); bad <- Seq(-1, Int.MaxValue)) {
+      val hostile = img.clone()
+      ByteBuffer.wrap(hostile).order(ByteOrder.LITTLE_ENDIAN).putInt(at, bad)
+      val e = intercept[IllegalArgumentException] {
+        StrawFileReader.readFooter(new ByteArrayInput(hostile))
+      }
+      assert(e.getMessage.contains("corrupt strawboat footer"), s"$at=$bad: ${e.getMessage}")
     }
   }
 }

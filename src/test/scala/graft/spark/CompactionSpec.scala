@@ -154,11 +154,11 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.format("strawboat").load(out).count() == 2000)
     assert(StrawIO.listings.get() == walks0,
       "repeat query over a compacted table must not walk the directory")
-    // and the manifest names exactly the surviving files
-    val manifest = StrawManifest.read(out).get.map(_.path).toSet
+    // and the snapshot names exactly the surviving files
+    val snapshot = StrawLog.snapshot(out).get.pathSet
     val onDisk = strbFiles(out).map(f =>
       StrawIO.fs(out).makeQualified(new org.apache.hadoop.fs.Path(f.getPath)).toString).toSet
-    assert(manifest == onDisk)
+    assert(snapshot == onDisk)
   }
 
   test("outputs carry the max input mtime, not commit time") {
@@ -189,7 +189,7 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
       .save(out)
     val before = strbFiles(out).size
     val res = StrawCompaction.compact(spark, out, targetFileBytes = 64L << 20)
-    assert(res.outputFiles < before && res.manifestSwapped)
+    assert(res.outputFiles < before)
     // every compacted file still carries blooms on the key leaf only
     strbFiles(out).foreach { file =>
       val in = new graft.format.LocalFileInput(file.getPath)

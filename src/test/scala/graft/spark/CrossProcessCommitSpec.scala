@@ -58,7 +58,7 @@ class CrossProcessCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     drain(pa, "a")
     drain(pb, "b")
 
-    StrawLog.clearCache(); StrawManifest.clearCache(); FooterCache.clear()
+    StrawLog.clearCache(); FooterCache.clear()
     // dense version sequence, exactly one commit per version, none forked
     val expectVersions = 1L + 2 * perProc
     assert(StrawLog.latestVersion(out).contains(expectVersions))

@@ -164,7 +164,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val res = StrawCompaction.compact(spark, out)
     assert(res.inputFiles > 0, res.toString)
     assert(dvSidecars(out).isEmpty, "compaction must reclaim materialized sidecars")
-    val entries = StrawManifest.readEntries(out).get
+    val entries = StrawLog.snapshot(out).get.entries
     assert(entries.forall(_.dv == null), "post-compaction snapshot must carry no DV")
     assert(read(out).count() == 4999)
     assert(read(out).filter(col("id") === 17L).count() == 0)
@@ -273,7 +273,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0L until 100L).map(i => (i, s"r$i")).toDF("id", "s")
       .coalesce(1).write.format("strawboat").mode("overwrite").save(out)
     StrawDelete.delete(spark, out, Seq(LessThan("id", 5L): Filter)): Unit
-    val entry = StrawManifest.readEntries(out).get.find(_.dv != null).get
+    val entry = StrawLog.snapshot(out).get.entries.find(_.dv != null).get
     // simulate a committer that unioned from the PRE-delete state
     val bmp = new org.roaringbitmap.RoaringBitmap()
     bmp.add(50)

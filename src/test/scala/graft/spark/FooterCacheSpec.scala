@@ -76,7 +76,7 @@ class FooterCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.range(0, 12000).select(col("id"), (col("id") * 2).as("v"))
       .repartition(4).write.format("strawboat").mode("overwrite").save(out)
     assert(StrawIO.listFiles(out).size >= 3)
-    // manifested table: the schema comes from the manifest dictionary —
+    // logged table: the schema comes from the log's schema dictionary —
     // ZERO footer IO
     FooterCache.clear()
     val before = FooterCache.loads.get()
@@ -84,11 +84,9 @@ class FooterCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
       .load(out).schema
     assert(schema.fieldNames.toSet == Set("id", "v"))
     assert(FooterCache.loads.get() == before,
-      s"manifest fast path must read no footer, got ${FooterCache.loads.get() - before}")
-    // no log/manifest: the fast path reads exactly one footer
+      s"log fast path must read no footer, got ${FooterCache.loads.get() - before}")
+    // no log: the fast path reads exactly one footer
     StrawLog.invalidate(out)
-    StrawManifest.invalidate(out)
-    StrawManifest.clearCache()
     FooterCache.clear()
     val before2 = FooterCache.loads.get()
     val schema2 = spark.read.format("strawboat").option("mergeSchema", "false")

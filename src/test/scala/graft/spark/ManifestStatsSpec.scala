@@ -7,7 +7,7 @@ import org.apache.spark.sql.sources.{EqualTo, GreaterThan}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** File-level statistics in the v3 manifest ([[ManifestStats]]): planning
+/** File-level statistics on log add entries ([[ManifestStats]]): planning
   * prunes WHOLE FILES from synthetic one-page footers before any real
   * footer IO — observable through [[FooterCache.loads]]. */
 class ManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -42,7 +42,7 @@ class ManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("commit writes per-file stats; every live entry carries them") {
     val out = s"$dir/stats"
     writeRanged(out)
-    val entries = StrawManifest.readEntries(out).get
+    val entries = StrawLog.snapshot(out).get.entries
     assert(entries.size == 4)
     assert(entries.forall(_.synthetic.isDefined), "fresh commit must carry stats")
     // merged leaf stats reflect the file's actual bounds
@@ -61,16 +61,15 @@ class ManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("selective filter reads only the matching files' footers") {
     val out = s"$dir/prune"
     writeRanged(out)
-    StrawManifest.clearCache()
-    // re-read manifest (cache warm for the query below), then count loads
-    assert(StrawManifest.readEntries(out).isDefined)
+    // resolve the snapshot (cache warm for the query below), then count loads
+    assert(StrawLog.snapshot(out).isDefined)
     FooterCache.clear()
     val loads0 = FooterCache.loads.get()
     val got = spark.read.format("strawboat").load(out)
       .filter(col("id") === 25000L).select("name").collect()
     assert(got.map(_.getString(0)).toSeq == Seq("u-025000"))
     val loads = FooterCache.loads.get() - loads0
-    // schema came from the manifest dictionary, file pruning from manifest
+    // schema came from the log's schema dictionary, file pruning from its
     // stats: only the one matching file's real footer is ever read
     assert(loads <= 2, s"expected <=2 footer loads, saw $loads")
   }
@@ -87,7 +86,7 @@ class ManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(planLoads == 0,
       s"unfiltered planning over a stats-carrying snapshot read $planLoads footers")
     // execution parses footers where the data IO happens — and is exact
-    // (count()/sum() would answer from the manifest; force a data read)
+    // (count()/sum() would answer from the log stats; force a data read)
     assert(df.select("id", "name").collect().length == 40000)
     assert(FooterCache.loads.get() - loads0 > 0)
     // a filter brings planning-side footer reads back (page zone pruning
@@ -112,7 +111,7 @@ class ManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("string prefix stats merge at file level and prune") {
     val out = s"$dir/strings"
     writeRanged(out)
-    val entries = StrawManifest.readEntries(out).get
+    val entries = StrawLog.snapshot(out).get.entries
     val synth = entries.flatMap(_.synthetic)
     // name leaf: prefix kind, all values share "user-" stem but differ later
     assert(synth.forall(_.columns(1).pages(0).statsKind ==
@@ -129,13 +128,13 @@ class ManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("stats survive append untouched (carry-over, no recompute)") {
     val out = s"$dir/carry"
     writeRanged(out)
-    val before = StrawManifest.readEntries(out).get
+    val before = StrawLog.snapshot(out).get.entries
       .map(e => e.meta.path -> e.statsB64).toMap
     spark.range(100000, 100100).toDF("id")
       .withColumn("name", concat(lit("user-"), format_string("%09d", col("id"))))
       .coalesce(1)
       .write.format("strawboat").mode("append").save(out)
-    val after = StrawManifest.readEntries(out).get
+    val after = StrawLog.snapshot(out).get.entries
     assert(after.size == 5)
     assert(after.forall(_.synthetic.isDefined), "appended file must gain stats too")
     // surviving entries kept their original blobs byte-for-byte
@@ -147,14 +146,15 @@ class ManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("stats-less manifest entries never prune (v2 compatibility)") {
     val out = s"$dir/v2compat"
     writeRanged(out)
-    // replace the snapshot with a stats-less LEGACY manifest of the same
-    // files (drop the log: this simulates a pre-log, pre-v3 table)
-    val metas = StrawIO.walkFilesMeta(out)
+    // drop the log: the next commit's walk bootstrap folds the four
+    // existing files in as stats-less entries
     StrawLog.invalidate(out)
-    StrawManifest.write(out, metas)
-    StrawManifest.clearCache()
-    val entries = StrawManifest.readEntries(out).get
-    assert(entries.forall(_.synthetic.isEmpty))
+    spark.range(40000, 40100).toDF("id")
+      .withColumn("name", concat(lit("u-"), format_string("%06d", col("id"))))
+      .coalesce(1).write.format("strawboat").mode("append").save(out)
+    val entries = StrawLog.snapshot(out).get.entries
+    assert(entries.size == 5)
+    assert(entries.count(_.synthetic.isEmpty) == 4)
     // queries fall back to real footers and stay correct
     assert(spark.read.format("strawboat").load(out)
       .filter(col("id") === 39999L).count() == 1)
@@ -163,12 +163,11 @@ class ManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("footer-only aggregates answer from manifest stats with zero footer IO") {
     val out = s"$dir/agg"
     writeRanged(out)
-    StrawManifest.clearCache()
-    assert(StrawManifest.readEntries(out).isDefined) // warm manifest cache
+    assert(StrawLog.snapshot(out).isDefined) // warm snapshot cache
     FooterCache.clear()
     val loads0 = FooterCache.loads.get()
     // SUM included: the `name` column (string, no sums) must not block the
-    // manifest path — only the SUMMED field's leaf needs one
+    // log-stats path — only the SUMMED field's leaf needs one
     val row = spark.read.format("strawboat").load(out)
       .agg(count(lit(1)).as("cnt"), min(col("id")).as("mn"), max(col("id")).as("mx"),
         sum(col("id")).as("s"))
@@ -189,7 +188,7 @@ class ManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toDF("p").select(col("p").cast("decimal(25,4)").as("p"))
         .coalesce(1).write.format("strawboat").mode("append").save(out)
     }
-    val entries = StrawManifest.readEntries(out).get
+    val entries = StrawLog.snapshot(out).get.entries
     assert(entries.size == 2 && entries.forall(_.synthetic.isDefined))
     // an adjacent-unit probe above each file's max is excluded EXACTLY
     val probe = new java.math.BigDecimal(
@@ -211,7 +210,7 @@ class ManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
           col("raw._2").as("n")).as("meta"))
         .coalesce(1).write.format("strawboat").mode("append").save(out)
     }
-    val entries = StrawManifest.readEntries(out).get
+    val entries = StrawLog.snapshot(out).get.entries
     assert(entries.size == 2 && entries.forall(_.synthetic.isDefined))
     // leaf numbering: id, meta.lang, meta.n — struct-path filters prune files
     val keeps = entries.flatMap(_.synthetic).map(s =>

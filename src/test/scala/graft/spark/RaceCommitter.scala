@@ -17,7 +17,7 @@ object RaceCommitter {
       val st = f.getFileStatus(dst)
       val meta = StrawIO.FileMeta(f.makeQualified(dst).toString,
         st.getModificationTime, st.getLen)
-      val v = StrawLog.commit(table, Seq(StrawManifest.entryFor(meta)),
+      val v = StrawLog.commit(table, Seq(StrawLog.entryFor(meta)),
         op = s"append $tag-$i")
       require(v > 0, s"commit $tag-$i returned $v")
     }

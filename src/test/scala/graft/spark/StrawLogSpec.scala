@@ -81,26 +81,22 @@ class StrawLogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("log bootstrap folds a pre-log (legacy manifest) table's state in") {
     val out = s"$dir/boot"
-    // simulate a pre-log table: data files + legacy manifest, no log
+    // simulate a pre-log table: data files, no log
     write(out, 0, 100)
     write(out, 100, 100)
-    val entries = StrawLog.snapshot(out).get.entries
     StrawLog.invalidate(out)
-    StrawManifest.writeEntries(out, entries)
-    StrawManifest.clearCache()
     assert(StrawLog.snapshot(out).isEmpty)
-    assert(read(out).count() == 200) // served by the legacy manifest
-    // next commit bootstraps: version 1 holds old + new
+    val walks0 = StrawIO.listings.get()
+    assert(read(out).count() == 200)
+    assert(StrawIO.listings.get() > walks0) // served by a directory walk
+    // next commit bootstraps: version 1 holds the walked files + the new one
     write(out, 200, 100)
     val snap = StrawLog.snapshot(out).get
     assert(snap.version == 1L)
     assert(snap.entries.size == 3)
     assert(read(out).count() == 300)
-    // bootstrap carried the legacy STATS (no footer re-read needed)
-    assert(snap.entries.forall(_.statsB64 != null))
-    // the legacy manifest file is retired — a stale pre-log snapshot can
-    // never shadow the log on a fallback
-    assert(!new java.io.File(out, StrawManifest.FileName).exists())
+    // walked files fold in stats-less; only the new file carries stats
+    assert(snap.entries.count(_.statsB64 != null) == 1)
   }
 
   test("crash before the log commit leaves renamed files INVISIBLE (and vacuumable)") {
@@ -336,7 +332,7 @@ class StrawLogSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(_.getName.endsWith(".commit")).sortBy(_.getName).last
     val raf = new java.io.RandomAccessFile(last, "rw")
     try { raf.seek(0); raf.write("garbage".getBytes) } finally raf.close()
-    StrawLog.clearCache(); StrawManifest.clearCache(); FooterCache.clear()
+    StrawLog.clearCache(); FooterCache.clear()
     // an EXISTING but unreadable log refuses — a silent directory-walk
     // fallback could expose uncommitted files or resurrect DV-deleted rows
     val e = intercept[IllegalStateException] { StrawLog.snapshot(out) }

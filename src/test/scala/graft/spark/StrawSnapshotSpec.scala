@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Committed-files manifest: planning over an unchanged table performs
-  * ZERO directory walks, snapshots stay complete under concurrent commits,
-  * and every failure mode degrades to a directory walk. */
-class StrawManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
+/** Committed-files snapshot ([[StrawLog.snapshot]]): planning over an
+  * unchanged table performs ZERO directory walks, snapshots stay complete
+  * under concurrent commits, and a table without a log is walked. */
+class StrawSnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var dir: String = _
@@ -17,28 +17,27 @@ class StrawManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
       .master("local[4]")
-      .appName("straw-manifest-test")
+      .appName("straw-snapshot-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    dir = Files.createTempDirectory("strawmanifest").toString
+    dir = Files.createTempDirectory("strawsnapshot").toString
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  test("commit writes a manifest; repeat queries perform zero directory walks") {
+  test("commit writes a log snapshot; repeat queries perform zero directory walks") {
     val out = s"$dir/zerolist"
     spark.range(0, 5000).selectExpr("id", "id % 7 as k")
       .write.format("strawboat").mode("overwrite").save(out)
-    // commits write the transaction log; readEntries serves from it
     assert(StrawLog.exists(out))
 
     // snapshot content == a direct walk of the directory
     val walked = StrawIO.walkFilesMeta(out)
-    val manifest = StrawManifest.read(out).get.sortBy(_.path)
-    assert(manifest.map(_.path) == walked.map(_.path))
-    assert(manifest.map(_.len) == walked.map(_.len))
+    val snap = StrawLog.snapshot(out).get.entries.map(_.meta).sortBy(_.path)
+    assert(snap.map(_.path) == walked.map(_.path))
+    assert(snap.map(_.len) == walked.map(_.len))
 
     // warm the query once (footer cache etc.), then: NO walks on repeats
     val q = () => spark.read.format("strawboat").load(out)
@@ -52,62 +51,40 @@ class StrawManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected zero directory walks, saw ${StrawIO.listings.get() - walks0}")
   }
 
-  test("manifest absent or invalid: reads fall back to walking, results identical") {
+  test("log absent: reads fall back to walking, results identical") {
     val out = s"$dir/fallback"
     spark.range(0, 1000).write.format("strawboat").mode("overwrite").save(out)
-    val withManifest = spark.read.format("strawboat").load(out).count()
+    val withLog = spark.read.format("strawboat").load(out).count()
     StrawLog.invalidate(out)
-    StrawManifest.invalidate(out)
     val walks0 = StrawIO.listings.get()
-    assert(spark.read.format("strawboat").load(out).count() == withManifest)
+    assert(spark.read.format("strawboat").load(out).count() == withLog)
     assert(StrawIO.listings.get() > walks0) // really walked
-    // corrupt manifest → parse guard → walk, never wrong data
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(out, StrawManifest.FileName),
-      "garbage\nnot\ta manifest".getBytes("UTF-8"))
-    StrawManifest.clearCache()
-    assert(spark.read.format("strawboat").load(out).count() == withManifest)
   }
 
-  test("append and truncate keep the manifest in sync") {
+  test("append and truncate keep the snapshot in sync") {
     val out = s"$dir/sync"
     spark.range(0, 100).write.format("strawboat").mode("overwrite").save(out)
     spark.range(100, 300).write.format("strawboat").mode("append").save(out)
     assert(spark.read.format("strawboat").load(out).count() == 300)
-    assert(StrawManifest.read(out).get.map(_.path).toSet ==
+    assert(StrawLog.snapshot(out).get.pathSet ==
       StrawIO.walkFilesMeta(out).map(_.path).toSet)
     spark.range(0, 50).write.format("strawboat").mode("overwrite").save(out)
     assert(spark.read.format("strawboat").load(out).count() == 50)
-    assert(StrawManifest.read(out).get.map(_.path).toSet ==
+    assert(StrawLog.snapshot(out).get.pathSet ==
       StrawIO.walkFilesMeta(out).map(_.path).toSet)
   }
 
-  test("hive-partitioned tables: manifest covers subdirectories, pruning intact") {
+  test("hive-partitioned tables: snapshot covers subdirectories, pruning intact") {
     val out = s"$dir/parts"
     spark.range(0, 1000).selectExpr("id", "cast(id % 4 as string) as part")
       .write.format("strawboat").option("partitionBy", "part")
       .mode("overwrite").save(out)
-    assert(StrawManifest.read(out).get.map(_.path).toSet ==
+    assert(StrawLog.snapshot(out).get.pathSet ==
       StrawIO.walkFilesMeta(out).map(_.path).toSet)
     val walks0 = StrawIO.listings.get()
     assert(spark.read.format("strawboat").load(out)
       .filter(col("part") === "2").count() == 250)
     assert(StrawIO.listings.get() == walks0)
-  }
-
-  test("same-length rewrite within one mtime tick serves the fresh snapshot") {
-    val out = s"$dir/rewrite"
-    new java.io.File(out).mkdirs()
-    val qdir = StrawIO.fs(out).makeQualified(new org.apache.hadoop.fs.Path(out)).toString
-    // equal line lengths: same mtime/len digits, path differs by one char —
-    // the (path, mtime, len) cache key of the rest of the IO stack cannot
-    // tell these apart when both writes land in one mtime granularity unit
-    val a = Seq(StrawIO.FileMeta(s"$qdir/a.strb", 1000L, 10L))
-    val b = Seq(StrawIO.FileMeta(s"$qdir/b.strb", 1000L, 10L))
-    StrawManifest.write(out, a)
-    assert(StrawManifest.read(out).get.map(_.path) == a.map(_.path))
-    StrawManifest.write(out, b)
-    assert(StrawManifest.read(out).get.map(_.path) == b.map(_.path))
   }
 
   test("reader during concurrent appends sees complete snapshots only") {
@@ -119,9 +96,9 @@ class StrawManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val reader = new Thread(() => {
       try {
         while (writing && failure.isEmpty) {
-          // manifest-backed listing: complete old or complete new snapshot,
+          // log-backed listing: complete old or complete new snapshot,
           // never a mid-rename partial (each append commits 4 files)
-          val n = StrawManifest.read(out).map(_.size).getOrElse(-1)
+          val n = StrawLog.snapshot(out).map(_.entries.size).getOrElse(-1)
           if (n >= 0 && n % 4 != 0)
             failure = Some(s"partial snapshot: $n files")
         }
@@ -137,7 +114,7 @@ class StrawManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.format("strawboat").load(out).count() == 6000)
   }
 
-  test("streaming sink epochs refresh the manifest") {
+  test("streaming sink epochs refresh the snapshot") {
     val src = s"$dir/streamsrc"
     val sink = s"$dir/streamsink"
     val ckpt = s"$dir/streamckpt"
@@ -151,7 +128,7 @@ class StrawManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
       .start()
     assert(q.awaitTermination(120000))
     assert(StrawLog.exists(sink)) // every epoch is a log version
-    assert(StrawManifest.read(sink).get.map(_.path).toSet ==
+    assert(StrawLog.snapshot(sink).get.pathSet ==
       StrawIO.walkFilesMeta(sink).map(_.path).toSet)
     assert(spark.read.format("strawboat").load(sink).count() == 600)
   }

@@ -187,12 +187,11 @@ class StrawboatSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
          f <- new java.io.File(s"$out/$sd").listFiles if f.getName.endsWith(".strb"))
       java.nio.file.Files.write(f.toPath, Array[Byte](9, 9, 9))
     assert(got.count() == expect.count())
-    // and the corruption is real: after dropping the transaction log AND
-    // the manifest (in-place modification is outside the commit protocol —
-    // the documented external-writer escape hatch), a fresh load lists the
+    // and the corruption is real: after dropping the transaction log
+    // (in-place modification is outside the commit protocol — the
+    // documented external-writer escape hatch), a fresh load lists the
     // directory, sees the new (mtime, len) keys, re-reads footers, fails
     StrawLog.invalidate(out)
-    StrawManifest.invalidate(out)
     intercept[Exception] {
       spark.read.format("strawboat").load(out).count()
     }
@@ -758,8 +757,6 @@ class StrawboatSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // snapshot whose one-page synthetic file stats would otherwise answer
     // and shadow the per-page sum accumulation under test
     StrawLog.invalidate(out)
-    StrawManifest.invalidate(out)
-    StrawManifest.clearCache()
     StrawLog.clearCache()
     val back = spark.read.format("strawboat").load(out)
     val q = back.agg(sum(col("id")).as("s1"), sum(col("neg")).as("s2"),
