@@ -147,8 +147,8 @@ object Bench {
     }
 
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    // warm the spin loop's JIT once (short pass), then sample
-    locally { var h = 1L; var i = 0; while (i < 1000000) { h = h * 3L; i += 1 }; if (h == 0) print("") }
+    // one discarded pass JIT-compiles the very loop that is sampled
+    calibSpin()
     val calib = scala.collection.mutable.ArrayBuffer[Double](r3(calibSpin()))
 
     // conversion (write path) timed as its own entry; invalidate the cache

@@ -1822,7 +1822,7 @@ object SparkEntry {
       df
     }),
     "q_update" -> ((s, d) => {
-      // copy-on-write row-level UPDATE (StrawUpdate): the redaction
+      // merge-on-read row-level UPDATE (StrawUpdate): the redaction
       // primitive — overwrite the lang of short docs with a sentinel. The
       // oracle applies the same CASE over parquet: a green row proves
       // assignment + 3VL semantics exactly. Non-matching files are pruned

@@ -247,6 +247,8 @@ object MetaIO {
       new String(tail, schemaOff, schemaLen, "UTF-8")).asInstanceOf[StructType]
     val in = ByteIO.reader(tail, schemaOff + schemaLen, metaLen)
     val numRows = in.getLong()
+    // COUNT(*) pushdown sums this: a negative count is a silently wrong answer
+    require(numRows >= 0, s"corrupt strawboat footer: numRows=$numRows")
     val numCols = in.getInt()
     // bound on-disk counts by the bytes left for their minimum records
     // (column: offset + numPages = 12; page: numValues + compressedLen +
@@ -304,6 +306,7 @@ object MetaIO {
       val len = in.getInt()
       require(len >= 0 && len <= in.remaining(),
         s"corrupt strawboat footer extension: id=$id len=$len")
+      val end = in.position() + len
       if (id == ExtNdv) {
         ndv = new Array[Array[Byte]](numCols)
         var c2 = 0
@@ -321,7 +324,11 @@ object MetaIO {
           if ((in.get() & 0xff) == 1) lens(c2) = new LenStat(in.getLong(), in.getInt())
           c2 += 1
         }
-      } else in.position(in.position() + len)
+      } else in.position(end)
+      // a known section must fill its declared length exactly: any other
+      // end means the payload and its header disagree
+      require(in.position() == end,
+        s"corrupt strawboat footer extension: id=$id len=$len does not match its payload")
     }
     StrawFooter(schema, numRows, cols, ndv, lens)
   }

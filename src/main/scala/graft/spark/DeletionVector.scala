@@ -37,9 +37,9 @@ import org.roaringbitmap.RoaringBitmap
   *
   * File layout (little-endian): 8-byte magic `GRAFTDV1`, i64 cardinality,
   * i32 serialized-bitmap length, the RoaringBitmap's portable serialization.
-  * Ordinals are 32-bit: a single data file holding more than Int.MaxValue
-  * rows falls back to copy-on-write (the writer's file rolling makes such
-  * files unreachable in practice).
+  * Ordinals are 32-bit: the row-level ops reject a table with a data file
+  * holding more than Int.MaxValue rows (the writer's file rolling makes
+  * such files unreachable in practice).
   */
 object DeletionVector {
   val Extension = ".dv"

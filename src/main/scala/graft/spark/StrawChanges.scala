@@ -47,7 +47,7 @@ import org.roaringbitmap.RoaringBitmap
   * keep everything the feed needs within the age-based vacuum window
   * (data files stay live; superseded sidecars are retained for the sweep)
   * — but an op that drops bytes EAGERLY (truncate, compaction's inputs,
-  * a copy-on-write rewrite, a fully-dead delete) makes that version's
+  * a fully-dead delete, update or merge) makes that version's
   * preimages unreadable immediately, and the feed fails LOUDLY rather
   * than under-reporting. */
 object StrawChanges {

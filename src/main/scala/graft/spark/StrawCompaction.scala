@@ -67,11 +67,15 @@ import graft.format.WriteOptions
   * is the same limitation Spark's own FileStreamSource has for files
   * rewritten in place.
   */
-/** Mechanics shared by the table-maintenance rewriters ([[StrawCompaction]],
-  * [[StrawDelete]]): bloom re-derivation, the stamped rename-visible fan-out
-  * with rollback, and the atomic log switch + vacuum epilogue. One
-  * implementation, so a fix to the rollback or mtime-stamping contract
-  * cannot diverge between the two paths. */
+/** Mechanics shared by compaction ([[StrawCompaction]]) and the row-level
+  * ops ([[StrawDelete]], [[StrawUpdate]], [[StrawMerge]], [[StrawMergeScan]],
+  * [[StrawScanDml]]): bloom re-derivation, the stamped rename-visible
+  * fan-out with rollback, and the atomic log switch + vacuum epilogue. The
+  * row-level ops all mutate through deletion vectors and share one
+  * [[snapshot]], one candidate ladder, one staging step ([[stageFrame]])
+  * and one commit epilogue ([[commitDv]]). One implementation, so a fix to
+  * the rollback, marker or mtime-stamping contract cannot diverge between
+  * the ops. */
 private[spark] object MaintenanceOps {
 
   /** Row-aligned leaf paths of `footer`'s schema that carry page blooms —
@@ -94,17 +98,44 @@ private[spark] object MaintenanceOps {
   final case class Candidate(meta: StrawIO.FileMeta,
       dv: DeletionVector.DvInfo, numRows: Long) extends Serializable
 
+  /** One row-level op's view of the table, taken ONCE: the listing, the
+    * rename/drop column mapping, the merged LOGICAL schema that conditions,
+    * assignments and keys speak (per-file translation happens at each
+    * access), and `opts` carrying the table's bucket spec so rewritten rows
+    * keep the layout. */
+  final case class Snapshot(listed: Seq[StrawIO.Listed],
+      mapping: ColumnMappingState, schema: StructType, opts: WriteOptions)
+
+  /** The [[Snapshot]] of `dir` for row-level op `op`. ONE listing drives the
+    * schema and the candidate set: deriving the schema from a separate
+    * resolution could evaluate a concurrently-appended file in a stale
+    * schema. Deletion-vector ordinals are 32-bit, so a table holding a file
+    * of more than 2^31 rows fails here, before anything is written. */
+  def snapshot(dir: String, op: String, opts: WriteOptions): Snapshot = {
+    val listed = StrawIO.listFilesMetaWithStats(dir)
+    require(listed.nonEmpty, s"strawboat: no data files under $dir")
+    val mapping = StrawLog.mappingAt(dir)
+    val footers = StrawIO.mapParallel(listed) { lf =>
+      val m = lf.meta
+      (m.path, lf.synth.getOrElse(FooterCache.get(m.path, m.mtime, m.len)))
+    }
+    require(footers.forall(_._2.numRows <= Int.MaxValue.toLong),
+      s"strawboat: $op needs 32-bit row ordinals per file")
+    val schema = StrawSchemaResolver.merge(footers.map { case (p, footer) =>
+      (p, mapping.toLogical(footer.schema)) })
+    Snapshot(listed, mapping, schema, StrawBucket.withTableSpec(dir, opts))
+  }
+
   /** The row-matching ops' candidate ladder: hive partition directories,
     * then file-level stats from the snapshot, then the real footer's page
     * zone maps — a file excluded by any tier provably holds no matching
     * row and costs no data IO. (Zone maps of a DV'd file cover dead rows
     * too: only over-approximation, a kept file's scan re-checks row-level.)
     * @return (candidate files, pruned-file count) */
-  def matchCandidates(listed: Seq[StrawIO.Listed],
-      schema: org.apache.spark.sql.types.StructType,
-      filters: Array[org.apache.spark.sql.sources.Filter],
-      mapping: ColumnMappingState = ColumnMappingState.Empty)
+  def matchCandidates(snap: Snapshot,
+      filters: Array[org.apache.spark.sql.sources.Filter])
       : (Seq[Candidate], Int) = {
+    val Snapshot(listed, mapping, schema, _) = snap
     val afterPartition = PartitionLayout.pruneBy(listed, schema, filters)(_.meta.path)
     val afterStats = afterPartition.filter { lf =>
       lf.synth.forall(sf =>
@@ -141,93 +172,6 @@ private[spark] object MaintenanceOps {
       case (i, Right(e)) => (i, e.eval(row))
     }
     vals.foreach { case (i, v) => row.update(i, v) }
-  }
-
-  /** One candidate file's rewrite outcome ([[rewriteMatching]]). */
-  final case class RewriteOut(input: String, inputMtime: Long, matched: Long,
-      staged: Seq[String]) extends Serializable
-
-  /** The row-matching ops' distributed rewrite: one task per candidate file
-    * streams TABLE-schema rows (the reader null-fills and widens per file),
-    * counts `filters`-conjunction TRUE rows (SQL 3VL — [[RowFilterEval]]),
-    * and stages the file's replacement: matching rows are DROPPED when
-    * `assigns` is None (DELETE) or rewritten with the (ordinal, catalyst
-    * value) assignments applied (UPDATE); non-matching rows pass through
-    * unchanged. Input page blooms are re-derived; zero surviving rows stage
-    * no file. On any task failure the job's staged debris is swept and the
-    * error rethrown — nothing visible changed. */
-  def rewriteMatching(spark: org.apache.spark.sql.SparkSession, dir: String,
-      jobId: String, schema: org.apache.spark.sql.types.StructType,
-      candidates: Seq[Candidate],
-      filters: Array[org.apache.spark.sql.sources.Filter],
-      assigns: Option[Seq[Assign]],
-      opts: WriteOptions,
-      checkUpdated: StrawConstraints.RowChecker = null,
-      mapping: ColumnMappingState = ColumnMappingState.Empty): Array[RewriteOut] = {
-    val serConf = new org.apache.spark.util.SerializableConfiguration(StrawIO.conf)
-    val schemaJson = schema.json
-    val filtersB = spark.sparkContext.broadcast(filters)
-    val assignsB = spark.sparkContext.broadcast(assigns)
-    try {
-      spark.sparkContext.parallelize(candidates, candidates.size).map { cand =>
-        val m = cand.meta
-        StrawIO.install(serConf.value)
-        val tableSchema = org.apache.spark.sql.types.DataType
-          .fromJson(schemaJson).asInstanceOf[org.apache.spark.sql.types.StructType]
-        val pred = RowFilterEval.build(tableSchema, filtersB.value).getOrElse(
-          throw new IllegalStateException(
-            "strawboat: rewrite condition no longer compiles on the executor"))
-        val as = assignsB.value
-        // input bloom leaves carry PHYSICAL spellings; the rewrite emits
-        // the table's logical spellings (materializing renames), so the
-        // carried-over bloom columns translate with it (dead leaves drop)
-        val bloomLeaves =
-          bloomLeavesOf(FooterCache.get(m.path, m.mtime, m.len))
-            .flatMap(mapping.logicalLeafPath).map(mapping.writeLeafPath)
-        val parent = new Path(m.path).getParent.toString
-        val writer = new StrawDataWriter(parent, mapping.toPhysical(tableSchema),
-          partitionId = 0, taskId = 0,
-          opts.copy(bloomColumns = opts.bloomColumns ++ bloomLeaves), jobId)
-        val factory = new StrawPartitionReaderFactory(tableSchema, tableSchema,
-          serConf, mapping = mapping)
-        var matched = 0L
-        var ok = false
-        try {
-          // an existing DV rides along in the partition: rows it already
-          // killed never reach the rewrite, so the output materializes it
-          val reader = factory.createReader(
-            StrawInputPartition(m.path, 0, Int.MaxValue, Long.MaxValue,
-              if (cand.dv == null) null else cand.dv.path,
-              if (cand.dv == null) 0L else cand.dv.len))
-          try {
-            while (reader.next()) {
-              val row = reader.get()
-              if (pred(row)) {
-                matched += 1
-                as.foreach { a =>
-                  // copy() yields a mutable GenericInternalRow regardless
-                  // of the reader's buffer representation
-                  val r = row.copy()
-                  MaintenanceOps.applyAssigns(a, r)
-                  // CHECK constraints guard only the UPDATED rows — the
-                  // pass-through rows below were validated when written
-                  if (checkUpdated != null) checkUpdated.validate(r)
-                  writer.write(r)
-                }
-              } else writer.write(row)
-            }
-          } finally reader.close()
-          val msg = writer.commit().asInstanceOf[StrawCommitMessage]
-          ok = true
-          RewriteOut(m.path, m.mtime, matched, msg.files)
-        } finally if (!ok) writer.abort()
-      }.collect()
-    } catch {
-      case e: Throwable =>
-        try StrawCommitProtocol.sweepStaged(dir, jobId)
-        catch { case scala.util.control.NonFatal(s) => e.addSuppressed(s) }
-        throw e
-    }
   }
 
   /** Ordinal-aware projection over ONE open file for the maintenance scans
@@ -360,11 +304,12 @@ private[spark] object MaintenanceOps {
     System.arraycopy(sorted, 0, rows, 0, n)
   }
 
-  /** One candidate file's merge-on-read outcome ([[dvMatch]]): newly-dead
-    * live rows matched, the replacement sidecar (null when the file went
-    * fully dead or nothing matched), whether the union covers every row,
-    * and — for UPDATE — the staged files holding the rewritten matches. */
-  final case class DvOut(input: String, inputMtime: Long, matched: Long,
+  /** One candidate file's merge-on-read outcome ([[dvMatch]],
+    * [[dvFromPairs]], the MERGE key probe): live rows matched, the
+    * replacement sidecar (null when the file went fully dead or nothing
+    * died), whether the union covers every row, and — for UPDATE — the
+    * staged files holding the rewritten matches. */
+  final case class DvOut(input: String, matched: Long,
       oldDvPath: String, newDv: DeletionVector.DvInfo, fullDead: Boolean,
       staged: Seq[String]) extends Serializable
 
@@ -387,13 +332,13 @@ private[spark] object MaintenanceOps {
     * visible changes here: sidecars are unreferenced, staged files carry
     * the job suffix. On failure the caller sweeps both. */
   def dvMatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-      jobId: String, schema: org.apache.spark.sql.types.StructType,
+      jobId: String, snap: Snapshot,
       candidates: Seq[Candidate],
       filters: Array[org.apache.spark.sql.sources.Filter],
       assigns: Option[Seq[Assign]],
-      opts: WriteOptions,
-      checkUpdated: StrawConstraints.RowChecker = null,
-      mapping: ColumnMappingState = ColumnMappingState.Empty): Array[DvOut] = {
+      checkUpdated: StrawConstraints.RowChecker = null): Array[DvOut] = {
+    // locals only: the task closure must not capture the whole listing
+    val Snapshot(_, mapping, schema, opts) = snap
     val serConf = new org.apache.spark.util.SerializableConfiguration(StrawIO.conf)
     val schemaJson = schema.json
     val filtersB = spark.sparkContext.broadcast(filters)
@@ -509,7 +454,7 @@ private[spark] object MaintenanceOps {
             if (matchedCount == 0) {
               if (writer != null) writer.abort()
               ok = true
-              DvOut(m.path, m.mtime, 0L,
+              DvOut(m.path, 0L,
                 if (cand.dv == null) null else cand.dv.path, null, fullDead = false,
                 Seq.empty)
             } else {
@@ -524,7 +469,7 @@ private[spark] object MaintenanceOps {
                 else writer.commit().asInstanceOf[StrawCommitMessage].files
               writer = null
               ok = true
-              DvOut(m.path, m.mtime, matchedCount,
+              DvOut(m.path, matchedCount,
                 if (cand.dv == null) null else cand.dv.path, newDv, fullDead, staged)
             }
           } finally if (!ok && writer != null) writer.abort()
@@ -542,10 +487,13 @@ private[spark] object MaintenanceOps {
   }
 
   /** Mark the job in-flight, run `body`, and clear the marker on ANY
-    * failure before rethrowing — success paths retire the marker via
-    * [[commitSwitchAndVacuum]]'s finally (or explicitly on an empty-result
-    * return). Without this, a task failure mid-operation leaks the marker
-    * for the full [[StrawLog.InflightTtlMs]] window, blocking vacuum. */
+    * failure before rethrowing — success paths retire the marker in
+    * [[commitDv]]. Every row-level op runs inside this from before its
+    * first sidecar write: fresh sidecars and staged files are unreferenced
+    * until the commit, which is exactly what [[StrawLog.vacuumUnreferenced]]
+    * reclaims, and the marker is what makes a concurrent vacuum stand off.
+    * Without the failure clear, a task failure mid-operation leaks the
+    * marker for the full [[StrawLog.InflightTtlMs]] window, blocking vacuum. */
   def withInflight[T](dir: String, jobId: String)(body: => T): T = {
     StrawLog.markInflight(dir, jobId)
     try body
@@ -642,6 +590,107 @@ private[spark] object MaintenanceOps {
     } finally StrawLog.clearInflight(dir, jobId)
   }
 
+  /** Stage `rows` (TABLE-schema rows, bound by position) as new data files,
+    * one [[StrawDataWriter]] per Spark partition: hive-partitioned tables
+    * route rows into their value directories, bucketed ones keep their
+    * layout, and CHECK constraints validate every row (these are NEW row
+    * versions — inserts and updates alike). Files carry PHYSICAL spellings
+    * and the job's stage suffix, invisible until [[commitDv]].
+    * @return the staged file names */
+  def stageFrame(spark: SparkSession, dir: String, jobId: String,
+      rows: org.apache.spark.sql.DataFrame, snap: Snapshot): Seq[String] = {
+    val checker = StrawConstraints.checkerFor(spark, dir, snap.schema).orNull
+    val serConf = new org.apache.spark.util.SerializableConfiguration(StrawIO.conf)
+    val partitionCols = PartitionLayout.layoutColsOf(snap.listed)
+    val schemaJson = snap.mapping.toPhysical(snap.schema).json
+    val opts = snap.opts
+    rows.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+      StrawIO.install(serConf.value)
+      val s = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+      val writer = new StrawDataWriter(dir, s, pid, pid.toLong, opts, jobId,
+        partitionCols, checker)
+      var ok = false
+      try {
+        it.foreach(writer.write)
+        val msg = writer.commit().asInstanceOf[StrawCommitMessage]
+        ok = true
+        Iterator(msg.files)
+      } finally if (!ok) writer.abort()
+    }.collect().flatten.toSeq
+  }
+
+  /** What one [[commitDv]] switched: the data files it made visible, the
+    * files it removed outright, and the files that took a new sidecar. */
+  final case class DvCommit(fresh: Seq[StrawIO.FileMeta], removedFiles: Int,
+      dvFiles: Int)
+
+  /** The row-level ops' epilogue, run inside [[withInflight]]: `outs` are
+    * every candidate's match outcome, `staged` the new row versions.
+    *  - Nothing changed (no sidecar, no full-dead file, nothing staged):
+    *    sweep the stage, retire the marker, commit NO version.
+    *  - Otherwise rename the staged files visible under commit-time mtime
+    *    (they are NEW data: a tailing stream legitimately sees them), remove
+    *    fully-dead files outright, switch partial files to their new
+    *    sidecar, and — when every file goes and nothing is added — add one
+    *    schema-only marker so the table stays self-describing and reads
+    *    back empty. All of it is ONE atomic log version recorded as `op`. */
+  def commitDv(dir: String, jobId: String, op: String, outs: Seq[DvOut],
+      staged: Seq[String], snap: Snapshot): DvCommit = {
+    val changed = outs.filter(o => o.newDv != null || o.fullDead)
+    if (changed.isEmpty && staged.isEmpty) {
+      StrawCommitProtocol.sweepStaged(dir, jobId)
+      StrawLog.clearInflight(dir, jobId)
+      return DvCommit(Seq.empty, 0, 0)
+    }
+    val f = StrawIO.fs(dir)
+    def q(p: String): String = f.makeQualified(new Path(p)).toString
+    val fresh =
+      if (staged.isEmpty) Seq.empty
+      else renameVisibleStamped(dir, jobId, Seq((System.currentTimeMillis(), staged)))
+    val (full, partial) = changed.partition(_.fullDead)
+    val removes = full.map(c => q(c.input)).toSet
+    val dvUpdates = partial.map(c => StrawLog.DvUpdate(q(c.input), c.newDv,
+      Option(c.oldDvPath)))
+    val adds =
+      if (fresh.isEmpty && dvUpdates.isEmpty && removes.size == snap.listed.size)
+        Seq(StrawLog.entryFor(writeEmptyMarker(dir,
+          snap.mapping.toPhysical(snap.schema), snap.opts)))
+      else StrawIO.mapParallel(fresh)(StrawLog.entryFor)
+    commitSwitchAndVacuum(dir, jobId, adds, removes, op, dvs = dvUpdates,
+      // only sidecars of fully-removed files go eagerly (their data bytes
+      // are gone anyway); a PARTIAL file's superseded sidecar stays for the
+      // age-based vacuum — it is what RESTORE to the pre-op DV state and
+      // the change feed's before-diff need within the retention window
+      alsoVacuum = full.flatMap(c => Option(c.oldDvPath)),
+      alsoRollback = partial.map(_.newDv.path),
+      // a full-dead removal is only sound against the DV this op read
+      expectDvOnRemove = full.map(c => q(c.input) -> Option(c.oldDvPath)).toMap)
+    DvCommit(fresh, removes.size, dvUpdates.size)
+  }
+
+  /** Write a visible schema-only `.strb` marker so an emptied table stays
+    * self-describing (as BatchWrite does for an empty overwrite). */
+  private def writeEmptyMarker(dir: String, schema: StructType,
+      opts: WriteOptions): StrawIO.FileMeta = {
+    val f = StrawIO.fs(dir)
+    val name = s"part-empty-${java.util.UUID.randomUUID().toString.take(8)}" +
+      graft.format.StrawFormat.Extension
+    val tmp = new Path(dir, s".$name.tmp")
+    val os = f.create(tmp, true)
+    var ok = false
+    try { new graft.format.StrawFileWriter(schema, opts).writeTo(os); ok = true }
+    finally {
+      os.close()
+      if (ok) {
+        if (!f.rename(tmp, new Path(dir, name)))
+          throw new java.io.IOException(s"strawboat: rename $tmp -> $name failed")
+      } else f.delete(tmp, false)
+    }
+    val st = f.getFileStatus(new Path(dir, name))
+    StrawIO.FileMeta(f.makeQualified(st.getPath).toString,
+      st.getModificationTime, st.getLen)
+  }
+
   /** The DV half of a row-level op whose MATCHING already happened
     * elsewhere (a shuffle-join merge, a scan-based DML fallback): matched
     * `(candidate index, file-absolute ordinal)` pairs aggregate into
@@ -673,7 +722,7 @@ private[spark] object MaintenanceOps {
           if (fullDead) null
           else DeletionVector.write(StrawIO.fs(cand.meta.path),
             new org.apache.hadoop.fs.Path(cand.meta.path), matched)
-        DvOut(cand.meta.path, cand.meta.mtime, matchedCount,
+        DvOut(cand.meta.path, matchedCount,
           if (cand.dv == null) null else cand.dv.path, newDv, fullDead,
           Seq.empty)
       }.collect()

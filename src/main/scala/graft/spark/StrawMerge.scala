@@ -47,8 +47,8 @@ import graft.format.WriteOptions
   *    yields the matched pairs; matched ordinals aggregate into per-file
   *    RoaringBitmaps ON EXECUTORS, which write the DVs; insert gating is a
   *    semi/anti join of the source against the matched keys. The driver
-  *    sees only per-file [[MatchOut]] metadata (bounded by the file
-  *    count) — a source of any size survives.
+  *    sees only per-file [[MaintenanceOps.DvOut]] metadata (bounded by the
+  *    file count) — a source of any size survives.
   *
   * Both paths stage inserts distributed and share the single atomic
   * commit. Candidate pruning runs before either: hive partition dirs,
@@ -92,12 +92,6 @@ object StrawMerge {
         * action). insertedRows + replacedRows = rows this merge wrote. */
       replacedRows: Long = 0L)
 
-  /** One candidate file's match outcome, driver-bound (O(files), never
-    * O(keys)): matched live-row count, the DV switch, full-death. */
-  private final case class MatchOut(input: String, matched: Long,
-      oldDvPath: String, newDv: DeletionVector.DvInfo, fullDead: Boolean)
-    extends Serializable
-
   /** Key types we can hash/compare value-exactly on the driver and prune
     * by zone maps — the flat orderable set minus floats (NaN equality) and
     * binary (reference equality). */
@@ -125,19 +119,8 @@ object StrawMerge {
     require(keys.nonEmpty, "strawboat: merge needs at least one key column")
     require(whenMatched != Keep || insertNotMatched || deleteNotMatchedBySource,
       "strawboat: merge with whenMatched=Keep and insertNotMatched=false is a no-op")
-    // a bucketed table's inserts keep its layout (sidecar-recorded spec)
-    val opts0 = StrawBucket.withTableSpec(dir, opts)
-    val listed = StrawIO.listFilesMetaWithStats(dir)
-    require(listed.nonEmpty, s"strawboat: no data files under $dir")
-    // rename/drop history: keys and the merged schema speak the logical
-    // namespace; per-file footer translation happens at each access below
-    val mapping = StrawLog.mappingAt(dir)
-    val schema = StrawSchemaResolver.merge(StrawIO.mapParallel(listed) {
-      case StrawIO.Listed(m, Some(synth), _) =>
-        (m.path, mapping.toLogical(synth.schema))
-      case StrawIO.Listed(m, None, _) =>
-        (m.path, mapping.toLogical(FooterCache.get(m.path, m.mtime, m.len).schema))
-    })
+    val snap = MaintenanceOps.snapshot(dir, "merge", opts)
+    val schema = snap.schema
     val keyIdx = keys.map { k =>
       val i = schema.fields.indexWhere(_.name == k)
       require(i >= 0, s"strawboat: merge key '$k' not in ${schema.fieldNames.mkString(",")}")
@@ -203,21 +186,23 @@ object StrawMerge {
     val icCol: Option[org.apache.spark.sql.Column] =
       insertCondition.map(c => org.apache.spark.sql.functions.expr(c))
     icCol.foreach(c => srcMat.filter(c).queryExecution.assertAnalyzed())
-    if (srcRows * perRowKeyBytes <= gateBytes)
-      mergeBroadcast(spark, dir, srcMat, keys, keyIdx, whenMatched,
-        insertNotMatched, opts0, listed, schema, deleteNotMatchedBySource, icCol)
-    else
-      mergeDistributed(spark, dir, srcMat, keys, keyIdx, whenMatched,
-        insertNotMatched, opts0, listed, schema, deleteNotMatchedBySource, icCol)
+    val jobId = java.util.UUID.randomUUID().toString.take(8)
+    MaintenanceOps.withInflight(dir, jobId) {
+      if (srcRows * perRowKeyBytes <= gateBytes)
+        mergeBroadcast(spark, dir, jobId, srcMat, keys, keyIdx, whenMatched,
+          insertNotMatched, snap, deleteNotMatchedBySource, icCol)
+      else
+        mergeDistributed(spark, dir, jobId, srcMat, keys, keyIdx, whenMatched,
+          insertNotMatched, snap, deleteNotMatchedBySource, icCol)
+    }
   }
 
-  private def mergeBroadcast(spark: SparkSession, dir: String,
+  private def mergeBroadcast(spark: SparkSession, dir: String, jobId: String,
       srcAligned: DataFrame, keys: Seq[String], keyIdx: Seq[Int],
       whenMatched: MatchedAction, insertNotMatched: Boolean,
-      opts: WriteOptions, listed: Seq[StrawIO.Listed],
-      schema: StructType, deleteUnmatched: Boolean,
+      snap: MaintenanceOps.Snapshot, deleteUnmatched: Boolean,
       insertCond: Option[org.apache.spark.sql.Column]): MergeResult = {
-    val mapping = StrawLog.mappingAt(dir)
+    val schema = snap.schema
     // the source KEY SET comes to the driver: dedup check + pruning bounds
     // + broadcast probe set (catalyst-valued tuples; the types above are
     // all value-hashable)
@@ -261,12 +246,7 @@ object StrawMerge {
     // Keep still MATCHES (to know which source keys must not insert) but
     // never mutates the matched target rows
     val mutate = whenMatched != Keep
-    val (candidates, pruned) =
-      MaintenanceOps.matchCandidates(listed, schema, pruneFilters, mapping)
-    require(candidates.forall(_.numRows <= Int.MaxValue.toLong),
-      "strawboat: merge needs 32-bit row ordinals per file")
-
-    val jobId = java.util.UUID.randomUUID().toString.take(8)
+    val (candidates, pruned) = MaintenanceOps.matchCandidates(snap, pruneFilters)
 
     // ---- match phase: one task per candidate file probes the key set ----
     val serConf = new org.apache.spark.util.SerializableConfiguration(StrawIO.conf)
@@ -274,9 +254,8 @@ object StrawMerge {
     val probeB = spark.sparkContext.broadcast(probeKeys)
     val mutateB = spark.sparkContext.broadcast(mutate)
     val delUnB = spark.sparkContext.broadcast(deleteUnmatched)
-    val mappingB = spark.sparkContext.broadcast(mapping)
-    final case class Probe(input: String, matched: Long, oldDvPath: String,
-        newDv: DeletionVector.DvInfo, fullDead: Boolean,
+    val mappingB = spark.sparkContext.broadcast(snap.mapping)
+    final case class Probe(out: MaintenanceOps.DvOut,
         matchedKeys: Seq[Vector[Any]], unmatchedDeleted: Long)
     val outs: Array[Probe] =
       if (candidates.isEmpty) Array.empty
@@ -337,19 +316,18 @@ object StrawMerge {
           val dying = new org.roaringbitmap.RoaringBitmap()
           if (mutateB.value) dying.or(matched)
           if (delUnB.value) dying.or(unmatched)
+          val oldDvPath = if (cand.dv == null) null else cand.dv.path
           if (dying.isEmpty)
-            Probe(m.path, matchedCount,
-              if (cand.dv == null) null else cand.dv.path, null, fullDead = false,
-              matchedKeys.toSeq, 0L)
+            Probe(MaintenanceOps.DvOut(m.path, matchedCount, oldDvPath,
+              null, fullDead = false, Seq.empty), matchedKeys.toSeq, 0L)
           else {
             if (existing != null) dying.or(existing)
             val fullDead = dying.getLongCardinality >= footer.numRows
             val newDv =
               if (fullDead) null
               else DeletionVector.write(StrawIO.fs(m.path), new Path(m.path), dying)
-            Probe(m.path, matchedCount,
-              if (cand.dv == null) null else cand.dv.path, newDv, fullDead,
-              matchedKeys.toSeq, unmatchedCount)
+            Probe(MaintenanceOps.DvOut(m.path, matchedCount, oldDvPath,
+              newDv, fullDead, Seq.empty), matchedKeys.toSeq, unmatchedCount)
           }
         } finally input.close()
       }.collect()
@@ -396,27 +374,23 @@ object StrawMerge {
           matchedPart.unionAll(unmatchedPart)
       }
     }
-    val mutated: Array[MatchOut] = outs
-      .filter(o => o.newDv != null || o.fullDead)
-      .map(o => MatchOut(o.input, o.matched, o.oldDvPath, o.newDv, o.fullDead))
     // source keys are verified-unique, so distinct matched target keys
     // count exactly the source rows the Replace action writes back
-    commitMerge(spark, dir, jobId, toWrite, schema, mapping, opts, listed,
-      serConf, mutated, matchedRows = outs.map(_.matched).sum, pruned,
+    commitMerge(spark, dir, jobId, toWrite, snap, outs.map(_.out),
+      matchedRows = outs.map(_.out.matched).sum, pruned,
       unmatchedDeleted = outs.map(_.unmatchedDeleted).sum,
       replacedSrcRows = if (keepMatchedSrc) allMatchedKeys.size.toLong else 0L)
   }
 
   /** The shuffle-join match path: nothing proportional to the source's
     * key set touches the driver. See the object scaladoc for the shape. */
-  private def mergeDistributed(spark: SparkSession, dir: String,
+  private def mergeDistributed(spark: SparkSession, dir: String, jobId: String,
       srcAligned: DataFrame, keys: Seq[String], keyIdx: Seq[Int],
       whenMatched: MatchedAction, insertNotMatched: Boolean,
-      opts: WriteOptions, listed: Seq[StrawIO.Listed],
-      schema: StructType, deleteUnmatched: Boolean,
+      snap: MaintenanceOps.Snapshot, deleteUnmatched: Boolean,
       insertCond: Option[org.apache.spark.sql.Column]): MergeResult = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    val mapping = StrawLog.mappingAt(dir)
+    val schema = snap.schema
     val keySchema = StructType(keyIdx.map(schema.fields(_)))
     val keyCols = keys.map(col)
     // null keys never equal anything (SQL equality): they match no target
@@ -453,15 +427,11 @@ object StrawMerge {
         }.toArray
       }
     val mutate = whenMatched != Keep
-    val (candidates, pruned) =
-      MaintenanceOps.matchCandidates(listed, schema, pruneFilters, mapping)
-    require(candidates.forall(_.numRows <= Int.MaxValue.toLong),
-      "strawboat: merge needs 32-bit row ordinals per file")
+    val (candidates, pruned) = MaintenanceOps.matchCandidates(snap, pruneFilters)
 
-    val jobId = java.util.UUID.randomUUID().toString.take(8)
     val serConf = new org.apache.spark.util.SerializableConfiguration(StrawIO.conf)
     val keySchemaJson = keySchema.json
-    val mappingB = spark.sparkContext.broadcast(mapping)
+    val mappingB = spark.sparkContext.broadcast(snap.mapping)
     val delUn = deleteUnmatched
 
     // ---- target side: every candidate file streams its live key rows,
@@ -559,12 +529,11 @@ object StrawMerge {
       (if (unmatchedDeleted > 0)
         unmatchedPairs.map(_.rdd.map(r => (r.getInt(0), r.getLong(1)))).toSeq
       else Nil)
-    val outs: Array[MatchOut] =
+    val outs: Array[MaintenanceOps.DvOut] =
       dvPairs.reduceOption(_ union _) match {
         case None => Array.empty
         case Some(pairs) => MaintenanceOps.dvFromPairs(spark, pairs,
           candidates.toIndexedSeq)
-          .map(o => MatchOut(o.input, o.matched, o.oldDvPath, o.newDv, o.fullDead))
       }
 
     // ---- insert gating: semi/anti join against the matched keys (a
@@ -594,8 +563,8 @@ object StrawMerge {
       if (keepMatchedSrc && matchedRows > 0)
         matchedPairs.select(keyCols: _*).distinct().count()
       else 0L
-    commitMerge(spark, dir, jobId, toWrite, schema, mapping, opts, listed,
-      serConf, outs, matchedRows, pruned, unmatchedDeleted = unmatchedDeleted,
+    commitMerge(spark, dir, jobId, toWrite, snap, outs, matchedRows, pruned,
+      unmatchedDeleted = unmatchedDeleted,
       replacedSrcRows = replacedSrcRows)
       .copy(distributedSource = true)
   }
@@ -617,80 +586,28 @@ object StrawMerge {
         org.apache.spark.sql.sources.LessThanOrEqual(k, hi))
     }
 
-  /** Shared tail of both match paths: stage `toWrite` distributed, then
-    * switch DVs + removes + adds in one atomic log commit. */
+  /** Shared tail of both match paths: stage `toWrite` distributed (every
+    * row it holds is NEW data — inserts and replaced versions alike), then
+    * the shared DV epilogue switches DVs + removes + adds in one atomic log
+    * commit (an all-matched insert-only merge commits no version). */
   private def commitMerge(spark: SparkSession, dir: String, jobId: String,
-      toWrite: DataFrame, schema: StructType, mapping: ColumnMappingState,
-      opts: WriteOptions, listed: Seq[StrawIO.Listed],
-      serConf: org.apache.spark.util.SerializableConfiguration,
-      mutated: Array[MatchOut], matchedRows: Long, pruned: Int,
+      toWrite: DataFrame, snap: MaintenanceOps.Snapshot,
+      outs: Seq[MaintenanceOps.DvOut], matchedRows: Long, pruned: Int,
       unmatchedDeleted: Long = 0L, replacedSrcRows: Long = 0L): MergeResult = {
-    val f = StrawIO.fs(dir)
-    def q(p: String): String = f.makeQualified(new Path(p)).toString
-    // hive-partitioned targets route inserted rows into their value
-    // directories, preserving the (possibly multi-level) layout and its
-    // pruning — every existing file must agree on the column sequence
-    val partitionCols: Seq[String] = PartitionLayout.layoutColsOf(listed)
-    // written files carry PHYSICAL spellings (fresh names for re-added
-    // columns); rows bind positionally so only the field names differ
-    val schemaJson = mapping.toPhysical(schema).json
-    // every row this phase writes is NEW data (inserts and replaced
-    // versions alike) — CHECK constraints bind once here and ride the task
-    val checker = StrawConstraints.checkerFor(spark, dir, schema).orNull
-    val staged: Seq[String] = {
-      val optsB = opts
-      toWrite.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-        StrawIO.install(serConf.value)
-        val s = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-          .asInstanceOf[StructType]
-        val writer = new StrawDataWriter(dir, s, pid, pid.toLong, optsB, jobId,
-          partitionCols, checker)
-        var ok = false
-        try {
-          rows.foreach(writer.write)
-          val msg = writer.commit().asInstanceOf[StrawCommitMessage]
-          ok = true
-          Iterator(msg.files)
-        } finally if (!ok) writer.abort()
-      }.collect().flatten.toSeq
-    }
-
-    // Keep produced no sidecars — nothing to switch on the target side;
-    // with nothing staged either, commit NO version (an all-matched
-    // insert-only merge must not append a blank history entry)
-    if (mutated.isEmpty && staged.isEmpty) {
-      StrawCommitProtocol.sweepStaged(dir, jobId)
-      return MergeResult(matchedRows, 0L, 0, 0, 0, pruned)
-    }
-
-    val fresh = MaintenanceOps.renameVisibleStamped(dir, jobId,
-      Seq((System.currentTimeMillis(), staged)))
+    val staged = MaintenanceOps.stageFrame(spark, dir, jobId, toWrite, snap)
+    val done = MaintenanceOps.commitDv(dir, jobId, "merge", outs, staged, snap)
     // fresh rows = replacement versions + true inserts; report them apart
-    val writtenRows = fresh.map(fm =>
+    val writtenRows = done.fresh.map(fm =>
       FooterCache.get(fm.path, fm.mtime, fm.len).numRows).sum
     val insertedRows = writtenRows - replacedSrcRows
     assert(insertedRows >= 0,
       s"merge accounting: wrote $writtenRows rows but $replacedSrcRows replacements")
-    val (full, partial) = mutated.partition(_.fullDead)
-    val removes = full.map(c => q(c.input)).toSet
-    val dvUpdates = partial.map(c => StrawLog.DvUpdate(q(c.input), c.newDv,
-      Option(c.oldDvPath))).toSeq
-    val adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
-    MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "merge",
-      dvs = dvUpdates,
-      // partial files keep their superseded sidecar for the age-based
-      // vacuum (restore/change-feed retention); full-dead files' sidecars
-      // go with their bytes
-      alsoVacuum = full.flatMap(c => Option(c.oldDvPath)).toSeq,
-      alsoRollback = partial.map(_.newDv.path).toSeq,
-      expectDvOnRemove = full.map(c => q(c.input) -> Option(c.oldDvPath)).toMap)
-
     MergeResult(
       matchedRows = matchedRows,
       insertedRows = insertedRows,
-      removedFiles = removes.size,
-      dvFiles = dvUpdates.size,
-      newFiles = fresh.size,
+      removedFiles = done.removedFiles,
+      dvFiles = done.dvFiles,
+      newFiles = done.fresh.size,
       prunedFiles = pruned,
       notMatchedBySourceDeleted = unmatchedDeleted,
       replacedRows = replacedSrcRows)

@@ -1,13 +1,11 @@
 package graft.spark
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, EqualTo, Expression, Literal, NamedExpression, PlanExpression}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, Filter => LFilter, InsertAction, Join, JoinHint, LogicalPlan, MergeAction, Project, UpdateAction}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
 
 import graft.format.WriteOptions
 
@@ -216,8 +214,8 @@ object StrawMergeScan {
       insertClauses: Seq[(Option[Expression], Seq[Assignment])],
       keyPairs: Seq[(Expression, Expression)],
       opts: WriteOptions): Unit = {
-    val (listed, mapping, schema) = StrawScanDml.snapshot(dir)
-    val (candidates, candIdx) = StrawScanDml.allCandidates(dir, listed, schema, mapping)
+    val snap = MaintenanceOps.snapshot(dir, "merge", opts)
+    val (candidates, candIdx) = StrawScanDml.allCandidates(snap)
     val jobId = java.util.UUID.randomUUID().toString.take(8)
 
     // ---- key-range pruning for the MATCHED side: every matched target row
@@ -371,79 +369,33 @@ object StrawMergeScan {
       }
 
     // ---- build DVs on executors from every touched ordinal
-    // (inflight marker cleared on any failure — a crashed merge must not
-    // block vacuum for the full TTL window)
     MaintenanceOps.withInflight(dir, jobId) {
-    val pairFrames = Seq(
-      touchedPairs,
-      nmbsDf.map(_.filter(col(ActionCol) > 0)
-        .select(StrawboatTable.FileColumnName, StrawboatTable.PosColumnName))
-    ).flatten
-    val outs =
-      if (pairFrames.isEmpty) Array.empty[MaintenanceOps.DvOut]
-      else MaintenanceOps.dvFromPairs(spark,
-        StrawScanDml.pairRdd(pairFrames.reduce(_ union _), candIdx), candidates)
+      val pairFrames = Seq(
+        touchedPairs,
+        nmbsDf.map(_.filter(col(ActionCol) > 0)
+          .select(StrawboatTable.FileColumnName, StrawboatTable.PosColumnName))
+      ).flatten
+      val outs =
+        if (pairFrames.isEmpty) Array.empty[MaintenanceOps.DvOut]
+        else MaintenanceOps.dvFromPairs(spark,
+          StrawScanDml.pairRdd(pairFrames.reduce(_ union _), candIdx), candidates)
 
-    // ---- stage new row versions + inserts (one distributed writer pass)
-    val tableCols = targetOutput.map(_.name)
-    val newRowFrames = Seq(
-      matchedDfOpt.filter(_ => updateTags.nonEmpty).map(_
-        .filter(col(ActionCol).isin(updateTags.map(Integer.valueOf): _*))
-        .select(tableCols.map(col): _*)),
-      nmbsDf.filter(_ => nmbsUpdateTags.nonEmpty).map(_
-        .filter(col(ActionCol).isin(nmbsUpdateTags.map(Integer.valueOf): _*))
-        .select(tableCols.map(col): _*)),
-      insertDf.map(_.select(tableCols.map(col): _*))
-    ).flatten
-    val checker = StrawConstraints.checkerFor(spark, dir, schema).orNull
-    val serConf = new org.apache.spark.util.SerializableConfiguration(StrawIO.conf)
-    val partitionCols: Seq[String] = PartitionLayout.layoutColsOf(listed)
-    val schemaJson = mapping.toPhysical(schema).json
-    val opts0 = StrawBucket.withTableSpec(dir, opts)
-    val staged: Seq[String] =
-      if (newRowFrames.isEmpty) Seq.empty
-      else newRowFrames.reduce(_ union _).queryExecution.toRdd
-        .mapPartitionsWithIndex { (pid, rows) =>
-          StrawIO.install(serConf.value)
-          val s = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-            .asInstanceOf[StructType]
-          val writer = new StrawDataWriter(dir, s, pid, pid.toLong, opts0, jobId,
-            partitionCols, checker)
-          var ok = false
-          try {
-            rows.foreach(writer.write)
-            val msg = writer.commit().asInstanceOf[StrawCommitMessage]
-            ok = true
-            Iterator(msg.files)
-          } finally if (!ok) writer.abort()
-        }.collect().flatten.toSeq
-
-    if (outs.isEmpty && staged.isEmpty) {
-      StrawLog.clearInflight(dir, jobId)
-      return
-    }
-
-    // ---- the shared atomic epilogue (identical to scan-based UPDATE)
-    val f = StrawIO.fs(dir)
-    def q(p: String): String = f.makeQualified(new Path(p)).toString
-    val fresh = MaintenanceOps.renameVisibleStamped(dir, jobId,
-      if (staged.isEmpty) Seq.empty
-      else Seq((System.currentTimeMillis(), staged)))
-    val (full, partial) = outs.partition(_.fullDead)
-    val removes = full.map(c => q(c.input)).toSet
-    val dvUpdates = partial.map(c => StrawLog.DvUpdate(q(c.input), c.newDv,
-      Option(c.oldDvPath))).toSeq
-    var adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
-    // a merge that deletes every row of every file and inserts nothing
-    // leaves a schema marker so the table stays self-describing
-    if (adds.isEmpty && dvUpdates.isEmpty && removes.size == listed.size)
-      adds = Seq(StrawLog.entryFor(StrawDelete.writeEmptyMarker(dir,
-        mapping.toPhysical(schema), opts0)))
-    MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "merge",
-      dvs = dvUpdates,
-      alsoVacuum = full.flatMap(c => Option(c.oldDvPath)).toSeq,
-      alsoRollback = partial.map(_.newDv.path).toSeq,
-      expectDvOnRemove = full.map(c => q(c.input) -> Option(c.oldDvPath)).toMap)
+      // ---- stage new row versions + inserts (one distributed writer pass)
+      val tableCols = targetOutput.map(_.name)
+      val newRowFrames = Seq(
+        matchedDfOpt.filter(_ => updateTags.nonEmpty).map(_
+          .filter(col(ActionCol).isin(updateTags.map(Integer.valueOf): _*))
+          .select(tableCols.map(col): _*)),
+        nmbsDf.filter(_ => nmbsUpdateTags.nonEmpty).map(_
+          .filter(col(ActionCol).isin(nmbsUpdateTags.map(Integer.valueOf): _*))
+          .select(tableCols.map(col): _*)),
+        insertDf.map(_.select(tableCols.map(col): _*))
+      ).flatten
+      val staged =
+        if (newRowFrames.isEmpty) Seq.empty
+        else MaintenanceOps.stageFrame(spark, dir, jobId,
+          newRowFrames.reduce(_ union _), snap)
+      MaintenanceOps.commitDv(dir, jobId, "merge", outs, staged, snap)
     }
   }
 }

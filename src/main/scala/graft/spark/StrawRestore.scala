@@ -26,7 +26,7 @@ package graft.spark
   * while every file the target version references still exists — true for
   * undoing appends and merge-on-read deletes/updates/merges (their inputs
   * stay live under deletion vectors), false across a truncate, compaction,
-  * or copy-on-write rewrite that physically removed inputs. [[StrawLog
+  * or fully-dead delete/update/merge that physically removed inputs. [[StrawLog
   * .commit]] re-stats every referenced path and fails LOUDLY before the
   * log records anything, so an unrestorable version can never produce a
   * half-restored table.

@@ -1,6 +1,5 @@
 package graft.spark
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.sources.Filter
@@ -11,16 +10,15 @@ import graft.format.WriteOptions
 /** Row-level UPDATE over a strawboat table — the redaction primitive for an
   * LLM corpus (null out or overwrite a PII column where flagged).
   *
-  * Default is MERGE-ON-READ: matching rows' ordinals are unioned into each
-  * file's deletion vector ([[DeletionVector]] — the old row versions die in
+  * MERGE-ON-READ: matching rows' ordinals are unioned into each file's
+  * deletion vector ([[DeletionVector]] — the old row versions die in
   * place) while the UPDATED versions are written to new files beside the
   * input, all switched in ONE atomic [[StrawLog]] commit (op `update`).
   * Cost is proportional to the MATCHED rows, not to the files containing
   * them: a 100-row redaction in a 1 GB file writes a 100-row file and a
   * sidecar, never rewrites the gigabyte. A file whose every row matched is
-  * removed outright. Copy-on-write (rewrite the whole file with assignments
-  * applied) remains available via `useDeletionVectors = false` and is the
-  * automatic fallback for >2^31-row files.
+  * removed outright. Vector ordinals are 32-bit, so a table holding a file
+  * of more than 2^31 rows is rejected.
   *
   * `condition` is the same pushdown-filter conjunction as delete's (SQL
   * 3VL: only TRUE rows update); `set` maps flat column names to new
@@ -31,10 +29,12 @@ import graft.format.WriteOptions
   * file-local operation cannot do.
   *
   * Crash/concurrency, schema handling, and conflict semantics follow
-  * [[StrawDelete]] (shared [[MaintenanceOps]]): evaluation happens in the
-  * table schema derived from the SAME listing snapshot; sidecars and staged
-  * files are invisible until the commit; failures roll back; a competing
-  * mutation of the same file surfaces as [[StrawLog.ConflictException]].
+  * [[StrawDelete]] (shared [[MaintenanceOps]] snapshot and epilogue):
+  * evaluation happens in the table schema derived from the SAME listing
+  * snapshot; sidecars and staged files are invisible until the commit and
+  * covered by an in-flight marker until then; failures roll back; a
+  * competing mutation of the same file surfaces as
+  * [[StrawLog.ConflictException]].
   */
 object StrawUpdate {
 
@@ -69,10 +69,8 @@ object StrawUpdate {
     * applying `set` column := literal assignments. No-op (version
     * unchanged) when nothing matches. */
   def update(spark: SparkSession, dir: String, condition: Seq[Filter],
-      set: Map[String, Any], opts: WriteOptions = WriteOptions(),
-      useDeletionVectors: Boolean = true): UpdateResult =
-    run(spark, dir, condition, set.keySet, opts, useDeletionVectors) {
-      (schema, _) =>
+      set: Map[String, Any], opts: WriteOptions = WriteOptions()): UpdateResult =
+    run(spark, dir, condition, set.keySet, opts) { schema =>
         // resolve assignments to (ordinal, catalyst value) up front — a
         // typo'd column, nested target, type mismatch, or null into a
         // non-nullable column must fail before anything is rewritten
@@ -113,10 +111,8 @@ object StrawUpdate {
     * `current_date()`) are evaluated once on the driver, so time-dependent
     * functions are statement-scoped as SQL requires. */
   def updateExpressions(spark: SparkSession, dir: String, condition: Seq[Filter],
-      set: Map[String, String], opts: WriteOptions = WriteOptions(),
-      useDeletionVectors: Boolean = true): UpdateResult =
-    run(spark, dir, condition, set.keySet, opts, useDeletionVectors) {
-      (schema, _) =>
+      set: Map[String, String], opts: WriteOptions = WriteOptions()): UpdateResult =
+    run(spark, dir, condition, set.keySet, opts) { schema =>
         import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, PlanExpression}
         import org.apache.spark.sql.catalyst.plans.logical.Project
         // one empty frame over the TABLE schema: the session analyzer
@@ -196,33 +192,22 @@ object StrawUpdate {
     (i, fld)
   }
 
-  /** Shared validation + dispatch: derive the table schema from ONE listing
-    * snapshot, compile the condition, build assignments via `mkAssigns`
-    * (literal or expression form), reject partition-column targets, run the
-    * candidate ladder, and execute merge-on-read or copy-on-write. */
+  /** Shared validation + execution: take the op's [[MaintenanceOps.Snapshot]],
+    * compile the condition, build assignments via `mkAssigns` (literal or
+    * expression form), reject partition-column targets, run the candidate
+    * ladder, then match into deletion vectors, stage the updated versions
+    * and commit — all under one in-flight marker. */
   private def run(spark: SparkSession, dir: String, condition: Seq[Filter],
-      assignedCols: Set[String], opts: WriteOptions, useDeletionVectors: Boolean)(
-      mkAssigns: (StructType, Seq[StrawIO.Listed]) => Seq[MaintenanceOps.Assign])
-      : UpdateResult = {
+      assignedCols: Set[String], opts: WriteOptions)(
+      mkAssigns: StructType => Seq[MaintenanceOps.Assign]): UpdateResult = {
     require(condition.nonEmpty, "strawboat: update needs a condition")
     require(assignedCols.nonEmpty, "strawboat: update needs at least one assignment")
-    // a bucketed table's copy-on-write rewrites keep its layout
-    val opts0 = StrawBucket.withTableSpec(dir, opts)
-    val listed = StrawIO.listFilesMetaWithStats(dir)
-    require(listed.nonEmpty, s"strawboat: no data files under $dir")
-    // rename/drop history: assignments, condition and the merged schema
-    // speak the logical namespace; per-file translation is in MaintenanceOps
-    val mapping = StrawLog.mappingAt(dir)
-    val schema = StrawSchemaResolver.merge(StrawIO.mapParallel(listed) {
-      case StrawIO.Listed(m, Some(synth), _) =>
-        (m.path, mapping.toLogical(synth.schema))
-      case StrawIO.Listed(m, None, _) =>
-        (m.path, mapping.toLogical(FooterCache.get(m.path, m.mtime, m.len).schema))
-    })
+    val snap = MaintenanceOps.snapshot(dir, "update", opts)
+    val schema = snap.schema
     require(RowFilterEval.build(schema, condition.toArray).isDefined,
       s"strawboat: update condition is not exactly row-evaluable over " +
         s"${schema.catalogString}: ${condition.mkString(", ")}")
-    val assigns = mkAssigns(schema, listed)
+    val assigns = mkAssigns(schema)
     val filters = condition.toArray
 
     // a file-local operation cannot move rows between hive partition
@@ -230,7 +215,7 @@ object StrawUpdate {
     // grouped aggregate pushdown — updating the partition column is out.
     // Validated over the FULL listing (not the pruned candidates): the
     // same invalid call must fail identically whether or not rows match.
-    listed.foreach { lf =>
+    snap.listed.foreach { lf =>
       PartitionLayout.partitionOf(lf.meta.path).foreach { case (c, _) =>
         require(!assignedCols.contains(c),
           s"strawboat: cannot update hive partition column '$c' (rows would " +
@@ -238,109 +223,27 @@ object StrawUpdate {
       }
     }
 
-    val (candidates, pruned) = MaintenanceOps.matchCandidates(listed, schema, filters,
-      mapping)
+    val (candidates, pruned) = MaintenanceOps.matchCandidates(snap, filters)
     if (candidates.isEmpty) return UpdateResult(0L, 0, 0, pruned, 0)
 
     val jobId = java.util.UUID.randomUUID().toString.take(8)
     // CHECK constraints apply to the POST-assignment rows — an update may
     // not move a row out of compliance (bound once here, on the driver)
     val checker = StrawConstraints.checkerFor(spark, dir, schema).orNull
-    val dvCapable = useDeletionVectors &&
-      candidates.forall(_.numRows <= Int.MaxValue.toLong)
-    if (dvCapable)
-      updateViaDv(spark, dir, jobId, schema, candidates, filters, assigns,
-        pruned, opts0, checker)
-    else
-      updateCopyOnWrite(spark, dir, jobId, schema, candidates, filters, assigns,
-        pruned, opts0, checker)
-  }
-
-  /** Merge-on-read: old row versions die via the deletion vector, updated
-    * versions append as new files — one atomic commit switches both. */
-  private def updateViaDv(spark: SparkSession, dir: String, jobId: String,
-      schema: StructType, candidates: Seq[MaintenanceOps.Candidate],
-      filters: Array[Filter], assigns: Seq[MaintenanceOps.Assign], pruned: Int,
-      opts: WriteOptions,
-      checker: StrawConstraints.RowChecker = null): UpdateResult = {
-    val outs = MaintenanceOps.dvMatch(spark, dir, jobId, schema, candidates,
-      filters, assigns = Some(assigns), opts, checkUpdated = checker,
-      mapping = StrawLog.mappingAt(dir))
-    val changed = outs.filter(_.matched > 0)
-    if (changed.isEmpty) {
-      StrawCommitProtocol.sweepStaged(dir, jobId)
-      return UpdateResult(0L, 0, 0, pruned, outs.length)
+    MaintenanceOps.withInflight(dir, jobId) {
+      // old row versions die via the deletion vector, updated versions
+      // stage as new files — one atomic commit switches both
+      val outs = MaintenanceOps.dvMatch(spark, dir, jobId, snap, candidates,
+        filters, assigns = Some(assigns), checkUpdated = checker)
+      val done = MaintenanceOps.commitDv(dir, jobId, "update", outs,
+        outs.flatMap(_.staged), snap)
+      UpdateResult(
+        updatedRows = outs.map(_.matched).sum,
+        rewrittenFiles = done.fresh.size,
+        removedFiles = done.removedFiles,
+        prunedFiles = pruned,
+        falsePositiveFiles = outs.count(_.matched == 0),
+        dvFiles = done.dvFiles)
     }
-    val f = StrawIO.fs(dir)
-    def q(p: String): String = f.makeQualified(new Path(p)).toString
-    // updated rows are NEW data: their files surface under commit-time
-    // mtime (a tailing stream legitimately sees the new row versions)
-    val now = System.currentTimeMillis()
-    val fresh = MaintenanceOps.renameVisibleStamped(dir, jobId,
-      changed.toSeq.map(c => (now, c.staged)))
-    val (full, partial) = changed.partition(_.fullDead)
-    val removes = full.map(c => q(c.input)).toSet
-    val dvUpdates = partial.map(c => StrawLog.DvUpdate(q(c.input), c.newDv,
-      Option(c.oldDvPath))).toSeq
-    val adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
-    MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "update",
-      dvs = dvUpdates,
-      // partial files keep their superseded sidecar for the age-based
-      // vacuum (restore/change-feed retention); full-dead files' sidecars
-      // go with their bytes
-      alsoVacuum = full.flatMap(c => Option(c.oldDvPath)).toSeq,
-      alsoRollback = partial.map(_.newDv.path).toSeq,
-      // a full-dead removal is only sound against the DV this op read
-      expectDvOnRemove = full.map(c => q(c.input) -> Option(c.oldDvPath)).toMap)
-
-    UpdateResult(
-      updatedRows = changed.map(_.matched).sum,
-      rewrittenFiles = fresh.size,
-      removedFiles = removes.size,
-      prunedFiles = pruned,
-      falsePositiveFiles = outs.count(_.matched == 0),
-      dvFiles = dvUpdates.size)
-  }
-
-  /** Copy-on-write: rewrite each matching file with assignments applied
-    * (dropping any prior deletion vector along the way). */
-  private def updateCopyOnWrite(spark: SparkSession, dir: String, jobId: String,
-      schema: StructType, candidates: Seq[MaintenanceOps.Candidate],
-      filters: Array[Filter], assigns: Seq[MaintenanceOps.Assign], pruned: Int,
-      opts: WriteOptions,
-      checker: StrawConstraints.RowChecker = null): UpdateResult = {
-    // shared distributed-rewrite scaffolding: matching rows pass through
-    // the assignments, everything else is byte-identical
-    val rewrites = MaintenanceOps.rewriteMatching(spark, dir, jobId, schema,
-      candidates, filters, assigns = Some(assigns), opts, checkUpdated = checker,
-      mapping = StrawLog.mappingAt(dir))
-
-    val f = StrawIO.fs(dir)
-    val (changed, untouched) = rewrites.partition(_.matched > 0)
-    if (changed.isEmpty) {
-      StrawCommitProtocol.sweepStaged(dir, jobId)
-      return UpdateResult(0L, 0, 0, pruned, untouched.length)
-    }
-    val fresh = MaintenanceOps.renameVisibleStamped(dir, jobId,
-      changed.toSeq.map(rw => (rw.inputMtime, rw.staged)))
-    val removes = changed.map(c => f.makeQualified(new Path(c.input)).toString).toSet
-    val candDv = candidates
-      .map(c => f.makeQualified(new Path(c.meta.path)).toString -> Option(c.dv))
-      .toMap
-    val replacedDvs = removes.toSeq.flatMap(p => candDv.getOrElse(p, None).map(_.path))
-    val adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
-    MaintenanceOps.commitSwitchAndVacuum(dir, jobId, adds, removes, op = "update",
-      alsoVacuum = replacedDvs,
-      // conflict if a concurrent row delete swapped an input's DV after
-      // this rewrite read it — the rewrite would resurrect its rows
-      expectDvOnRemove =
-        removes.iterator.map(p => p -> candDv.getOrElse(p, None).map(_.path)).toMap)
-
-    UpdateResult(
-      updatedRows = changed.map(_.matched).sum,
-      rewrittenFiles = fresh.size,
-      removedFiles = removes.size,
-      prunedFiles = pruned,
-      falsePositiveFiles = untouched.length)
   }
 }

@@ -1021,12 +1021,14 @@ class StrawScan(
     * branches (span dedup's gram exchange, MinHash's bucket relation,
     * n-gram decontamination) each materialize their own exchange and the
     * whole subtree below it runs TWICE. Spark's own FileScan implements
-    * the same contract. `filters` is the CURRENT state (static + any
-    * injected runtime filters) — BatchScanExec additionally compares its
-    * runtime filter expressions, so two scans that would diverge after
-    * DPP injection are never merged. */
+    * the same contract. The key holds only state fixed at construction —
+    * the pushed `initialFilters`, never the runtime filters [[filter]]
+    * appends — so a scan's hash cannot change while Spark holds it in a
+    * reuse map. BatchScanExec compares its runtime filter expressions
+    * itself, so two scans that would diverge after DPP injection are
+    * still never merged. */
   private def stateKey: Product =
-    (path, fullSchema, requiredSchema, filters.toSeq, limit,
+    (path, fullSchema, requiredSchema, initialFilters.toSeq, limit,
       maxFilesPerTrigger, keyGrouped, topN, exactFilters.toSeq,
       maxBytesPerTrigger, asOf, appendFile, appendPos, bucketSpec)
   override def equals(other: Any): Boolean = other match {

@@ -309,13 +309,33 @@ class RoundTripSpec extends AnyFunSuite {
       assert(p.statsKind == StrawFormat.StatsSigned)
       assert(p.min == i * 1000L && p.max == i * 1000L + 999L)
     }
-    // hostile counts fail cleanly instead of sizing an allocation: meta
-    // starts with numRows i64 | numCols i32 | column 0's offset i64 |
-    // column 0's numPages i32
+    // hostile counts fail cleanly instead of sizing an allocation or
+    // answering wrong: meta starts with numRows i64 | numCols i32 |
+    // column 0's offset i64 | column 0's numPages i32, and ends with the
+    // extension sections (id u8 | len u32 | payload) — here the ndv
+    // sketch (count u32 + registers); a string file's last section is its
+    // length stats (flag u8 + sum i64 + max i32)
     val metaStart = img.length - 16 -
       ByteBuffer.wrap(img).order(ByteOrder.LITTLE_ENDIAN).getInt(img.length - 12)
-    for (at <- Seq(metaStart + 8, metaStart + 20); bad <- Seq(-1, Int.MaxValue)) {
-      val hostile = img.clone()
+    assert(footer.ndv(0) != null && footer.lens == null)
+    val ndvLenAt = img.length - 16 - (4 + NdvSketch.M) - 4
+    val strImg = {
+      val sw = new StrawFileWriter(StructType(Seq(StructField("s", StringType))),
+        WriteOptions())
+      (0 until 100).foreach(i =>
+        sw.write(new GenericInternalRow(Array[Any](UTF8String.fromString(s"s$i")))))
+      sw.finish()
+    }
+    assert(StrawFileReader.readFooter(new ByteArrayInput(strImg)).lens(0) != null)
+    val lenLenAt = strImg.length - 16 - 13 - 4
+    val hostiles = Seq(
+      (img, metaStart + 8, -1), (img, metaStart + 8, Int.MaxValue), // numCols
+      (img, metaStart + 20, -1), (img, metaStart + 20, Int.MaxValue), // numPages
+      (img, metaStart + 4, -1), // numRows' high word: a negative row count
+      (img, ndvLenAt, 4 + NdvSketch.M - 1), // ndv section shorter than its payload
+      (strImg, lenLenAt, 12)) // length-stats section shorter than its payload
+    for ((base, at, bad) <- hostiles) {
+      val hostile = base.clone()
       ByteBuffer.wrap(hostile).order(ByteOrder.LITTLE_ENDIAN).putInt(at, bad)
       val e = intercept[IllegalArgumentException] {
         StrawFileReader.readFooter(new ByteArrayInput(hostile))

@@ -246,7 +246,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0L until 500L).map(i => (i, s"r$i")).toDF("id", "s")
       .coalesce(1).write.format("strawboat").mode("overwrite").save(out)
     val target = StrawLog.snapshot(out).get.entries.head
-    // a rewriting op (compaction / copy-on-write) reads the file while it
+    // a rewriting op (compaction) reads the file while it
     // has NO sidecar...
     val replacement = target.copy(meta =
       target.meta.copy(path = target.meta.path + ".rw.strb"))

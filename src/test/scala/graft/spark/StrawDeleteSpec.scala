@@ -7,7 +7,7 @@ import org.apache.spark.sql.sources._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Copy-on-write row-level DELETE ([[StrawDelete]]): SQL 3VL semantics,
+/** Row-level DELETE ([[StrawDelete]]): SQL 3VL semantics,
   * cost proportional to files containing matches (pruning proof by
   * corruption), atomic log switch, schema-evolution behavior, and the
   * all-rows-deleted edge. */

@@ -81,6 +81,15 @@ class StrawMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(read(out).filter(col("k").between(400L, 409L) &&
       col("s").startsWith("ins")).count() == 0)
     assert(read(out).filter(col("k") >= 9000L).count() == 10)
+    // delete-merge of every remaining key: every file goes and nothing is
+    // inserted — the table must still read back, empty, with its schema
+    val all = read(out).select(col("k"), lit("ignored").as("s"))
+    val res3 = StrawMerge.merge(spark, out, all, Seq("k"),
+      whenMatched = StrawMerge.Delete, insertNotMatched = false)
+    assert(res3.matchedRows == 460 && res3.insertedRows == 0, res3.toString)
+    val emptied = read(out)
+    assert(emptied.count() == 0)
+    assert(emptied.schema.fieldNames.toSeq == Seq("k", "s"))
   }
 
   test("duplicate source keys are rejected; null keys insert but never match") {

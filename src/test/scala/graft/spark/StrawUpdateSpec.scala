@@ -7,7 +7,7 @@ import org.apache.spark.sql.sources._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Copy-on-write row-level UPDATE ([[StrawUpdate]]): assignment semantics
+/** Row-level UPDATE ([[StrawUpdate]]): assignment semantics
   * under SQL 3VL, redaction-by-null, pruning, partition-column rejection,
   * and assignment validation. */
 class StrawUpdateSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -186,5 +186,26 @@ class StrawUpdateSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(EqualTo("id", -5L): Filter), Map("s" -> "x"))
     assert(res.updatedRows == 0 && res.rewrittenFiles == 0)
     assert(StrawLog.latestVersion(out) == v0)
+  }
+
+  test("update tasks run under the in-flight marker that keeps vacuum off") {
+    val sp = spark; import sp.implicits._
+    val out = s"$dir/inflight"
+    (0L until 100L).map(i => (i, s"r$i")).toDF("id", "s")
+      .coalesce(1).write.format("strawboat").mode("overwrite").save(out)
+    // the assignment's UDF runs inside the task that writes the sidecar and
+    // the staged rows (same JVM under local mode) and stores whether the
+    // marker existed at that moment in the updated row itself
+    val logDir = new java.io.File(out, "_straw_log")
+    spark.udf.register("inflight_seen", (s: String) =>
+      if (Option(logDir.listFiles()).exists(_.exists(_.getName.startsWith(".inflight."))))
+        "marked"
+      else "unmarked")
+    val res = StrawUpdate.updateExpressions(spark, out,
+      Seq(LessThan("id", 10L): Filter), Map("s" -> "inflight_seen(s)"))
+    assert(res.updatedRows == 10, res.toString)
+    assert(read(out).filter(col("s") === "marked").count() == 10)
+    // and the commit retired it
+    assert(!logDir.listFiles().exists(_.getName.startsWith(".inflight.")))
   }
 }

@@ -268,6 +268,23 @@ class StrawboatSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(joined.count() == lineitem.filter(col("l_returnflag") === "A").count())
   }
 
+  test("scan equality and hashCode do not change when runtime filters arrive") {
+    import org.apache.spark.sql.sources.{EqualTo, Filter}
+    val out = s"$dir/scan_eq"
+    lineitem.select(col("l_orderkey"), col("l_returnflag"))
+      .write.format("strawboat").option("partitionBy", "l_returnflag")
+      .mode("overwrite").save(out)
+    val schema = spark.read.format("strawboat").load(out).schema
+    val scan = new StrawScanBuilder(out, schema).build()
+    val twin = new StrawScanBuilder(out, schema).build()
+    val hash = scan.hashCode
+    assert(scan == twin && hash == twin.hashCode)
+    // Spark may hold the scan in an exchange-reuse map while DPP injects
+    scan.asInstanceOf[StrawScan].filter(Array[Filter](EqualTo("l_returnflag", "A")))
+    assert(scan.hashCode == hash)
+    assert(scan == twin)
+  }
+
   test("overwrite of a partitioned table truncates the previous generation") {
     val out = s"$dir/li_part_overwrite"
     val src = lineitem.select(col("l_returnflag"), col("l_quantity"))
