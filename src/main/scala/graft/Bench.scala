@@ -282,9 +282,10 @@ object Bench {
     if (compact.length > 1900)
       System.err.println(s"bench: WARNING compact report line is ${compact.length} chars " +
         "(driver tail budget ~2000) — trim non-contract fields")
-    println(compact)
     // exit 0 even when a query failed: the JSON line (with its "errors"
-    // field) is the report, and a non-zero rc would make the driver drop it
+    // field) is the report, and a non-zero exit status would get it
+    // discarded. Printed after stop() so no shutdown log line follows it.
     spark.stop()
+    println(compact)
   }
 }

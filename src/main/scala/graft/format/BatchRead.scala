@@ -10,9 +10,11 @@ import org.apache.spark.sql.types._
   * concatenates) re-expressed over the same page decoders the streaming
   * reader uses.
   *
-  * The STREAMING iterator ([[StrawFileReader.rows]]) remains the scan
-  * path: an executor task holds one page group per column at a time, the
-  * bounded-memory shape 100 TB requires. This tier is the deliberate
+  * Scans stream instead: the connector's columnar reader
+  * (`graft.spark.ColumnarSupport.StrawColumnarReader`) holds one page group
+  * per column at a time, the bounded-memory shape 100 TB requires, and
+  * [[StrawFileReader.rows]] is the row-at-a-time reference over the same
+  * decoders. This tier is the deliberate
   * opposite trade for callers that want one (small) file materialized at
   * once — sidecar-scale lookups, tooling, tests — mirroring how the
   * reference itself uses `batch_read_array` (its tests and examples, not

@@ -349,13 +349,6 @@ object ProjCol {
 // File-level reader
 // ---------------------------------------------------------------------------
 
-/** Row iterator that also knows the FILE-ABSOLUTE ordinal (deletion-vector
-  * ordinal space: dead and page-skipped rows count) of the row the last
-  * `next()` returned — what row-level maintenance needs to target rows. */
-abstract class PosIterator extends Iterator[InternalRow] {
-  def lastOrdinal: Long
-}
-
 object StrawFileReader {
   /** Read the footer with at most two positioned reads (tail-size probe then
     * exact tail; reference pre-reads a 64 KiB tail for the same reason,
@@ -378,52 +371,6 @@ object StrawFileReader {
     MetaIO.readFooter(tail)
   }
 
-  /** A reusable InternalRow VIEW over one row index of a set of decoded
-    * pages — lets a row-level predicate evaluate before any row object is
-    * materialized (late materialization: failing rows are never built).
-    * Only the read-side accessors a predicate needs are implemented. */
-  private final class PageRowView extends InternalRow {
-    var pages: Array[DecodedPage] = _
-    var row: Int = 0
-    override def numFields: Int = pages.length
-    override def isNullAt(o: Int): Boolean = pages(o).isNullAt(row)
-    override def get(o: Int, dt: DataType): AnyRef =
-      pages(o).valueOrNull(row).asInstanceOf[AnyRef]
-    override def getBoolean(o: Int): Boolean = pages(o).value(row).asInstanceOf[Boolean]
-    override def getByte(o: Int): Byte = pages(o).value(row).asInstanceOf[Byte]
-    override def getShort(o: Int): Short = pages(o).value(row).asInstanceOf[Short]
-    override def getInt(o: Int): Int = pages(o).value(row).asInstanceOf[Int]
-    override def getLong(o: Int): Long = pages(o).value(row).asInstanceOf[Long]
-    override def getFloat(o: Int): Float = pages(o).value(row).asInstanceOf[Float]
-    override def getDouble(o: Int): Double = pages(o).value(row).asInstanceOf[Double]
-    override def getDecimal(o: Int, precision: Int, scale: Int): Decimal =
-      pages(o).value(row).asInstanceOf[Decimal]
-    override def getUTF8String(o: Int): UTF8String =
-      pages(o).value(row).asInstanceOf[UTF8String]
-    override def getBinary(o: Int): Array[Byte] =
-      pages(o).value(row).asInstanceOf[Array[Byte]]
-    override def getInterval(o: Int): org.apache.spark.unsafe.types.CalendarInterval =
-      throw new UnsupportedOperationException("PageRowView: interval")
-    override def getStruct(o: Int, numFields: Int): InternalRow =
-      pages(o).value(row).asInstanceOf[InternalRow]
-    override def getArray(o: Int): org.apache.spark.sql.catalyst.util.ArrayData =
-      pages(o).value(row).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    override def getMap(o: Int): org.apache.spark.sql.catalyst.util.MapData =
-      pages(o).value(row).asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
-    override def getVariant(o: Int): org.apache.spark.unsafe.types.VariantVal =
-      throw new UnsupportedOperationException("PageRowView: variant")
-    override def getGeography(o: Int): org.apache.spark.unsafe.types.GeographyVal =
-      throw new UnsupportedOperationException("PageRowView: geography")
-    override def getGeometry(o: Int): org.apache.spark.unsafe.types.GeometryVal =
-      throw new UnsupportedOperationException("PageRowView: geometry")
-    override def copy(): InternalRow =
-      throw new UnsupportedOperationException("PageRowView: copy")
-    override def setNullAt(o: Int): Unit =
-      throw new UnsupportedOperationException("PageRowView: mutate")
-    override def update(o: Int, v: Any): Unit =
-      throw new UnsupportedOperationException("PageRowView: mutate")
-  }
-
   /** Convenience: project whole top-level fields by index (tests, chained
     * readers). */
   def rowsByField(
@@ -436,28 +383,6 @@ object StrawFileReader {
       fields.map(i => ProjCol.plan(footer, i, footer.schema.fields(i).dataType)),
       keepPage, limit)
 
-  /** Iterate rows of one file with column projection (possibly
-    * struct-pruned — see [[ProjCol]]) and optional page-group filter
-    * (zone-map skipping) / row limit.
-    *
-    * The produced rows have exactly the projected columns in order; a
-    * nested-pruned column materializes ONLY its requested leaves — sibling
-    * leaf pages are never read. `keepPage(p)` decides whether page group
-    * `p` can contain matching rows (pages are row-aligned across columns —
-    * the writer flushes all columns together).
-    *
-    * `rowPred`, when non-null, is evaluated against a reused page-backed
-    * row VIEW before materialization — failing rows cost only the predicate
-    * columns' accessors, never a row object — and `limit` then counts
-    * PASSING rows.
-    *
-    * `deadRows`, when non-null, is the file's deletion-vector bitmap of
-    * dead ORDINALS (0-based row position in the file): dead rows are
-    * skipped before the predicate ever runs, a fully-dead page is skipped
-    * without decoding, and `limit` counts only LIVE passing rows. Ordinals
-    * are file-absolute, so page skipping (zone maps, fully-dead pages)
-    * never desynchronizes them.
-    */
   /** Decode page group `p` of one projected column: the single-flat fast
     * path reads one leaf page; a nested/pruned column decodes each leaf
     * and reassembles. Shared by the streaming iterator and the eager
@@ -485,57 +410,38 @@ object StrawFileReader {
       LeafDecoder.assemble(pc.readDt, decoded)
     }
 
+  /** Iterate rows of one file with column projection (possibly
+    * struct-pruned — see [[ProjCol]]) and optional page-group filter
+    * (zone-map skipping) / row limit — the format-level reference reader
+    * (the connector's scans read through its columnar reader).
+    *
+    * The produced rows have exactly the projected columns in order; a
+    * nested-pruned column materializes ONLY its requested leaves — sibling
+    * leaf pages are never read. `keepPage(p)` decides whether page group
+    * `p` can contain matching rows (pages are row-aligned across columns —
+    * the writer flushes all columns together).
+    */
   def rows(
       input: RandomInput,
       footer: StrawFooter,
       projection: Array[ProjCol],
       keepPage: Int => Boolean = _ => true,
-      limit: Long = Long.MaxValue,
-      rowPred: InternalRow => Boolean = null,
-      deadRows: org.roaringbitmap.RoaringBitmap = null): PosIterator = {
-    // zero-column files (empty write schema) carry rows only in the footer:
-    // emit the LIVE row count directly (no pages exist to iterate; with a
-    // deletion vector, dead ordinals simply reduce the count — the rows
-    // are indistinguishable)
-    if (footer.columns.isEmpty) {
-      val live =
-        if (deadRows == null) footer.numRows
-        else math.max(0L, footer.numRows - deadRows.getLongCardinality)
-      val total = math.min(live, limit)
-      // ordinals advance past dead rows so each emitted row gets its own
-      // live file-absolute position
-      return new PosIterator {
-        private var i = 0L
-        private var ord = -1L
-        def lastOrdinal: Long = ord
-        def hasNext: Boolean = i < total
-        def next(): InternalRow = {
-          i += 1
-          ord += 1
-          if (deadRows != null) while (deadRows.contains(ord.toInt)) ord += 1
-          InternalRow.empty
-        }
-      }
-    }
+      limit: Long = Long.MaxValue): Iterator[InternalRow] = {
+    // zero-column files (empty write schema) carry rows only in the footer
+    if (footer.columns.isEmpty)
+      return (0L until math.min(footer.numRows, limit)).iterator.map(_ => InternalRow.empty)
     val numPages = footer.columns(0).pages.length
     // PageMeta.numValues is the page group's row count on every leaf
     val pageRows: Array[Int] = footer.columns(0).pages.map(_.numValues)
-    // file-absolute ordinal of each page's first row (deletion vectors,
-    // lastOrdinal)
-    val pageStartOrd: Array[Long] = pageRows.scanLeft(0L)(_ + _)
     val pageOffsets: Array[Array[Array[Long]]] =
       projection.map(_.globalLeaves.map(li => footer.columns(li).pageOffsets))
 
-    new PosIterator {
+    new Iterator[InternalRow] {
       private var pageIdx = 0
       private var rowInPage = 0
       private var emitted = 0L
-      private var lastOrd = -1L
-      def lastOrdinal: Long = lastOrd
       private var pages: Array[DecodedPage] = null
       private var pageN = 0
-      private var pageOrd = 0L // current page's first-row ordinal
-      private var pageHasDead = false // any dead ordinal in current page?
 
       private def decodeColumn(c: Int, p: Int): DecodedPage =
         StrawFileReader.decodeColumnPage(input, footer, projection(c),
@@ -545,65 +451,23 @@ object StrawFileReader {
         while (pageIdx < numPages) {
           val p = pageIdx
           pageIdx += 1
-          val deadInPage =
-            if (deadRows == null) 0L
-            else deadRows.rangeCardinality(pageStartOrd(p), pageStartOrd(p) + pageRows(p))
-          // fully-dead page: skipped without decoding a byte
-          if (keepPage(p) && (deadRows == null || deadInPage < pageRows(p))) {
-            pageOrd = pageStartOrd(p)
-            pageHasDead = deadInPage > 0
+          if (keepPage(p)) {
             // count(*)-style scans project zero columns; rows still must flow
-            if (projection.isEmpty) {
-              pageN = pageRows(p)
-              rowInPage = 0
-              if (pageN > 0) return true
-            } else {
-              pages = new Array[DecodedPage](projection.length)
-              var c = 0
-              while (c < projection.length) {
-                pages(c) = decodeColumn(c, p)
-                c += 1
-              }
-              pageN = pageRows(p)
-              rowInPage = 0
-              if (pageN > 0) return true
-            }
+            pages = Array.tabulate(projection.length)(decodeColumn(_, p))
+            pageN = pageRows(p)
+            rowInPage = 0
+            if (pageN > 0) return true
           }
         }
         false
       }
 
-      private val view = if (rowPred == null) null else new PageRowView
-
-      def hasNext: Boolean = {
-        if (emitted >= limit) return false
-        while (true) {
-          if (rowInPage < pageN) {
-            // deletion vector first: a dead row must not reach the
-            // predicate, the limit, or any downstream buffer (clean pages
-            // — the common case in a selectively-deleted file — pay zero
-            // per-row probes via the pageHasDead shortcut)
-            if (pageHasDead && deadRows.contains((pageOrd + rowInPage).toInt)) {
-              rowInPage += 1
-            } else if (rowPred == null) return true
-            else {
-              // late materialization: probe the predicate through the
-              // page-backed view; a failing row is skipped without ever
-              // building a row object
-              view.pages = pages
-              view.row = rowInPage
-              if (rowPred(view)) return true
-              rowInPage += 1
-            }
-          } else if (!loadNextPage()) return false
-        }
-        false
-      }
+      def hasNext: Boolean =
+        emitted < limit && (rowInPage < pageN || loadNextPage())
 
       def next(): InternalRow = {
         if (!hasNext) throw new NoSuchElementException
         val i = rowInPage
-        lastOrd = pageOrd + i
         rowInPage += 1
         emitted += 1
         if (projection.isEmpty) InternalRow.empty

@@ -752,6 +752,21 @@ object StrawCompaction {
     def maxMtime: Long = files.map(_.meta.mtime).max
   }
 
+  /** Stream one input file's LIVE rows (its deletion vector rides along)
+    * through the scan reader. Each row is a view over vectors the reader
+    * reuses from page to page: a caller that retains a row must copy it. */
+  private def foreachLiveRow(factory: StrawPartitionReaderFactory, f: BinFile)(
+      fn: org.apache.spark.sql.catalyst.InternalRow => Unit): Unit = {
+    val reader = factory.createColumnarReader(
+      StrawInputPartition(f.meta.path, 0, Int.MaxValue, Long.MaxValue, f.dvPath, f.dvLen))
+    try {
+      while (reader.next()) {
+        val it = reader.get().rowIterator()
+        while (it.hasNext) fn(it.next())
+      }
+    } finally reader.close()
+  }
+
   /** Compact `dir` in place. Returns counts; a table with nothing to do
     * (fewer than two small files per group) is a no-op.
     *
@@ -894,26 +909,13 @@ object StrawCompaction {
           try {
             ordering match {
               case None =>
-                for (f <- bin.files) {
-                  // the input's DV rides along: only LIVE rows survive the
-                  // rewrite, and the output carries no sidecar
-                  val reader = factory.createReader(
-                    StrawInputPartition(f.meta.path, 0, Int.MaxValue, Long.MaxValue,
-                      f.dvPath, f.dvLen))
-                  try { while (reader.next()) writer.write(reader.get()) }
-                  finally reader.close()
-                }
+                // only LIVE rows survive the rewrite, and the output
+                // carries no sidecar
+                for (f <- bin.files) foreachLiveRow(factory, f)(writer.write)
               case Some(ord) =>
                 val buf = scala.collection.mutable.ArrayBuffer
                   .empty[org.apache.spark.sql.catalyst.InternalRow]
-                for (f <- bin.files) {
-                  val reader = factory.createReader(
-                    StrawInputPartition(f.meta.path, 0, Int.MaxValue, Long.MaxValue,
-                      f.dvPath, f.dvLen))
-                  // copy: the reader reuses its row buffer across next()
-                  try { while (reader.next()) buf += reader.get().copy() }
-                  finally reader.close()
-                }
+                for (f <- bin.files) foreachLiveRow(factory, f)(buf += _.copy())
                 val arr = buf.toArray
                 if (zOrder)
                   MaintenanceOps.zOrderSort(arr,
@@ -1055,13 +1057,7 @@ object StrawCompaction {
             jobId)
           var ok = false
           try {
-            for (f <- bin.files) {
-              val reader = factory.createReader(
-                StrawInputPartition(f.meta.path, 0, Int.MaxValue, Long.MaxValue,
-                  f.dvPath, f.dvLen))
-              try { while (reader.next()) writer.write(reader.get()) }
-              finally reader.close()
-            }
+            for (f <- bin.files) foreachLiveRow(factory, f)(writer.write)
             val msg = writer.commit().asInstanceOf[StrawCommitMessage]
             ok = true
             (bin, msg.files)

@@ -106,7 +106,14 @@ private[spark] object StrawDml {
     * exactly row-evaluable) go to the native merge-on-read command;
     * anything else builds the scan-based plan HERE (so subqueries live in
     * a Filter node, which CheckAnalysis permits) and goes to
-    * [[StrawUpdateScanCommand]]. */
+    * [[StrawUpdateScanCommand]].
+    *
+    * Why the native matcher stays: on a 60k-row lineitem table (sf0.01,
+    * `local[3]`, 4 vCPUs) an UPDATE of a 1% key range took 0.106 s median
+    * and 1 job through [[StrawUpdate]], 0.285 s and 3 jobs through
+    * [[StrawScanDml]]; a DELETE of the same range 0.083 s native against
+    * 0.158 s scan-based (30 alternating pairs after 6 warm-ups, equal
+    * end-state digests; a single series, for attribution, not a baseline). */
   def rewriteUpdate(table: StrawboatTable,
       rel: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation,
       assignments: Seq[Assignment], condition: Option[Expression]): LogicalPlan = {
@@ -299,6 +306,12 @@ case class StrawMergeCommand(path: String, pinned: Option[Long],
     // richer (conditional or partial clauses, renamed keys, exotic key
     // types) routes to the generalized scan-based path below. Detection
     // never throws — unsupported-for-fast just means "take the other road".
+    // Why the fast path stays: a keyed upsert of 1,200 source rows into a
+    // 60k-row lineitem table (sf0.01, `local[3]`, 4 vCPUs) took 0.387 s
+    // median [IQR 0.360–0.434] and 6 jobs through StrawMerge, 0.830 s
+    // [0.768–0.854] and 10 jobs through StrawMergeScan, which was faster in
+    // 0 of 30 alternating pairs (6 warm-ups, equal end-state digests; a
+    // single series, for attribution, not a baseline).
     val fastKeys: Option[Seq[String]] = {
       val pairs = StrawDml.conjuncts(cond).map {
         case EqualTo(l, r) => (StrawDml.uncast(l), StrawDml.uncast(r)) match {

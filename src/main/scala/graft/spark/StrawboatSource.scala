@@ -1421,23 +1421,10 @@ class StrawScan(
     parts.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // type-widened files (lossless schema evolution) need the converting
-    // row reader; the flag is exact — planning holds every footer — and
-    // scoped to the columns this scan actually READS (a widened column the
-    // projection dropped must not cost the scan its vectorization)
-    val readCols: Set[String] =
-      requiredSchema.fieldNames.toSet ++ exactFilters.flatMap(_.references)
-    val typeWidened = footers.exists { pf =>
-      // synth stats carry the file's exact schema — no footer IO needed
-      pf.statsFooter.schema.fields.exists(fl => readCols.contains(fl.name) &&
-        fullSchema.fields.find(_.name == fl.name)
-          .exists(tf => tf.dataType != fl.dataType))
-    }
+  override def createReaderFactory(): PartitionReaderFactory =
     new StrawPartitionReaderFactory(fullSchema, requiredSchema,
       new org.apache.spark.util.SerializableConfiguration(StrawIO.conf), topN,
-      exactFilters, typeWidened, appendFile, mapping, appendPos)
-  }
+      exactFilters, appendFile, mapping, appendPos)
 
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new StrawScanMetrics.PagesRead, new StrawScanMetrics.PagesPruned)
@@ -1726,29 +1713,10 @@ class StrawPartitionReaderFactory(fullSchema: StructType, requiredSchema: Struct
     serConf: org.apache.spark.util.SerializableConfiguration,
     topN: Option[TopNPushdown.Spec] = None,
     exactFilters: Array[Filter] = Array.empty,
-    typeWidened: Boolean = false,
     appendFile: Boolean = false,
     mapping: ColumnMappingState = ColumnMappingState.Empty,
     appendPos: Boolean = false)
   extends PartitionReaderFactory {
-
-  /** `_file` metadata column: every produced row gets the partition's data
-    * file path appended LAST (matching the scan's declared read schema).
-    * One constant single-field row per reader — no per-row allocation. */
-  private def withFileColumn(base: PartitionReader[InternalRow], path: String)
-      : PartitionReader[InternalRow] =
-    if (!appendFile) base
-    else new PartitionReader[InternalRow] {
-      private val fileRow =
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](UTF8String.fromString(path)))
-      private val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      override def next(): Boolean = base.next()
-      override def get(): InternalRow = joined(base.get(), fileRow)
-      override def close(): Unit = base.close()
-      override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-        base.currentMetricsValues()
-    }
 
   // Filters fully consumed by the scan (no residual Filter node above):
   // evaluating them here is a CORRECTNESS obligation. They may reference
@@ -1780,12 +1748,18 @@ class StrawPartitionReaderFactory(fullSchema: StructType, requiredSchema: Struct
     if (appendPos) None
     else topN.filter(_.cols.forall(c => requiredSchema.fieldNames.contains(c.name)))
 
-  /** Chain per-file readers into one partition reader — shared by the
-    * key-grouped and bucket-grouped (row AND columnar) paths. */
+  /** Chain per-file readers into one partition reader — the key-grouped,
+    * bucket-grouped and bin-packed partitions. Task metrics sum over the
+    * finished readers and the current one. */
   private def chainReaders[T](files: Iterator[StrawInputPartition],
       open: StrawInputPartition => PartitionReader[T]): PartitionReader[T] =
     new PartitionReader[T] {
       private var cur: PartitionReader[T] = _
+      private val finished = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+      private def addMetrics(into: scala.collection.mutable.Map[String, Long],
+          r: PartitionReader[T]): Unit =
+        r.currentMetricsValues().foreach(m =>
+          into(m.name()) = into.getOrElse(m.name(), 0L) + m.value())
       override def next(): Boolean = {
         while (true) {
           if (cur == null) {
@@ -1793,6 +1767,7 @@ class StrawPartitionReaderFactory(fullSchema: StructType, requiredSchema: Struct
             cur = open(files.next())
           }
           if (cur.next()) return true
+          addMetrics(finished, cur)
           cur.close()
           cur = null
         }
@@ -1800,264 +1775,51 @@ class StrawPartitionReaderFactory(fullSchema: StructType, requiredSchema: Struct
       }
       override def get(): T = cur.get()
       override def close(): Unit = if (cur != null) cur.close()
+      override def currentMetricsValues()
+          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+        val all = finished.clone()
+        if (cur != null) addMetrics(all, cur)
+        all.map { case (n, v) => StrawScanMetrics.Value(n, v) }.toArray
+      }
     }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    StrawIO.install(serConf.value) // driver's session conf, shipped per task
-    partition match {
-      case kp: StrawKeyedPartition =>
-        // chain the value's files through single-file readers
-        return chainReaders(kp.files.iterator.map(f =>
-          StrawInputPartition(f, 0, Int.MaxValue, Long.MaxValue)), createReader)
-      case bp: StrawBucketPartition =>
-        // chain the bucket's files (deletion vectors threaded per file)
-        return chainReaders(bp.files.iterator.map { case (f, dvPath, dvLen) =>
-          StrawInputPartition(f, 0, Int.MaxValue, Long.MaxValue, dvPath, dvLen)
-        }, createReader)
-      case pp: StrawPackedPartition =>
-        // bin-packed small slices: chain the same per-slice readers
-        return chainReaders(pp.slices.iterator, createReader)
-      case _ =>
-    }
-    val p = partition.asInstanceOf[StrawInputPartition]
-    // the slice's deletion vector: loaded once per task (process-wide
-    // (path, len) cache behind it), applied INSIDE the page iterator so
-    // limits, consumed filters, and Top-N all see only live rows
-    val dead: org.roaringbitmap.RoaringBitmap =
-      if (p.dvPath == null) null else DeletionVector.read(p.dvPath, p.dvLen)
-    val input = StrawIO.open(p.path)
-    // footer parse / schema resolution can throw (corrupt file, evolved
-    // type mismatch) — don't leak the open stream on the error path
-    val (footer, resolved) =
-      try {
-        // version-keyed cache: a file split into many page-range partitions
-        // parses its footer once per executor, not once per task. Spellings
-        // translate to the logical namespace before name resolution
-        // (rename/drop history; identity on unmapped tables).
-        val f = mapping.toLogicalFooter(FooterCache.get(p.path, input))
-        // resolve required fields against THIS file's schema by name (files
-        // in a dir may differ after an evolving append); missing → null
-        (f, StrawSchemaResolver.resolve(p.path, f.schema, readSchemaExt))
-      } catch { case e: Throwable => input.close(); throw e }
-    // the type each present column DECODES as: the file's own type when a
-    // flat widening converts after decode; the (possibly struct-pruned)
-    // required type when the per-leaf reader materializes the pruned shape
-    // directly (no conversion step); the maximal decodable subset at file
-    // leaf types for a nested-evolved column (missing/widened struct
-    // fields — convert() maps values to the required shape after decode)
-    val decodeDts: Array[org.apache.spark.sql.types.DataType] =
-      resolved.indices.map { c =>
-        if (resolved(c) < 0) null
-        else {
-          val fileDt = footer.schema.fields(resolved(c)).dataType
-          val readDt = readSchemaExt.fields(c).dataType
-          if (fileDt == readDt) readDt
-          else if (StrawSchemaResolver.widenable(fileDt, readDt)) fileDt
-          else if (LeafLayout.pruneCompatible(fileDt, readDt)) readDt
-          else StrawSchemaResolver.decodeShape(fileDt, readDt)
-        }
-      }.toArray
-    val projCols: Array[graft.format.ProjCol] =
-      resolved.indices.collect { case c if resolved(c) >= 0 =>
-        graft.format.ProjCol.plan(footer, resolved(c), decodeDts(c))
-      }.toArray
+  // every strawboat scan is columnar: one reader serves every partition
+  // shape, column type, schema generation and pushdown (consumed filters,
+  // deletion vectors, Top-N, `_file`/`_pos`)
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
-    // pushed Top-N: bounded candidate buffer + dynamic page pruning against
-    // the primary sort column's zone maps (pages that can't beat the k-th
-    // candidate are skipped without IO)
-    val topK: Option[(TopKBuffer, Array[Int], Array[org.apache.spark.sql.types.DataType])] =
-      topNActive.map { s =>
-        val idx = s.cols.map(c => requiredSchema.fieldIndex(c.name)).toArray
-        val dts = idx.map(requiredSchema.fields(_).dataType)
-        (new TopKBuffer(TopNPushdown.rowComparator(idx, dts, s), s.limit), idx, dts)
-      }
-    val primaryFileIdx = topNActive
-      .map(s => footer.schema.fields.indexWhere(_.name == s.cols.head.name))
-      .getOrElse(-1)
-    val keepRange: Int => Boolean = pg => pg >= p.pageStart && pg < p.pageEnd
-    val keep: Int => Boolean = topK match {
-      case Some((buf, idx, dts)) if primaryFileIdx >= 0 && footer.columns.nonEmpty =>
-        pg => keepRange(pg) && {
-          val w = buf.worst
-          w == null || {
-            val primary = topNActive.get.cols.head
-            val worstIsNull = w.isNullAt(idx(0))
-            val worstKey =
-              if (worstIsNull) None
-              else TopNPushdown.toSortable(dts(0), w.get(idx(0), dts(0)))
-            // sort keys are flat top-level columns — topLeaf IS the column
-            TopNPushdown.pageMayBeat(
-              footer.topLeaf(primaryFileIdx).pages(pg), primary, worstKey, worstIsNull)
-          }
-        }
-      case _ => keepRange
-    }
-    // task metrics: decoded vs pruned pages (only this partition's range —
-    // out-of-range pages belong to sibling partitions)
-    var pagesRead = 0L
-    var pagesPruned = 0L
-    val countingKeep: Int => Boolean = pg => {
-      val k = keep(pg)
-      if (k) pagesRead += 1 else if (keepRange(pg)) pagesPruned += 1
-      k
-    }
-    // a widened column (file narrower than table — lossless type evolution)
-    // converts during materialization; a struct-PRUNED column does NOT (the
-    // reader already produced the pruned shape)
-    val hasWidened = resolved.indices.exists(c => resolved(c) >= 0 &&
-      decodeDts(c) != readSchemaExt.fields(c).dataType)
-    // fast path: with every read column present at the table's exact type,
-    // the predicate pushes INTO the page iterator — failing rows are probed
-    // through a page-backed view and never materialized (late
-    // materialization), and the iterator's limit counts passing rows. The
-    // schema-evolution paths (null-filled or widened columns) evaluate
-    // after conversion instead — the view would hand the predicate
-    // file-typed values.
-    val predInIt: InternalRow => Boolean =
-      if (resolved.forall(_ >= 0) && !hasWidened) rowPred.orNull else null
-    // a pushed limit counts FILTER-PASSING rows: when the predicate runs
-    // outside the iterator it must be applied after filtering
-    val preLimit = if (rowPred.isDefined && predInIt == null) Long.MaxValue else p.limit
-    val it = StrawFileReader.rows(input, footer, projCols, keepPage = countingKeep,
-      limit = preLimit, rowPred = predInIt, deadRows = dead)
-    def metrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-      Array(StrawScanMetrics.Value("pagesRead", pagesRead),
-        StrawScanMetrics.Value("pagesPruned", pagesPruned))
-
-    val decoded: Iterator[InternalRow] =
-      if (resolved.forall(_ >= 0) && !hasWidened) it // exact match: pass through
-      else new Iterator[InternalRow] {
-        // schema-evolved file: null-fill missing fields and widen narrower
-        // ones (row is REUSED — consumers that retain rows must copy)
-        private val conv: Array[Any => Any] = resolved.indices.map { c =>
-          if (resolved(c) < 0) null
-          else {
-            val from = decodeDts(c)
-            val to = readSchemaExt.fields(c).dataType
-            if (from == to) identity[Any] _
-            else StrawSchemaResolver.convert(from, to)
-          }
-        }.toArray
-        private val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(resolved.length)
-        override def hasNext: Boolean = it.hasNext
-        override def next(): InternalRow = {
-          val r = it.next()
-          var c = 0
-          var pi = 0
-          while (c < resolved.length) {
-            if (resolved(c) < 0) out.update(c, null)
-            else {
-              out.update(c,
-                if (r.isNullAt(pi)) null
-                else conv(c)(r.get(pi, decodeDts(c))))
-              pi += 1
-            }
-            c += 1
-          }
-          out
-        }
-      }
-
-    // consumed-filter evaluation (correctness-critical: no Filter node
-    // remains above) when it didn't already run inside the iterator, then
-    // projection back down to requiredSchema when the filter needed pruned
-    // columns, then the post-filter limit
-    val filtered =
-      if (predInIt != null) decoded
-      else rowPred match {
-        case Some(pred) => decoded.filter(pred)
-        case None => decoded
-      }
-    val narrowed: Iterator[InternalRow] =
-      if (readSchemaExt.length == requiredSchema.length) filtered
-      else {
-        val proj = org.apache.spark.sql.catalyst.ProjectingInternalRow(
-          requiredSchema, requiredSchema.indices)
-        filtered.map { r => proj.project(r); proj }
-      }
-    val producedNarrow: Iterator[InternalRow] =
-      if (predInIt == null && rowPred.isDefined && p.limit != Long.MaxValue)
-        narrowed.take(math.min(p.limit, Int.MaxValue.toLong).toInt)
-      else narrowed
-    // `_pos`: the conversion/filter/projection chain above is strictly
-    // 1:1-lazy over `it`, so at each emitted element `it.lastOrdinal` IS
-    // that row's file-absolute ordinal — captured here, joined last
-    val produced: Iterator[InternalRow] =
-      if (!appendPos) producedNarrow
-      else {
-        val posRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-        val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-        producedNarrow.map { r => posRow.update(0, it.lastOrdinal); joined(r, posRow) }
-      }
-
-    val reader = topK match {
-      case Some((buf, _, _)) =>
-        // the buffer sees exactly the filter-passing rows (pred above) — a
-        // failing row could otherwise evict a true candidate
-        new PartitionReader[InternalRow] {
-          private var drained: Iterator[InternalRow] = _
-          private var row: InternalRow = _
-          override def next(): Boolean = {
-            if (drained == null) {
-              produced.foreach(buf.offer) // offer() copies retained rows
-              drained = buf.drain()
-            }
-            val h = drained.hasNext
-            if (h) row = drained.next()
-            h
-          }
-          override def get(): InternalRow = row
-          override def close(): Unit = input.close()
-          override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-            metrics()
-        }
-      case None =>
-        new PartitionReader[InternalRow] {
-          private var row: InternalRow = _
-          override def next(): Boolean = {
-            val h = produced.hasNext
-            if (h) row = produced.next()
-            h
-          }
-          override def get(): InternalRow = row
-          override def close(): Unit = input.close()
-          override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-            metrics()
-        }
-    }
-    withFileColumn(reader, p.path)
-  }
-
-  // consumed filters stay vectorized: the columnar reader evaluates them
-  // in-reader (zero-copy for all-pass pages, survivor compaction for mixed)
-  // survivor compaction (consumed filters / deletion vectors) covers the
-  // FULL vectorizable surface (flat, struct trees, arrays — see
-  // ColumnarSupport.isCompactable), so filtering reads no longer force the
-  // row path anywhere
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    !partition.isInstanceOf[StrawKeyedPartition] && topNActive.isEmpty &&
-      !typeWidened &&
-      readSchemaExt.fields.forall(f => ColumnarSupport.isVectorizable(f.dataType))
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "strawboat scans are columnar: use createColumnarReader")
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    StrawIO.install(serConf.value)
+    StrawIO.install(serConf.value) // the planner's Hadoop conf, shipped per task
     partition match {
+      case kp: StrawKeyedPartition =>
+        // chain the value's files through per-file readers
+        return chainReaders(kp.files.iterator.map(f =>
+          StrawInputPartition(f, 0, Int.MaxValue, Long.MaxValue)), createColumnarReader)
       case bp: StrawBucketPartition =>
-        // chain the bucket's files through per-file VECTORIZED readers —
+        // chain the bucket's files (deletion vectors threaded per file) —
         // the storage-partitioned layout keeps whole-stage columnar speed
         return chainReaders(bp.files.iterator.map { case (f, dvPath, dvLen) =>
           StrawInputPartition(f, 0, Int.MaxValue, Long.MaxValue, dvPath, dvLen)
         }, createColumnarReader)
       case pp: StrawPackedPartition =>
+        // bin-packed small slices: chain the same per-slice readers
         return chainReaders(pp.slices.iterator, createColumnarReader)
       case _ =>
     }
     val p = partition.asInstanceOf[StrawInputPartition]
+    // the slice's deletion vector: loaded once per task (process-wide
+    // (path, len) cache behind it), applied INSIDE the reader so limits,
+    // consumed filters, and Top-N all see only live rows
     val dead: org.roaringbitmap.RoaringBitmap =
       if (p.dvPath == null) null else DeletionVector.read(p.dvPath, p.dvLen)
     val base = new ColumnarSupport.StrawColumnarReader(p, readSchemaExt,
-      requiredSchema.length, rowPred.orNull, dead, mapping, appendPos)
+      requiredSchema.length, rowPred.orNull, dead, mapping, appendPos,
+      topNActive.orNull)
     if (!appendFile) base
     else new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
       // _file stays vectorized: one constant string vector appended per

@@ -391,12 +391,6 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  // set while planning each batch: whether any admitted file needs the
-  // converting row reader (type widening) — micro-batches are serial per
-  // query, and the engine calls planInputPartitions before
-  // createReaderFactory for the same batch
-  @volatile private var batchTypeWidened = false
-
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     // derived from the two offsets ALONE (log mode: plus the write-once
     // commit files they index): deterministic on replay from a checkpoint —
@@ -458,10 +452,7 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
       val in = StrawIO.open(f)
       try (f, FooterCache.get(f, in)) finally in.close()
     }
-    var widened = false
-    val parts = footers.flatMap { case (file, footer) =>
-      widened ||= footer.schema.fields.exists(fl =>
-        fullSchema.fields.find(_.name == fl.name).exists(_.dataType != fl.dataType))
+    footers.flatMap { case (file, footer) =>
       val dv = dvByPath.getOrElse(file, null)
       val (dvPath, dvLen) = if (dv == null) (null, 0L) else (dv.path, dv.len)
       if (footer.columns.isEmpty) {
@@ -495,18 +486,14 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
         runs.result()
       }
     }.toArray
-    batchTypeWidened = widened
-    parts
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     // exactFilters forwarded defensively: if the engine ever pushes filters
     // on the streaming path, the scan consumed them — readers must apply.
-    // typeWidened from THIS batch's files routes widened generations to the
-    // converting row reader instead of tripping the columnar backstop.
     new StrawPartitionReaderFactory(fullSchema, requiredSchema,
       new org.apache.spark.util.SerializableConfiguration(StrawIO.conf),
-      topN = None, exactFilters = exactFilters, typeWidened = batchTypeWidened,
+      topN = None, exactFilters = exactFilters,
       mapping = StrawLog.mappingAt(path))
 }
 

@@ -15,7 +15,11 @@ import graft.format.{PageMeta, StrawFormat}
   * (b) once a partition's candidate buffer is full, pages whose zone-map
   * bound on the primary sort column provably cannot beat the current k-th
   * candidate are skipped without IO — a sorted-ish table answers ORDER BY x
-  * LIMIT k from a handful of pages. */
+  * LIMIT k from a handful of pages. The scan reader
+  * ([[ColumnarSupport.StrawColumnarReader]]) applies both: it offers each
+  * page's surviving rows to a [[TopKBuffer]], tests every page with
+  * [[pageMayBeat]] before decoding it, and emits the drained candidates as
+  * one batch. */
 object TopNPushdown {
 
   final case class SortCol(name: String, desc: Boolean, nullsFirst: Boolean)

@@ -188,7 +188,7 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val topIn = read(out).filter(col("id") >= 998L).orderBy(col("id").asc)
       .limit(5).select("id").as[Long].collect()
     assert(topIn.toSeq == Seq(998L, 999L, 1512L, 1513L, 1514L))
-    // row reader via a global limit over everything
+    // whole-table count sees only the live rows
     assert(read(out).count() == 7488)
   }
 

@@ -322,6 +322,10 @@ class StrawboatSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // later pages are skipped, while a full scan must fail
     corruptAllPagesExceptFirst(out)
     assert(topk(spark.read.format("strawboat").load(out)) == expect) // pruned => no IO on corrupt pages
+    // the scan reports the pages the Top-N bound skipped
+    val q = spark.read.format("strawboat").load(out).orderBy(col("v").desc, col("tag")).limit(7)
+    q.collect(): Unit
+    assert(ColumnarScanSpec.scanMetric(q, "pagesPruned") > 0)
     intercept[Exception] { // a full decode hits them (sum over an EXPRESSION
       // cannot push — plain count/min/max/sum are all footer-only now)
       spark.read.format("strawboat").load(out).agg(sum(col("v") + 1)).collect()
@@ -707,6 +711,8 @@ class StrawboatSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("nested types round trip through connector (row reader fallback)") {
+    // (the name predates the single reader: arrays, structs and maps all
+    // read through the columnar reader now)
     val out = s"$dir/nested"
     val df = spark.range(0, 1000).select(
       col("id"),

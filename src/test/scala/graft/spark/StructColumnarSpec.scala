@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Struct-of-flat columns through the VECTORIZED reader: plan shape,
-  * value/null fidelity against the row reader's results, struct-pruned
+  * value/null fidelity against the format-level row reader, struct-pruned
   * reads, and survivor compaction (deletion vectors) over struct vectors. */
 class StructColumnarSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -158,8 +158,7 @@ class StructColumnarSpec extends AnyFunSuite with BeforeAndAfterAll {
       else assert(r.getSeq[String](2) == Seq(s"w$id", "x", "y"), s"id=$id")
     }
     // consumed-filter compaction (the embeddings hot path: filter on a
-    // row-aligned column while reading the vector column) — row-parity
-    // against the row reader's own answer via except
+    // row-aligned column while reading the vector column)
     val filtered = after.filter(col("id") % 2 === 1).select("id", "nums", "words")
     assert(filtered.count() == 1000)
     assert(filtered.filter(col("id") === 1501).collect()(0)
@@ -216,19 +215,23 @@ class StructColumnarSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("columnar and row readers return identical struct results") {
+    import graft.format.StrawFileReader
     val out = s"$dir/t1"
-    // force the row path via a type the vectorizer refuses (array column)
-    // on a twin table, then compare against the vectorized read
-    val rowTwin = s"$dir/t1row"
-    spark.read.format("strawboat").load(out)
-      .withColumn("arr", array(col("id")))
-      .coalesce(1)
-      .write.format("strawboat").mode("overwrite").option("maxPageSize", "256")
-      .save(rowTwin)
     val vec = spark.read.format("strawboat").load(out)
       .select("id", "m").collect().map(_.toString).sorted
-    val row = spark.read.format("strawboat").load(rowTwin)
-      .select("id", "m").collect().map(_.toString).sorted
-    assert(vec.toSeq == row.toSeq)
+    // the format-level reference reader over the table's live files
+    val row = StrawLog.snapshot(out).get.entries.map(_.meta.path).flatMap { f =>
+      val in = StrawIO.open(f)
+      try {
+        val footer = StrawFileReader.readFooter(in)
+        val idx = Array("id", "m").map(footer.schema.fieldIndex)
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(org.apache.spark.sql.types.StructType(
+            idx.map(footer.schema.fields(_))))
+        StrawFileReader.rowsByField(in, footer, idx).map(toRow(_).toString).toVector
+      } finally in.close()
+    }.sorted
+    assert(vec.length == 2000)
+    assert(vec.toSeq == row)
   }
 }
