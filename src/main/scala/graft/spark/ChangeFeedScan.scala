@@ -1,10 +1,11 @@
 package graft.spark
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,10 +20,11 @@ import scala.jdk.CollectionConverters._
   *   .option("endingVersion", "5")    // optional; omitted = pinned latest
   *   .load(dir)
   * }}}
-  * One input partition per (file, change) task; each reader decodes only
-  * the pages holding wanted ordinals (positions-bitmap page skip, the
-  * common case for small DV diffs) and emits the file's schema-resolved
-  * rows plus the `_change_type` / `_commit_version` labels. No filter or
+  * One input partition per (file, change) task; each task runs the scan
+  * reader with every undelivered row dead, so a page holding no delivered
+  * ordinal is skipped without a decode (the common case for small DV
+  * diffs), and emits the file's schema-resolved rows plus the
+  * `_change_type` / `_commit_version` labels. No filter or
   * column pushdown: a feed is an audit/replication scan, read whole by
   * design (Catalyst still filters/projects above the scan). */
 private[spark] class ChangeFeedTable(dir: String, from: Long, to: Long,
@@ -72,105 +74,45 @@ private[spark] class ChangeFeedReaderFactory(dataSchemaJson: String,
     serConf: org.apache.spark.util.SerializableConfiguration,
     mapping: ColumnMappingState = ColumnMappingState.Empty)
   extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "strawboat change feeds are columnar: use createColumnarReader")
+
+  /** One change task through the scan reader: the whole file at the feed's
+    * data schema, with every row the task does not deliver dead — the
+    * positions bitmap itself when inverted (`!…`), its complement
+    * otherwise — so pages holding no delivered row are skipped undecoded.
+    * The two labels ride each batch as constant vectors. */
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[ColumnarBatch] = {
     StrawIO.install(serConf.value)
-    new ChangeFeedReader(
-      partition.asInstanceOf[ChangeFeedPartition].task, dataSchemaJson, mapping)
-  }
-}
-
-private[spark] class ChangeFeedReader(t: StrawChanges.ChangeTask,
-    dataSchemaJson: String,
-    mapping: ColumnMappingState = ColumnMappingState.Empty)
-  extends PartitionReader[InternalRow] {
-
-  private val (invert, label) =
-    if (t.changeType.startsWith("!")) (true, t.changeType.substring(1))
-    else (false, t.changeType)
-  private val positions = Option(t.positionBytes).map(StrawChanges.fromBytes)
-  private val dataSch = DataType.fromJson(dataSchemaJson).asInstanceOf[StructType]
-  private val width = dataSch.length
-
-  private val input =
-    try StrawIO.open(t.path)
-    catch {
-      case e: java.io.FileNotFoundException => throw new IllegalStateException(
-        s"strawboat: change feed needs ${t.path} (version ${t.version}) " +
-          "but it was vacuumed — derive feeds within the retention window", e)
-    }
-  private val footer = mapping.toLogicalFooter(FooterCache.get(t.path, input))
-  private val read = new MaintenanceOps.ResolvedFileRead(input, footer, dataSch)
-  private val pageRows: Array[Int] =
-    if (footer.columns.isEmpty) Array.empty
-    else footer.columns(0).pages.map(_.numValues)
-
-  // the labels are constant per task; data slots 0..width-1 refill per row
-  private val row = new GenericInternalRow(width + 2)
-  row.update(width, UTF8String.fromString(label))
-  row.update(width + 1, t.version)
-
-  private var p = 0
-  private var i = 0
-  private var ord = 0L
-  private var zeroColOrd = 0L
-  private var pages: Array[graft.format.DecodedPage] = _
-
-  private def emit(o: Long): Boolean = positions match {
-    case None => true
-    case Some(b) =>
-      val in = o <= Int.MaxValue && b.contains(o.toInt)
-      if (invert) !in else in
-  }
-
-  override def next(): Boolean = {
-    if (pageRows.isEmpty) {
-      // zero-column file: every row is all-null (labels still apply)
-      while (zeroColOrd < footer.numRows) {
-        val o = zeroColOrd
-        zeroColOrd += 1
-        if (emit(o)) return true // slots 0..width-1 never written: stay null
+    val t = partition.asInstanceOf[ChangeFeedPartition].task
+    val (invert, label) =
+      if (t.changeType.startsWith("!")) (true, t.changeType.substring(1))
+      else (false, t.changeType)
+    val dataSch = DataType.fromJson(dataSchemaJson).asInstanceOf[StructType]
+    val base =
+      try {
+        val dead = Option(t.positionBytes).map(StrawChanges.fromBytes).map(b =>
+          if (invert) b
+          else org.roaringbitmap.RoaringBitmap.flip(b, 0L,
+            FooterCache.get(t.path, t.mtime, t.len).numRows))
+        new ColumnarSupport.StrawColumnarReader(
+          StrawInputPartition(t.path, 0, Int.MaxValue, Long.MaxValue), dataSch,
+          dataSch.length, dead = dead.orNull, mapping = mapping)
+      } catch {
+        case e: java.io.FileNotFoundException => throw new IllegalStateException(
+          s"strawboat: change feed needs ${t.path} (version ${t.version}) " +
+            "but it was vacuumed — derive feeds within the retention window", e)
       }
-      return false
-    }
-    while (p < pageRows.length) {
-      if (pages == null) {
-        val n = pageRows(p)
-        // page-skip: a positions-mode task decodes only pages holding a
-        // wanted ordinal
-        val wanted = positions match {
-          case Some(b) if !invert =>
-            ord <= Int.MaxValue &&
-              b.rangeCardinality(ord, math.min(ord + n, Int.MaxValue.toLong + 1)) > 0
-          case _ => true
-        }
-        if (wanted) {
-          pages = read.decodePages(p)
-          i = 0
-        } else {
-          ord += n
-          p += 1
-        }
-      } else {
-        val n = pageRows(p)
-        while (i < n) {
-          val o = ord
-          val at = i
-          i += 1
-          ord += 1
-          if (emit(o)) {
-            read.fill(pages, at, row)
-            return true
-          }
-        }
-        pages = null
-        p += 1
-      }
-    }
-    false
+    val typeVec = new ConstantColumnVector(1, StringType)
+    typeVec.setUtf8String(UTF8String.fromString(label))
+    val versionVec = new ConstantColumnVector(1, LongType)
+    versionVec.setLong(t.version)
+    ColumnarSupport.withConstants(base, typeVec, versionVec)
   }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = input.close()
 }
 
 // ---------------------------------------------------------------------------

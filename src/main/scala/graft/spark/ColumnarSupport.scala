@@ -14,7 +14,8 @@ import graft.format._
 /** The strawboat scan reader: one ColumnarBatch per page group, decoded
   * pages bulk-filled into OnHeapColumnVectors so everything above the scan
   * stays inside whole-stage codegen. Every strawboat scan (batch and
-  * streaming), compaction and rebucket reads through [[StrawColumnarReader]].
+  * streaming), compaction, rebucket, DELETE/UPDATE matching, MERGE key
+  * probe and change feed reads through [[StrawColumnarReader]].
   * Shapes without a bulk fill (maps, decimals wider than 18 digits) and
   * schema-evolved columns fill value by value through [[append]]. */
 object ColumnarSupport {
@@ -285,6 +286,23 @@ object ColumnarSupport {
       var j = 0
       while (j < n) { copyValue(flat, src, positions(j), dst, j); j += 1 }
   }
+
+  /** `base` with the constant vectors `consts` appended to every batch it
+    * yields: a per-partition value (`_file`, a change feed's labels) stays
+    * vectorized, one shared vector per column. */
+  def withConstants(base: PartitionReader[ColumnarBatch],
+      consts: ColumnVector*): PartitionReader[ColumnarBatch] =
+    new PartitionReader[ColumnarBatch] {
+      override def next(): Boolean = base.next()
+      override def get(): ColumnarBatch = {
+        val b = base.get()
+        new ColumnarBatch(Array.tabulate[ColumnVector](b.numCols())(b.column) ++ consts,
+          b.numRows())
+      }
+      override def close(): Unit = base.close()
+      override def currentMetricsValues(): Array[CustomTaskMetric] =
+        base.currentMetricsValues()
+    }
 
   /** The scan reader over one page slice [pageStart, pageEnd) of one file.
     * `readSchema` may extend the produced schema with trailing filter-only

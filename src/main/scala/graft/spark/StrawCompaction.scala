@@ -73,9 +73,12 @@ import graft.format.WriteOptions
   * fan-out with rollback, and the atomic log switch + vacuum epilogue. The
   * row-level ops all mutate through deletion vectors and share one
   * [[snapshot]], one candidate ladder, one staging step ([[stageFrame]])
-  * and one commit epilogue ([[commitDv]]). One implementation, so a fix to
-  * the rollback, marker or mtime-stamping contract cannot diverge between
-  * the ops. */
+  * and one commit epilogue ([[commitDv]]). Every file they read — DML
+  * matching, MERGE key probes, compaction — goes through the scan's
+  * [[ColumnarSupport.StrawColumnarReader]], so deletion vectors, consumed
+  * conditions, `_pos` ordinals and schema evolution resolve exactly as a
+  * query sees them. One implementation, so a fix to the rollback, marker,
+  * mtime-stamping or read contract cannot diverge between the ops. */
 private[spark] object MaintenanceOps {
 
   /** Row-aligned leaf paths of `footer`'s schema that carry page blooms —
@@ -94,9 +97,12 @@ private[spark] object MaintenanceOps {
   }
 
   /** One candidate for a row-matching op: the file, its current deletion
-    * vector (null = fully live), and its footer row count. */
+    * vector (null = fully live), its footer row count, and the reader
+    * slices over the pages its zone maps keep, each carrying `dv` (callers
+    * that match outside the scan reader ignore them). */
   final case class Candidate(meta: StrawIO.FileMeta,
-      dv: DeletionVector.DvInfo, numRows: Long) extends Serializable
+      dv: DeletionVector.DvInfo, numRows: Long,
+      slices: Seq[StrawInputPartition]) extends Serializable
 
   /** One row-level op's view of the table, taken ONCE: the listing, the
     * rename/drop column mapping, the merged LOGICAL schema that conditions,
@@ -141,19 +147,15 @@ private[spark] object MaintenanceOps {
       lf.synth.forall(sf =>
         ZoneMapFilter.keptPages(mapping.toLogicalFooter(sf), filters)(0))
     }
+    // zero-column files carry footer-only rows that read as all-null — an
+    // IsNull-style condition can match them, so they keep their one slice
+    // (the scan's zero-column path mirrors this)
     val candidates = StrawIO.mapParallel(afterStats) { lf =>
       val m = lf.meta
       val footer = mapping.toLogicalFooter(FooterCache.get(m.path, m.mtime, m.len))
-      val keep = ZoneMapFilter.keptPages(footer, filters)
-      val nPages = footer.columns.headOption.map(_.pages.length).getOrElse(0)
-      (Candidate(m, lf.dv, footer.numRows), nPages, keep)
-    }.collect {
-      // zero-column files (nPages == 0) carry footer-only rows that read
-      // as all-null — an IsNull-style condition can match them, so they
-      // stay candidates (the scan's zero-column path mirrors this)
-      case (c, nPages, keep)
-        if (0 until nPages).exists(keep) || (nPages == 0 && c.numRows > 0) => c
-    }
+      Candidate(m, lf.dv, footer.numRows, StrawInputPartition.keptRuns(m.path,
+        footer, ZoneMapFilter.keptPages(footer, filters), lf.dv))
+    }.filter(_.slices.nonEmpty)
     (candidates, listed.size - candidates.size)
   }
 
@@ -172,71 +174,6 @@ private[spark] object MaintenanceOps {
       case (i, Right(e)) => (i, e.eval(row))
     }
     vals.foreach { case (i, v) => row.update(i, v) }
-  }
-
-  /** Ordinal-aware projection over ONE open file for the maintenance scans
-    * ([[dvMatch]], [[graft.spark.StrawMerge]]): resolves a sub-schema
-    * against the file's own schema (absent → null, narrower → decode
-    * native and widen — the scan's resolution rules), decodes one page of
-    * every projected column on demand, and fills a reused row. One
-    * implementation so the maintenance ops cannot drift from each other. */
-  private[spark] final class ResolvedFileRead(
-      input: graft.format.RandomInput,
-      footer: graft.format.StrawFooter,
-      sub: org.apache.spark.sql.types.StructType) {
-    private val idx = sub.fields.map(f =>
-      footer.schema.fields.indexWhere(_.name == f.name))
-    private val plans = idx.map(ci =>
-      if (ci < 0) null
-      else graft.format.ProjCol.plan(footer, ci, footer.schema.fields(ci).dataType))
-    private val convs = idx.zipWithIndex.map { case (ci, c) =>
-      if (ci < 0) null
-      else {
-        val from = footer.schema.fields(ci).dataType
-        val to = sub.fields(c).dataType
-        // convert() covers flat widening AND nested evolution (struct
-        // fields added/widened/pruned since this file was written)
-        if (from == to) identity[Any] _ else StrawSchemaResolver.convert(from, to)
-      }
-    }
-
-    private def decodeOne(plan: graft.format.ProjCol, p: Int): graft.format.DecodedPage =
-      if (plan.isSingleFlat) {
-        val li = plan.globalLeaves(0)
-        val pm = footer.columns(li).pages(p)
-        val bytes = input.readFully(footer.columns(li).pageOffsets(p), pm.compLen.toInt)
-        graft.format.PageDecoder.decode(plan.leafDts(0),
-          graft.format.ByteIO.reader(bytes))
-      } else {
-        val decoded = new Array[(Array[graft.format.LevelHeader],
-          graft.format.DecodedPage)](plan.globalLeaves.length)
-        var l = 0
-        while (l < plan.globalLeaves.length) {
-          val li = plan.globalLeaves(l)
-          val pm = footer.columns(li).pages(p)
-          val bytes = input.readFully(footer.columns(li).pageOffsets(p), pm.compLen.toInt)
-          decoded(l) = graft.format.LeafDecoder.decode(
-            plan.levelKinds(l), plan.leafDts(l), graft.format.ByteIO.reader(bytes))
-          l += 1
-        }
-        graft.format.LeafDecoder.assemble(plan.readDt, decoded)
-      }
-
-    /** Decode page `p` of every projected column (null where absent). */
-    def decodePages(p: Int): Array[graft.format.DecodedPage] =
-      plans.map(pl => if (pl == null) null else decodeOne(pl, p))
-
-    /** Fill `row` (width `sub.length`) from `pages` at in-page index `i`,
-      * null-filling absent columns and widening narrower ones. */
-    def fill(pages: Array[graft.format.DecodedPage], i: Int,
-        row: org.apache.spark.sql.catalyst.expressions.GenericInternalRow): Unit = {
-      var c = 0
-      while (c < pages.length) {
-        val v = if (pages(c) == null) null else pages(c).valueOrNull(i)
-        row.update(c, if (v == null) null else convs(c)(v))
-        c += 1
-      }
-    }
   }
 
   /** Z-ORDER an in-memory batch (a compaction bin) across `cols`, in
@@ -317,15 +254,19 @@ private[spark] object MaintenanceOps {
     * finds the LIVE rows where the `filters` conjunction is TRUE (SQL 3VL)
     * and, instead of rewriting the file, unions their ordinals into the
     * file's deletion vector — writing a replacement sidecar beside the data
-    * (unreferenced until the caller's log commit). Matching reads ONLY the
-    * condition's columns, page-skipped by the footer's zone maps with
-    * file-absolute ordinal accounting, so a 10-row takedown on a wide
-    * 1 GB file costs a few filter-column pages and a tiny sidecar.
+    * (unreferenced until the caller's log commit). Matching is the scan
+    * reader over the candidate's zone-map-kept slices with the condition
+    * consumed, no data column produced and `_pos` appended: it decodes
+    * ONLY the condition's columns, and every row it emits is a live match,
+    * so a 10-row takedown on a wide 1 GB file costs a few filter-column
+    * pages and a tiny sidecar.
     *
-    * With `assigns` (UPDATE), each page's matched rows are ALSO decoded in
-    * full, the assignments applied, and the results staged as new files
-    * (the merge-on-read update: old versions die via the DV, new versions
-    * append) — non-matching rows are never rewritten.
+    * With `assigns` (UPDATE), a second reader pass reads the file whole at
+    * the table schema with every non-matched row dead — pages without a
+    * match are skipped undecoded — applies the assignments to each matched
+    * row and stages the results as new files (the merge-on-read update: old
+    * versions die via the DV, new versions append); non-matching rows are
+    * never rewritten.
     *
     * A file whose union covers every row reports `fullDead` (the caller
     * removes it outright instead of carrying an all-dead sidecar). Nothing
@@ -347,133 +288,37 @@ private[spark] object MaintenanceOps {
       spark.sparkContext.parallelize(candidates, candidates.size).map { cand =>
         StrawIO.install(serConf.value)
         val m = cand.meta
-        val tableSchema = org.apache.spark.sql.types.DataType
-          .fromJson(schemaJson).asInstanceOf[org.apache.spark.sql.types.StructType]
-        val existing: org.roaringbitmap.RoaringBitmap =
-          if (cand.dv == null) null else DeletionVector.read(cand.dv.path, cand.dv.len)
-        val as = assignsB.value
-        val flt = filtersB.value
-        // the condition references a subset of (flat) table columns — the
-        // match pass reads only those
-        val refs = flt.flatMap(_.references).distinct
-        val subSchema = org.apache.spark.sql.types.StructType(
-          refs.flatMap(n => tableSchema.fields.find(_.name == n)))
-        val pred = RowFilterEval.build(subSchema, flt).getOrElse(
-          throw new IllegalStateException(
-            "strawboat: condition no longer row-evaluable on the executor"))
-        val input = StrawIO.open(m.path)
+        val tableSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+        val matched = new org.roaringbitmap.RoaringBitmap()
+        val reader = new StrawPartitionReaderFactory(tableSchema, new StructType(),
+          serConf, exactFilters = filtersB.value, mapping = mapping, appendPos = true)
+          .createColumnarReader(StrawPackedPartition(cand.slices))
         try {
-          val footer = mapping.toLogicalFooter(FooterCache.get(m.path, input))
-          val matched = new org.roaringbitmap.RoaringBitmap()
-          var writer: StrawDataWriter = null
-          var ok = false
-          try {
-            val subRead = new ResolvedFileRead(input, footer, subSchema)
-            // full-schema projection resolves lazily — only UPDATE pages
-            // with matches pay for it
-            lazy val fullRead = new ResolvedFileRead(input, footer, tableSchema)
-            val keep = ZoneMapFilter.keptPages(footer, flt)
-            val pageRows: Array[Int] =
-              if (footer.columns.isEmpty) Array.empty
-              else footer.columns(0).pages.map(_.numValues)
-            val subRow = new org.apache.spark.sql.catalyst.expressions
-              .GenericInternalRow(subSchema.length)
-            val pageMatches = new scala.collection.mutable.ArrayBuffer[Int]()
-            // zero-column file: every row reads all-null — the predicate
-            // evaluates once and applies uniformly (mirror of the scan)
-            if (pageRows.isEmpty && footer.numRows > 0) {
-              var c = 0
-              while (c < subSchema.length) { subRow.update(c, null); c += 1 }
-              if (pred(subRow)) {
-                var o = 0
-                while (o < footer.numRows) {
-                  if (existing == null || !existing.contains(o)) {
-                    matched.add(o)
-                    as.foreach { assign =>
-                      if (writer == null) {
-                        writer = new StrawDataWriter(new Path(m.path).getParent.toString,
-                          mapping.toPhysical(tableSchema),
-                          partitionId = 0, taskId = 0, opts, jobId)
-                      }
-                      val r = new org.apache.spark.sql.catalyst.expressions
-                        .GenericInternalRow(tableSchema.length)
-                      applyAssigns(assign, r)
-                      if (checkUpdated != null) checkUpdated.validate(r)
-                      writer.write(r)
-                    }
-                  }
-                  o += 1
-                }
-              }
-            }
-            var ord = 0L
-            var p = 0
-            while (p < pageRows.length) {
-              val n = pageRows(p)
-              if (!keep(p)) ord += n
-              else {
-                val subPages = subRead.decodePages(p)
-                pageMatches.clear()
-                var i = 0
-                while (i < n) {
-                  if (existing == null || !existing.contains(ord.toInt)) {
-                    subRead.fill(subPages, i, subRow)
-                    if (pred(subRow)) { matched.add(ord.toInt); pageMatches += i }
-                  }
-                  i += 1
-                  ord += 1
-                }
-                // UPDATE: decode the full page once and stage the matched
-                // rows with assignments applied
-                if (pageMatches.nonEmpty) as.foreach { assign =>
-                  if (writer == null) {
-                    // footer is already LOGICAL here: translate its bloom
-                    // leaves into the write namespace only
-                    val bloomLeaves = bloomLeavesOf(footer)
-                      .filterNot(_.startsWith(ColumnMappingState.DroppedPrefix))
-                      .map(mapping.writeLeafPath)
-                    writer = new StrawDataWriter(new Path(m.path).getParent.toString,
-                      mapping.toPhysical(tableSchema), partitionId = 0, taskId = 0,
-                      opts.copy(bloomColumns = opts.bloomColumns ++ bloomLeaves), jobId)
-                  }
-                  val fullPages = fullRead.decodePages(p)
-                  pageMatches.foreach { i =>
-                    val r = new org.apache.spark.sql.catalyst.expressions
-                      .GenericInternalRow(tableSchema.length)
-                    fullRead.fill(fullPages, i, r)
-                    // expression right-hand sides see the PRE-update row
-                    applyAssigns(assign, r)
-                    if (checkUpdated != null) checkUpdated.validate(r)
-                    writer.write(r)
-                  }
-                }
-              }
-              p += 1
-            }
-            val matchedCount = matched.getLongCardinality
-            if (matchedCount == 0) {
-              if (writer != null) writer.abort()
-              ok = true
-              DvOut(m.path, 0L,
-                if (cand.dv == null) null else cand.dv.path, null, fullDead = false,
-                Seq.empty)
-            } else {
-              val union = matched.clone() // cached `existing` is shared read-only
-              if (existing != null) union.or(existing)
-              val fullDead = union.getLongCardinality >= footer.numRows
-              val newDv =
-                if (fullDead) null
-                else DeletionVector.write(StrawIO.fs(m.path), new Path(m.path), union)
-              val staged =
-                if (writer == null) Seq.empty[String]
-                else writer.commit().asInstanceOf[StrawCommitMessage].files
-              writer = null
-              ok = true
-              DvOut(m.path, matchedCount,
-                if (cand.dv == null) null else cand.dv.path, newDv, fullDead, staged)
-            }
-          } finally if (!ok && writer != null) writer.abort()
-        } finally input.close()
+          while (reader.next()) {
+            val batch = reader.get()
+            val pos = batch.column(0)
+            var i = 0
+            while (i < batch.numRows()) { matched.add(pos.getLong(i).toInt); i += 1 }
+          }
+        } finally reader.close()
+        val oldDvPath = if (cand.dv == null) null else cand.dv.path
+        val matchedCount = matched.getLongCardinality
+        if (matchedCount == 0)
+          DvOut(m.path, 0L, oldDvPath, null, fullDead = false, Seq.empty)
+        else {
+          val union =
+            if (cand.dv == null) matched
+            else org.roaringbitmap.RoaringBitmap.or(matched,
+              DeletionVector.read(cand.dv.path, cand.dv.len))
+          val fullDead = union.getLongCardinality >= cand.numRows
+          val newDv =
+            if (fullDead) null
+            else DeletionVector.write(StrawIO.fs(m.path), new Path(m.path), union)
+          val staged = assignsB.value.fold(Seq.empty[String])(as =>
+            stageUpdated(m, cand.numRows, matched, tableSchema, mapping, opts, jobId,
+              as, checkUpdated))
+          DvOut(m.path, matchedCount, oldDvPath, newDv, fullDead, staged)
+        }
       }.collect()
     } catch {
       case e: Throwable =>
@@ -484,6 +329,48 @@ private[spark] object MaintenanceOps {
         catch { case scala.util.control.NonFatal(s) => e.addSuppressed(s) }
         throw e
     }
+  }
+
+  /** UPDATE's rewrite of one file: read it whole at `tableSchema` with every
+    * row outside `matched` dead (pages without a match are skipped
+    * undecoded), apply `as` to each surviving row — expression right-hand
+    * sides see the PRE-update row — and stage the results beside the file,
+    * re-deriving the page blooms it carries.
+    * @return the staged file names */
+  private def stageUpdated(m: StrawIO.FileMeta, numRows: Long,
+      matched: org.roaringbitmap.RoaringBitmap, tableSchema: StructType,
+      mapping: ColumnMappingState, opts: WriteOptions, jobId: String,
+      as: Seq[Assign], checkUpdated: StrawConstraints.RowChecker): Seq[String] = {
+    // the footer is LOGICAL here: translate its bloom leaves into the write
+    // namespace only
+    val bloomLeaves = bloomLeavesOf(
+      mapping.toLogicalFooter(FooterCache.get(m.path, m.mtime, m.len)))
+      .filterNot(_.startsWith(ColumnMappingState.DroppedPrefix))
+      .map(mapping.writeLeafPath)
+    val writer = new StrawDataWriter(new Path(m.path).getParent.toString,
+      mapping.toPhysical(tableSchema), partitionId = 0, taskId = 0,
+      opts.copy(bloomColumns = opts.bloomColumns ++ bloomLeaves), jobId)
+    var ok = false
+    try {
+      val reader = new ColumnarSupport.StrawColumnarReader(
+        StrawInputPartition(m.path, 0, Int.MaxValue, Long.MaxValue), tableSchema,
+        tableSchema.length, dead = org.roaringbitmap.RoaringBitmap.flip(matched, 0L, numRows),
+        mapping = mapping)
+      try {
+        while (reader.next()) {
+          val it = reader.get().rowIterator()
+          while (it.hasNext) {
+            val r = it.next().copy()
+            applyAssigns(as, r)
+            if (checkUpdated != null) checkUpdated.validate(r)
+            writer.write(r)
+          }
+        }
+      } finally reader.close()
+      val files = writer.commit().asInstanceOf[StrawCommitMessage].files
+      ok = true
+      files
+    } finally if (!ok) writer.abort()
   }
 
   /** Mark the job in-flight, run `body`, and clear the marker on ANY
@@ -753,18 +640,14 @@ object StrawCompaction {
   }
 
   /** Stream one input file's LIVE rows (its deletion vector rides along)
-    * through the scan reader. Each row is a view over vectors the reader
-    * reuses from page to page: a caller that retains a row must copy it. */
-  private def foreachLiveRow(factory: StrawPartitionReaderFactory, f: BinFile)(
-      fn: org.apache.spark.sql.catalyst.InternalRow => Unit): Unit = {
+    * through the scan reader, one batch at a time. The reader reuses its
+    * vectors from page to page: a caller that retains a row must copy it. */
+  private def foreachLiveBatch(factory: StrawPartitionReaderFactory, f: BinFile)(
+      fn: org.apache.spark.sql.vectorized.ColumnarBatch => Unit): Unit = {
     val reader = factory.createColumnarReader(
       StrawInputPartition(f.meta.path, 0, Int.MaxValue, Long.MaxValue, f.dvPath, f.dvLen))
-    try {
-      while (reader.next()) {
-        val it = reader.get().rowIterator()
-        while (it.hasNext) fn(it.next())
-      }
-    } finally reader.close()
+    try while (reader.next()) fn(reader.get())
+    finally reader.close()
   }
 
   /** Compact `dir` in place. Returns counts; a table with nothing to do
@@ -911,11 +794,14 @@ object StrawCompaction {
               case None =>
                 // only LIVE rows survive the rewrite, and the output
                 // carries no sidecar
-                for (f <- bin.files) foreachLiveRow(factory, f)(writer.write)
+                for (f <- bin.files) foreachLiveBatch(factory, f)(writer.writeBatch)
               case Some(ord) =>
                 val buf = scala.collection.mutable.ArrayBuffer
                   .empty[org.apache.spark.sql.catalyst.InternalRow]
-                for (f <- bin.files) foreachLiveRow(factory, f)(buf += _.copy())
+                for (f <- bin.files) foreachLiveBatch(factory, f) { b =>
+                  val it = b.rowIterator()
+                  while (it.hasNext) buf += it.next().copy()
+                }
                 val arr = buf.toArray
                 if (zOrder)
                   MaintenanceOps.zOrderSort(arr,
@@ -1057,7 +943,7 @@ object StrawCompaction {
             jobId)
           var ok = false
           try {
-            for (f <- bin.files) foreachLiveRow(factory, f)(writer.write)
+            for (f <- bin.files) foreachLiveBatch(factory, f)(writer.writeBatch)
             val msg = writer.commit().asInstanceOf[StrawCommitMessage]
             ok = true
             (bin, msg.files)

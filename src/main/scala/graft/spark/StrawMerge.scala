@@ -6,6 +6,8 @@ import org.apache.spark.sql.types.StructType
 
 import graft.format.WriteOptions
 
+import scala.jdk.CollectionConverters._
+
 /** MERGE INTO (upsert) for strawboat tables — the natural completion of the
   * mutation surface: one atomic commit that updates matched rows, deletes
   * them, and/or inserts unmatched source rows.
@@ -265,71 +267,58 @@ object StrawMerge {
         val keySub = org.apache.spark.sql.types.DataType
           .fromJson(keySchemaJson).asInstanceOf[StructType]
         val probe = probeB.value
-        val existing: org.roaringbitmap.RoaringBitmap =
-          if (cand.dv == null) null else DeletionVector.read(cand.dv.path, cand.dv.len)
-        val input = StrawIO.open(m.path)
+        val matched = new org.roaringbitmap.RoaringBitmap()
+        val unmatched = new org.roaringbitmap.RoaringBitmap()
+        val matchedKeys = scala.collection.mutable.LinkedHashSet.empty[Vector[Any]]
+        // the scan reader over the zone-map-kept slices (the file's DV on
+        // each): live key rows, their file ordinal appended as `_pos`
+        val reader = new StrawPartitionReaderFactory(keySub, keySub, serConf,
+          mapping = mappingB.value, appendPos = true)
+          .createColumnarReader(StrawPackedPartition(cand.slices))
         try {
-          val footer = mappingB.value.toLogicalFooter(FooterCache.get(m.path, input))
-          val read = new MaintenanceOps.ResolvedFileRead(input, footer, keySub)
-          val matched = new org.roaringbitmap.RoaringBitmap()
-          val unmatched = new org.roaringbitmap.RoaringBitmap()
-          val matchedKeys = scala.collection.mutable.LinkedHashSet.empty[Vector[Any]]
-          val keep = ZoneMapFilter.keptPages(footer, pruneFilters)
-          val pageRows: Array[Int] =
-            if (footer.columns.isEmpty) Array.empty
-            else footer.columns(0).pages.map(_.numValues)
-          val row = new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(keySub.length)
-          var ord = 0L
-          var p = 0
-          while (p < pageRows.length) {
-            val n = pageRows(p)
-            if (!keep(p)) ord += n
-            else {
-              val pages = read.decodePages(p)
-              var i = 0
-              while (i < n) {
-                if (existing == null || !existing.contains(ord.toInt)) {
-                  read.fill(pages, i, row)
-                  val key = Vector.tabulate(keySub.length)(c =>
-                    if (row.isNullAt(c)) null
-                    else row.get(c, keySub.fields(c).dataType))
-                  if (!key.contains(null) && probe(key)) {
-                    matched.add(ord.toInt)
-                    matchedKeys += key
-                  } else if (delUnB.value) {
-                    // no source match (null target keys match nothing):
-                    // WHEN NOT MATCHED BY SOURCE THEN DELETE
-                    unmatched.add(ord.toInt)
-                  }
+          while (reader.next()) {
+            val it = reader.get().rowIterator()
+            while (it.hasNext) {
+              val row = it.next()
+              val ord = row.getLong(keySub.length).toInt
+              val key = Vector.tabulate(keySub.length)(c =>
+                if (row.isNullAt(c)) null
+                else row.get(c, keySub.fields(c).dataType))
+              if (!key.contains(null) && probe(key)) {
+                matched.add(ord)
+                // string values view the reader's reused vectors: copy
+                matchedKeys += key.map {
+                  case s: org.apache.spark.unsafe.types.UTF8String => s.copy()
+                  case v => v
                 }
-                i += 1
-                ord += 1
+              } else if (delUnB.value) {
+                // no source match (null target keys match nothing):
+                // WHEN NOT MATCHED BY SOURCE THEN DELETE
+                unmatched.add(ord)
               }
             }
-            p += 1
           }
-          val matchedCount = matched.getLongCardinality
-          val unmatchedCount = unmatched.getLongCardinality
-          // rows this merge kills: matched ones when the action mutates,
-          // source-unmatched ones under WHEN NOT MATCHED BY SOURCE DELETE
-          val dying = new org.roaringbitmap.RoaringBitmap()
-          if (mutateB.value) dying.or(matched)
-          if (delUnB.value) dying.or(unmatched)
-          val oldDvPath = if (cand.dv == null) null else cand.dv.path
-          if (dying.isEmpty)
-            Probe(MaintenanceOps.DvOut(m.path, matchedCount, oldDvPath,
-              null, fullDead = false, Seq.empty), matchedKeys.toSeq, 0L)
-          else {
-            if (existing != null) dying.or(existing)
-            val fullDead = dying.getLongCardinality >= footer.numRows
-            val newDv =
-              if (fullDead) null
-              else DeletionVector.write(StrawIO.fs(m.path), new Path(m.path), dying)
-            Probe(MaintenanceOps.DvOut(m.path, matchedCount, oldDvPath,
-              newDv, fullDead, Seq.empty), matchedKeys.toSeq, unmatchedCount)
-          }
-        } finally input.close()
+        } finally reader.close()
+        val matchedCount = matched.getLongCardinality
+        val unmatchedCount = unmatched.getLongCardinality
+        // rows this merge kills: matched ones when the action mutates,
+        // source-unmatched ones under WHEN NOT MATCHED BY SOURCE DELETE
+        val dying = new org.roaringbitmap.RoaringBitmap()
+        if (mutateB.value) dying.or(matched)
+        if (delUnB.value) dying.or(unmatched)
+        val oldDvPath = if (cand.dv == null) null else cand.dv.path
+        if (dying.isEmpty)
+          Probe(MaintenanceOps.DvOut(m.path, matchedCount, oldDvPath,
+            null, fullDead = false, Seq.empty), matchedKeys.toSeq, 0L)
+        else {
+          if (cand.dv != null) dying.or(DeletionVector.read(cand.dv.path, cand.dv.len))
+          val fullDead = dying.getLongCardinality >= cand.numRows
+          val newDv =
+            if (fullDead) null
+            else DeletionVector.write(StrawIO.fs(m.path), new Path(m.path), dying)
+          Probe(MaintenanceOps.DvOut(m.path, matchedCount, oldDvPath,
+            newDv, fullDead, Seq.empty), matchedKeys.toSeq, unmatchedCount)
+        }
       }.collect()
     val allMatchedKeys: Set[Vector[Any]] = outs.flatMap(_.matchedKeys).toSet
 
@@ -435,8 +424,9 @@ object StrawMerge {
     val delUn = deleteUnmatched
 
     // ---- target side: every candidate file streams its live key rows,
-    // tagged (file index, row ordinal), page-skipped by the range zone
-    // maps. External-form values so the rows build a regular DataFrame.
+    // tagged (file index, row ordinal), through the scan reader over its
+    // range-zone-map-kept slices. External-form values so the rows build a
+    // regular DataFrame.
     val extSchema = StructType(
       org.apache.spark.sql.types.StructField("__straw_file",
         org.apache.spark.sql.types.IntegerType, nullable = false) +:
@@ -448,51 +438,35 @@ object StrawMerge {
       else spark.sparkContext.parallelize(candidates.zipWithIndex, candidates.size)
         .flatMap { case (cand, fi) =>
           StrawIO.install(serConf.value)
-          val m = cand.meta
           val keySub = org.apache.spark.sql.types.DataType
             .fromJson(keySchemaJson).asInstanceOf[StructType]
           val toScala = keySub.fields.map(f =>
             org.apache.spark.sql.catalyst.CatalystTypeConverters
               .createToScalaConverter(f.dataType))
-          val existing: org.roaringbitmap.RoaringBitmap =
-            if (cand.dv == null) null else DeletionVector.read(cand.dv.path, cand.dv.len)
-          val input = StrawIO.open(m.path)
+          val reader = new StrawPartitionReaderFactory(keySub, keySub, serConf,
+            mapping = mappingB.value, appendPos = true)
+            .createColumnarReader(StrawPackedPartition(cand.slices))
           val tc = org.apache.spark.TaskContext.get()
-          if (tc != null) tc.addTaskCompletionListener[Unit](_ => input.close())
-          val footer = mappingB.value.toLogicalFooter(FooterCache.get(m.path, input))
-          val read = new MaintenanceOps.ResolvedFileRead(input, footer, keySub)
-          val keep = ZoneMapFilter.keptPages(footer, pruneFilters)
-          val pageRows: Array[Int] =
-            if (footer.columns.isEmpty) Array.empty
-            else footer.columns(0).pages.map(_.numValues)
-          val pageBase = pageRows.scanLeft(0L)(_ + _)
-          val row = new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(keySub.length)
-          // page-lazy iterator: one decoded page in memory at a time
-          pageRows.indices.iterator.filter(keep).flatMap { p =>
-            val pages = read.decodePages(p)
-            (0 until pageRows(p)).iterator.flatMap { i =>
-              val ord = pageBase(p) + i
-              if (existing != null && existing.contains(ord.toInt)) Iterator.empty
-              else {
-                read.fill(pages, i, row)
-                var hasNull = false
-                val vals = new Array[Any](keySub.length + 2)
-                vals(0) = fi
-                vals(1) = ord
-                var c = 0
-                while (c < keySub.length) {
-                  if (row.isNullAt(c)) hasNull = true
-                  else vals(c + 2) = toScala(c)(row.get(c, keySub.fields(c).dataType))
-                  c += 1
-                }
-                // null-keyed target rows match nothing: they are dead
-                // weight for MATCHING, but under WHEN NOT MATCHED BY
-                // SOURCE they are exactly the rows to delete — keep them
-                if (hasNull && !delUn) Iterator.empty
-                else Iterator(org.apache.spark.sql.Row.fromSeq(
-                  scala.collection.immutable.ArraySeq.unsafeWrapArray(vals)))
+          if (tc != null) tc.addTaskCompletionListener[Unit](_ => reader.close())
+          // batch-lazy iterator: one decoded page in memory at a time
+          Iterator.continually(reader.next()).takeWhile(identity).flatMap { _ =>
+            reader.get().rowIterator().asScala.flatMap { row =>
+              var hasNull = false
+              val vals = new Array[Any](keySub.length + 2)
+              vals(0) = fi
+              vals(1) = row.getLong(keySub.length)
+              var c = 0
+              while (c < keySub.length) {
+                if (row.isNullAt(c)) hasNull = true
+                else vals(c + 2) = toScala(c)(row.get(c, keySub.fields(c).dataType))
+                c += 1
               }
+              // null-keyed target rows match nothing: they are dead
+              // weight for MATCHING, but under WHEN NOT MATCHED BY
+              // SOURCE they are exactly the rows to delete — keep them
+              if (hasNull && !delUn) Iterator.empty
+              else Iterator(org.apache.spark.sql.Row.fromSeq(
+                scala.collection.immutable.ArraySeq.unsafeWrapArray(vals)))
             }
           }
         }

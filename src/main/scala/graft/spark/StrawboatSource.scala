@@ -883,6 +883,34 @@ case class StrawInputPartition(
     dvPath: String = null,
     dvLen: Long = 0L) extends InputPartition
 
+object StrawInputPartition {
+  /** The reader slices of one file: one per contiguous run of the pages
+    * `keep` retains, each carrying the file's deletion vector `dv` (null =
+    * fully live). A zero-column file holding rows has no pages — its
+    * footer-only rows read through one `(path, 0, 0)` slice. */
+  def keptRuns(path: String, footer: graft.format.StrawFooter,
+      keep: Int => Boolean, dv: DeletionVector.DvInfo): Seq[StrawInputPartition] = {
+    val (dvPath, dvLen) = if (dv == null) (null, 0L) else (dv.path, dv.len)
+    if (footer.columns.isEmpty)
+      return if (footer.numRows > 0)
+        Seq(StrawInputPartition(path, 0, 0, Long.MaxValue, dvPath, dvLen))
+      else Nil
+    val nPages = footer.columns(0).pages.length
+    val runs = Seq.newBuilder[StrawInputPartition]
+    var p = 0
+    while (p < nPages) {
+      if (!keep(p)) p += 1
+      else {
+        var end = p
+        while (end < nPages && keep(end)) end += 1
+        runs += StrawInputPartition(path, p, end, Long.MaxValue, dvPath, dvLen)
+        p = end
+      }
+    }
+    runs.result()
+  }
+}
+
 /** Several small page slices bin-packed into one unit of work. A table of
   * many small files (streaming epochs, partitioned appends, 1000-executor
   * outputs) must not plan one task per file — per-task overhead would
@@ -1821,23 +1849,12 @@ class StrawPartitionReaderFactory(fullSchema: StructType, requiredSchema: Struct
       requiredSchema.length, rowPred.orNull, dead, mapping, appendPos,
       topNActive.orNull)
     if (!appendFile) base
-    else new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      // _file stays vectorized: one constant string vector appended per
-      // batch (the wrapper batch is per-page, the vector is shared)
-      private val fileVec =
-        new org.apache.spark.sql.execution.vectorized.ConstantColumnVector(
-          1, org.apache.spark.sql.types.StringType)
+    else {
+      // _file stays vectorized: one constant string vector appended per batch
+      val fileVec = new org.apache.spark.sql.execution.vectorized.ConstantColumnVector(
+        1, org.apache.spark.sql.types.StringType)
       fileVec.setUtf8String(UTF8String.fromString(p.path))
-      override def next(): Boolean = base.next()
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
-        val b = base.get()
-        val cols = Array.tabulate[org.apache.spark.sql.vectorized.ColumnVector](
-          b.numCols() + 1)(i => if (i < b.numCols()) b.column(i) else fileVec)
-        new org.apache.spark.sql.vectorized.ColumnarBatch(cols, b.numRows())
-      }
-      override def close(): Unit = base.close()
-      override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-        base.currentMetricsValues()
+      ColumnarSupport.withConstants(base, fileVec)
     }
   }
 }

@@ -452,39 +452,18 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
       val in = StrawIO.open(f)
       try (f, FooterCache.get(f, in)) finally in.close()
     }
+    // contiguous kept runs, like the batch planner (without the byte
+    // targeting — admission already bounds per-batch volume); zero-column
+    // files still carry rows (schema-only projections)
     footers.flatMap { case (file, footer) =>
-      val dv = dvByPath.getOrElse(file, null)
-      val (dvPath, dvLen) = if (dv == null) (null, 0L) else (dv.path, dv.len)
-      if (footer.columns.isEmpty) {
-        // zero-column files still carry rows (schema-only projections) —
-        // same special case as the batch planner
-        if (footer.numRows > 0)
-          Seq(StrawInputPartition(file, 0, 0, Long.MaxValue, dvPath, dvLen))
-        else Nil
-      } else {
-        val nPages = footer.columns(0).pages.length
-        val keep0 = ZoneMapFilter.keptPages(footer, skipFilters)
-        val keep: Int => Boolean =
-          if (sets.isEmpty) keep0
-          else {
-            val perSet = sets.map(s => ZoneMapFilter.keptPages(footer, s))
-            p => keep0(p) && perSet.exists(_(p))
-          }
-        // contiguous kept runs, like the batch planner (without the byte
-        // targeting — admission already bounds per-batch volume)
-        val runs = Seq.newBuilder[InputPartition]
-        var p = 0
-        while (p < nPages) {
-          if (!keep(p)) p += 1
-          else {
-            var endP = p
-            while (endP < nPages && keep(endP)) endP += 1
-            runs += StrawInputPartition(file, p, endP, Long.MaxValue, dvPath, dvLen)
-            p = endP
-          }
+      val keep0 = ZoneMapFilter.keptPages(footer, skipFilters)
+      val keep: Int => Boolean =
+        if (sets.isEmpty) keep0
+        else {
+          val perSet = sets.map(s => ZoneMapFilter.keptPages(footer, s))
+          p => keep0(p) && perSet.exists(_(p))
         }
-        runs.result()
-      }
+      StrawInputPartition.keptRuns(file, footer, keep, dvByPath.getOrElse(file, null))
     }.toArray
   }
 
