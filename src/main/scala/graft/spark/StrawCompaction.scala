@@ -284,7 +284,8 @@ private[spark] object MaintenanceOps {
     val schemaJson = schema.json
     val filtersB = spark.sparkContext.broadcast(filters)
     val assignsB = spark.sparkContext.broadcast(assigns)
-    try {
+    val desc = s"strawboat ${if (assigns.isEmpty) "delete" else "update"}: match"
+    try describeJobs(spark, desc) {
       spark.sparkContext.parallelize(candidates, candidates.size).map { cand =>
         StrawIO.install(serConf.value)
         val m = cand.meta
@@ -385,6 +386,16 @@ private[spark] object MaintenanceOps {
     StrawLog.markInflight(dir, jobId)
     try body
     catch { case e: Throwable => StrawLog.clearInflight(dir, jobId); throw e }
+  }
+
+  /** Run `body` with `desc` as the description of the Spark jobs it
+    * submits, so the Spark log names where each job came from; the
+    * caller's description is restored afterwards. */
+  def describeJobs[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
   }
 
   /** Rename staged outputs visible, each group stamped with its mtime
@@ -759,7 +770,7 @@ object StrawCompaction {
     // one task per bin: stream the bin's rows through a fresh writer into
     // staged (invisible) files; executors return the staged names
     val staged: Array[(Bin, Seq[String])] =
-      try {
+      try MaintenanceOps.describeJobs(spark, "strawboat compact: rewrite") {
         spark.sparkContext.parallelize(bins, bins.size).map { bin =>
           StrawIO.install(serConf.value)
           val schema = DataType.fromJson(bin.schemaJson).asInstanceOf[StructType]

@@ -56,6 +56,14 @@ import scala.jdk.CollectionConverters._
   * commit. Candidate pruning runs before either: hive partition dirs,
   * file stats and page zone maps against the source keys' ranges (plus
   * exact In-sets when the source is small enough to enumerate them).
+  *
+  * The probed keys and the written rows must come from ONE evaluation of
+  * the source. A DRIVER-RESIDENT source — its optimized plan is a
+  * `LocalRelation`: `createDataFrame` over local rows, SQL
+  * `USING (VALUES …)` — already is one: the gate, the key set and the
+  * write frame all read that relation's rows, and a broadcast merge runs
+  * two Spark jobs (probe, stage). Any other source is materialized with
+  * `localCheckpoint` first, then sized by one aggregate job.
   */
 object StrawMerge {
 
@@ -152,34 +160,55 @@ object StrawMerge {
       sel
     }
 
-    // MATERIALIZE the source before anything reads it: the key collect and
-    // the insert write are two separate Spark jobs over the same frame — a
-    // non-deterministic or concurrently-changing source evaluated twice
-    // could insert rows whose keys were never probed (duplicate keys /
-    // lost updates). localCheckpoint CUTS LINEAGE, not just caches: losing
-    // a materialized partition fails the merge loudly instead of silently
-    // recomputing the source (persist would re-evaluate on cache loss —
-    // the exact hazard again). Blocks are reclaimed by the context cleaner
-    // once the frame is unreachable.
-    val srcMat = srcAligned.localCheckpoint(true)
-    // path gate: estimated source KEY bytes. Row count is exact (the frame
-    // is materialized); variable-width key columns (string/binary) use the
-    // MEASURED average byte width — defaultSize=20 undercounts URL/digest
-    // keys several-fold and would route an oversized source to the
-    // driver-collect path. One aggregate job computes count + widths.
-    val keySchema = StructType(keyIdx.map(schema.fields(_)))
-    val varWidth = keySchema.fields.filter(f =>
-      f.dataType == org.apache.spark.sql.types.StringType ||
-      f.dataType == org.apache.spark.sql.types.BinaryType)
-    val (srcRows, perRowKeyBytes) = {
-      import org.apache.spark.sql.functions._
-      val aggs = count(lit(1)) +: varWidth.toSeq.map(f =>
-        coalesce(avg(octet_length(col(f.name))), lit(0.0)))
-      val r = srcMat.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val fixed = keySchema.fields.filterNot(varWidth.contains)
-        .map(_.dataType.defaultSize + 16L).sum
-      val measured = varWidth.indices.map(i => r.getDouble(i + 1) + 16L).sum
-      (r.getLong(0), fixed + measured.toLong)
+    // The key probe and the insert write are two separate Spark jobs over
+    // the same frame: a non-deterministic or concurrently-changing source
+    // evaluated twice could insert rows whose keys were never probed
+    // (duplicate keys / lost updates). Both must read ONE evaluation.
+    //  - A DRIVER-RESIDENT source (createDataFrame over local rows, SQL
+    //    `USING (VALUES …)`, and the cast projection the SQL rewrite adds,
+    //    which the optimizer folds into the relation) is already that: its
+    //    optimized plan is a LocalRelation holding the evaluated rows. The
+    //    row count and key widths come from those rows, and the write frame
+    //    is built over the same relation; the key collect over that frame
+    //    is a local table scan on the driver — no Spark job before the
+    //    probe.
+    //  - Any other source is MATERIALIZED first. localCheckpoint CUTS
+    //    LINEAGE, not just caches: losing a materialized partition fails
+    //    the merge loudly instead of silently recomputing the source
+    //    (persist would re-evaluate on cache loss — the exact hazard
+    //    again). Blocks are reclaimed by the context cleaner once the
+    //    frame is unreachable.
+    // Path gate: estimated source KEY bytes. Row count is exact; string
+    // key columns (the one variable-width key type) use the MEASURED
+    // average byte width — defaultSize=20 undercounts URL/digest keys
+    // several-fold and would route an oversized source to the
+    // driver-collect path.
+    val strKeys = keyIdx.filter(schema.fields(_).dataType ==
+      org.apache.spark.sql.types.StringType)
+    val fixedKeyBytes = keyIdx.filterNot(strKeys.contains)
+      .map(schema.fields(_).dataType.defaultSize + 16L).sum
+    val local = srcAligned.queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if !r.isStreaming && r.output.map(_.name) == schema.fieldNames.toSeq => Some(r)
+      case _ => None
+    }
+    val (srcMat, srcRows, perRowKeyBytes) = local match {
+      case Some(rel) =>
+        val measured = strKeys.map { i =>
+          val lens = rel.data.filterNot(_.isNullAt(i)).map(_.getUTF8String(i).numBytes.toLong)
+          (if (lens.isEmpty) 0.0 else lens.sum.toDouble / lens.size) + 16L
+        }.sum
+        (org.apache.spark.sql.graft.GraftSqlShims.dataFrame(spark, rel),
+          rel.data.size.toLong, fixedKeyBytes + measured.toLong)
+      case None =>
+        val mat = srcAligned.localCheckpoint(true)
+        // one aggregate job computes count + widths
+        import org.apache.spark.sql.functions._
+        val aggs = count(lit(1)) +: strKeys.map(i =>
+          coalesce(avg(octet_length(col(schema.fields(i).name))), lit(0.0)))
+        val r = mat.agg(aggs.head, aggs.tail: _*).collect()(0)
+        val measured = strKeys.indices.map(i => r.getDouble(i + 1) + 16L).sum
+        (mat, r.getLong(0), fixedKeyBytes + measured.toLong)
     }
     val gateBytes = spark.conf.get(BroadcastKeyBytesConf,
       BroadcastKeyBytesDefault.toString).toLong
@@ -254,12 +283,10 @@ object StrawMerge {
     val serConf = new org.apache.spark.util.SerializableConfiguration(StrawIO.conf)
     val keySchemaJson = keySchema.json
     val probeB = spark.sparkContext.broadcast(probeKeys)
-    val mutateB = spark.sparkContext.broadcast(mutate)
-    val delUnB = spark.sparkContext.broadcast(deleteUnmatched)
-    val mappingB = spark.sparkContext.broadcast(snap.mapping)
+    val mapping = snap.mapping
     final case class Probe(out: MaintenanceOps.DvOut,
         matchedKeys: Seq[Vector[Any]], unmatchedDeleted: Long)
-    val outs: Array[Probe] =
+    val outs: Array[Probe] = MaintenanceOps.describeJobs(spark, "strawboat merge: probe") {
       if (candidates.isEmpty) Array.empty
       else spark.sparkContext.parallelize(candidates, candidates.size).map { cand =>
         StrawIO.install(serConf.value)
@@ -273,7 +300,7 @@ object StrawMerge {
         // the scan reader over the zone-map-kept slices (the file's DV on
         // each): live key rows, their file ordinal appended as `_pos`
         val reader = new StrawPartitionReaderFactory(keySub, keySub, serConf,
-          mapping = mappingB.value, appendPos = true)
+          mapping = mapping, appendPos = true)
           .createColumnarReader(StrawPackedPartition(cand.slices))
         try {
           while (reader.next()) {
@@ -291,7 +318,7 @@ object StrawMerge {
                   case s: org.apache.spark.unsafe.types.UTF8String => s.copy()
                   case v => v
                 }
-              } else if (delUnB.value) {
+              } else if (deleteUnmatched) {
                 // no source match (null target keys match nothing):
                 // WHEN NOT MATCHED BY SOURCE THEN DELETE
                 unmatched.add(ord)
@@ -304,8 +331,8 @@ object StrawMerge {
         // rows this merge kills: matched ones when the action mutates,
         // source-unmatched ones under WHEN NOT MATCHED BY SOURCE DELETE
         val dying = new org.roaringbitmap.RoaringBitmap()
-        if (mutateB.value) dying.or(matched)
-        if (delUnB.value) dying.or(unmatched)
+        if (mutate) dying.or(matched)
+        if (deleteUnmatched) dying.or(unmatched)
         val oldDvPath = if (cand.dv == null) null else cand.dv.path
         if (dying.isEmpty)
           Probe(MaintenanceOps.DvOut(m.path, matchedCount, oldDvPath,
@@ -320,6 +347,7 @@ object StrawMerge {
             newDv, fullDead, Seq.empty), matchedKeys.toSeq, unmatchedCount)
         }
       }.collect()
+    }
     val allMatchedKeys: Set[Vector[Any]] = outs.flatMap(_.matchedKeys).toSet
 
     // ---- insert phase: choose the source rows to write, distributed ----
@@ -327,7 +355,9 @@ object StrawMerge {
     // unmatched the inserts — gated by insertNotMatched). Delete/Keep:
     // only unmatched rows insert.
     val keepMatchedSrc = whenMatched == Replace
-    val toWrite: DataFrame = {
+    // the common upsert writes every source row: no filter to evaluate
+    val writeAll = keepMatchedSrc && insertNotMatched && insertCond.isEmpty
+    val toWrite: DataFrame = if (writeAll) srcAligned else {
       // broadcast the matched-key set in EXTERNAL form (converted once on
       // the driver), so the per-row filter compares Row values directly —
       // no converter allocation inside the hot lambda
@@ -568,7 +598,9 @@ object StrawMerge {
       toWrite: DataFrame, snap: MaintenanceOps.Snapshot,
       outs: Seq[MaintenanceOps.DvOut], matchedRows: Long, pruned: Int,
       unmatchedDeleted: Long = 0L, replacedSrcRows: Long = 0L): MergeResult = {
-    val staged = MaintenanceOps.stageFrame(spark, dir, jobId, toWrite, snap)
+    val staged = MaintenanceOps.describeJobs(spark, "strawboat merge: stage") {
+      MaintenanceOps.stageFrame(spark, dir, jobId, toWrite, snap)
+    }
     val done = MaintenanceOps.commitDv(dir, jobId, "merge", outs, staged, snap)
     // fresh rows = replacement versions + true inserts; report them apart
     val writtenRows = done.fresh.map(fm =>

@@ -1,6 +1,9 @@
 package graft.spark
 
 import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
@@ -286,4 +289,67 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the winning vector is intact
     assert(read(out).count() == 95)
   }
+
+  test("local-path files keep .crc sidecars, checksum verification and default permissions") {
+    val sp = spark; import sp.implicits._
+    val out = s"$dir/localFs"
+    (0L until 2000L).map(i => (i, s"v$i")).toDF("id", "s")
+      .coalesce(1).write.format("strawboat").mode("overwrite").save(out)
+    StrawDelete.delete(spark, out, Seq(LessThan("id", 10L): Filter)): Unit
+    val data = new java.io.File(new Path(StrawIO.listFiles(out).head).toUri.getPath)
+    val dv = dvSidecars(out).head
+    // the permission bits are set in-process, not by a forked chmod
+    assert(StrawIO.fs(out).asInstanceOf[InProcessPermsLocalFs].getRaw
+      .isInstanceOf[InProcessPermsRawFs], StrawIO.fs(out).getClass)
+    val expected = FsPermission.getFileDefault.applyUMask(
+      FsPermission.getUMask(StrawIO.conf))
+    for (f <- Seq(data, dv)) {
+      assert(new java.io.File(f.getParentFile, s".${f.getName}.crc").isFile,
+        s"no .crc beside $f")
+      val perms = java.nio.file.Files.getPosixFilePermissions(f.toPath)
+      assert(FsPermission.valueOf("-" + PosixFilePermissions.toString(perms)) == expected,
+        s"$f: $perms")
+    }
+    // the log is written through the raw file system: no sidecars
+    val logFiles = new java.io.File(out, StrawLog.DirName).listFiles.map(_.getName)
+    assert(logFiles.nonEmpty && !logFiles.exists(_.endsWith(".crc")),
+      logFiles.mkString(","))
+    // flip one byte inside the first data page, keeping the .crc: the read
+    // fails on the checksum instead of decoding corrupt bytes
+    val footer = {
+      val in = new graft.format.LocalFileInput(data.getPath)
+      try graft.format.StrawFileReader.readFooter(in) finally in.close()
+    }
+    val mtime = data.lastModified()
+    val raf = new java.io.RandomAccessFile(data, "rw")
+    try {
+      val at = footer.columns(0).pageOffsets(0) + 1
+      raf.seek(at)
+      val b = raf.read()
+      raf.seek(at)
+      raf.write(b ^ 0xff)
+    } finally raf.close()
+    data.setLastModified(mtime): Unit
+    var rows: Array[org.apache.spark.sql.Row] = null
+    val e = intercept[Exception] { rows = read(out).collect() }
+    assert(rows == null)
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(e).exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e)
+  }
+
+  test("StrawIO.fs returns a LocalFileSystem subclass it does not wrap unchanged") {
+    // a deployment's own class for `file:` keeps all of its overrides
+    val s2 = spark.newSession()
+    s2.conf.set("fs.file.impl", classOf[SubclassedLocalFs].getName)
+    s2.conf.set("fs.file.impl.disable.cache", "true")
+    SparkSession.setActiveSession(s2)
+    try assert(StrawIO.fs(dir).getClass == classOf[SubclassedLocalFs])
+    finally SparkSession.setActiveSession(spark)
+    assert(StrawIO.fs(dir).isInstanceOf[InProcessPermsLocalFs])
+  }
 }
+
+/** A [[org.apache.hadoop.fs.LocalFileSystem]] subclass standing for one a
+  * deployment configures through `fs.file.impl`. */
+class SubclassedLocalFs extends org.apache.hadoop.fs.LocalFileSystem

@@ -1,11 +1,13 @@
 package graft.spark
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{Filter, LessThan}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+
+import scala.jdk.CollectionConverters._
 
 /** MERGE INTO ([[StrawMerge]]): keyed upsert over the merge-on-read
   * machinery — matched target rows die via deletion vectors, source rows
@@ -16,19 +18,46 @@ class StrawMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var dir: String = _
 
   override def beforeAll(): Unit = {
+    dir = Files.createTempDirectory("strawmerge").toString
     spark = SparkSession.builder()
       .master("local[4]")
       .appName("strawmerge-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
+      // SQL MERGE INTO runs through the extensions' command rewrite
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config("spark.sql.catalog.straw", classOf[StrawCatalog].getName)
+      .config("spark.sql.catalog.straw.warehouse", s"$dir/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    dir = Files.createTempDirectory("strawmerge").toString
   }
 
   override def afterAll(): Unit = { if (spark != null) spark.stop() }
 
   private def read(out: String) = spark.read.format("strawboat").load(out)
+
+  /** `body`'s result and the number of Spark jobs it submitted, counted
+    * under a fresh job group once the listener bus has caught up. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    val r = try body finally sc.clearJobGroup()
+    org.apache.spark.TestBus.drain(sc)
+    (r, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  /** A three-file target of 1,800 rows, keys 0..1799. */
+  private def writeTarget(out: String): Unit = {
+    val sp = spark; import sp.implicits._
+    (0L until 1800L).map(i => (i, s"old$i", i * 10)).toDF("k", "s", "v")
+      .repartitionByRange(3, col("k"))
+      .write.format("strawboat").mode("overwrite").save(out)
+  }
+
+  /** 100 updates of existing keys (spread over two files) + 50 new keys. */
+  private val upsertRows: Seq[Row] =
+    ((550L until 650L) ++ (5000L until 5050L)).map(i => Row(i, s"new$i", i * 100))
 
   test("upsert: matched rows replaced, unmatched inserted, one atomic commit") {
     val sp = spark; import sp.implicits._
@@ -157,5 +186,58 @@ class StrawMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back.count() == 400)
     assert(back.filter(col("k") === 120L).select("s").as[String].head() == "m120")
     assert(back.filter(col("k") === 50L).select("s").as[String].head() == "m50")
+  }
+
+  test("a driver-resident source merges in two jobs: probe and stage") {
+    val out = s"$dir/local2jobs"
+    writeTarget(out)
+    val src = spark.createDataFrame(upsertRows.asJava, read(out).schema)
+    val (res, jobs) = jobsOf(StrawMerge.merge(spark, out, src, Seq("k")))
+    assert(jobs == 2, s"$jobs jobs for a merge from local rows")
+    assert(res.matchedRows == 100 && res.insertedRows == 50 &&
+      res.replacedRows == 100 && !res.distributedSource, res.toString)
+    assert(read(out).count() == 1850)
+    assert(read(out).filter(col("s").startsWith("new")).count() == 150)
+  }
+
+  test("SQL MERGE from VALUES merges in two jobs") {
+    spark.sql("CREATE TABLE straw.vals (k BIGINT, s STRING, v BIGINT)")
+    spark.sql("INSERT INTO straw.vals SELECT id, concat('old', id), id * 10 FROM range(0, 1800, 1, 3)")
+    assert(StrawIO.listFiles(s"$dir/warehouse/vals").count(!_.contains("part-empty")) == 3)
+    // INT literals: the rewrite's casts to BIGINT fold into the relation
+    val (_, jobs) = jobsOf(spark.sql(
+      """MERGE INTO straw.vals AS t
+        |USING (SELECT * FROM VALUES (5, 'new5', 50), (700, 'new700', 7000),
+        |  (9000, 'new9000', 90000) AS vals(k, s, v)) AS src
+        |ON t.k = src.k
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
+    assert(jobs == 2, s"$jobs jobs for MERGE … USING (VALUES …)")
+    val back = spark.table("straw.vals")
+    assert(back.count() == 1801)
+    assert(back.filter(col("s").startsWith("new")).orderBy("k")
+      .select("k", "v").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((5L, 50L), (700L, 7000L), (9000L, 90000L)))
+  }
+
+  test("a non-local source keeps the checkpoint path and merges the same") {
+    val viaLocal = s"$dir/viaLocal"
+    val viaRdd = s"$dir/viaRdd"
+    writeTarget(viaLocal)
+    writeTarget(viaRdd)
+    val schema = read(viaLocal).schema
+    val local = StrawMerge.merge(spark, viaLocal,
+      spark.createDataFrame(upsertRows.asJava, schema), Seq("k"))
+    val (distributed, jobs) = jobsOf(StrawMerge.merge(spark, viaRdd,
+      spark.createDataFrame(spark.sparkContext.parallelize(upsertRows, 2), schema),
+      Seq("k")))
+    // materialize, gate and key collect run before the probe
+    assert(jobs > 2, s"$jobs jobs: a non-local source must be materialized")
+    // the number of written files follows the source's partitioning
+    assert(distributed.copy(newFiles = 0) == local.copy(newFiles = 0),
+      s"$distributed vs $local")
+    val a = read(viaLocal)
+    val b = read(viaRdd)
+    assert(a.count() == 1850 && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 }
