@@ -304,15 +304,11 @@ object BitPacking {
     if (maxValue <= 0) 1 else 64 - java.lang.Long.numberOfLeadingZeros(maxValue)
 }
 
-/** Per-page statistics driving the adaptive chooser
-  * (reference: gen_stats, src/compression/integer/mod.rs:164-229).
-  * Distinct counting is capped: beyond [[IntStats.DistinctCap]] the page is
-  * treated as high-cardinality and dict/freq/one-value are skipped.
-  */
 /** Incremental chooser statistics over one page's raw buffered values
   * (including null-filled slots), maintained by the column writer's append
   * path — so the steady-state encode needs NO second scan of the page.
-  * Must see exactly the values the page buffer holds, in order. */
+  * Must see exactly the values the page buffer holds, in order.
+  * [[IntStats]] runs the same update when no scan is handed in. */
 final class PageScan {
   var min: Long = Long.MaxValue
   var max: Long = Long.MinValue
@@ -357,21 +353,19 @@ final class PageScan {
   }
 }
 
+/** Per-page statistics driving the adaptive chooser
+  * (reference: gen_stats, src/compression/integer/mod.rs:164-229).
+  * Distinct counting is capped: beyond [[IntStats.DistinctCap]] the page is
+  * treated as high-cardinality and dict/freq/one-value are skipped.
+  */
 final class IntStats(values: Array[Long], n: Int, countDistinct: Boolean = true,
     width: Int = 8, ratio: Double = 2.0, forcedDictFamily: Boolean = false,
     precomputed: PageScan = null) {
   import IntStats.DistinctCap
-  var min: Long = Long.MaxValue
-  var max: Long = Long.MinValue
-  var runCount: Int = if (n == 0) 0 else 1
-  var sorted: Boolean = true
-  var maxDelta: Long = 0L
-  var zzOk: Boolean = true
-  var maxZz: Long = 0L
   // countDistinct=false skips the distinct map entirely (the caller has
   // ruled out the dict-family codecs, e.g. a column writer whose previous
   // pages all came back high-cardinality) — only the sequential
-  // min/max/sorted/run pass below runs
+  // min/max/sorted/run pass runs
   var highCardinality: Boolean = !countDistinct
 
   // membership structure. When the page's value RANGE is small (known
@@ -426,7 +420,25 @@ final class IntStats(values: Array[Long], n: Int, countDistinct: Boolean = true,
     cap = newCap; keys = nk; present = np
   }
 
-  locally {
+  // The page pass is a method the constructor calls, never inline code in
+  // the class body: scalac enters a loop in a class-body block, `locally {}`
+  // or `val`/`lazy val` initializer with values on the operand stack, and
+  // HotSpot cannot OSR-compile such a loop ("OSR starts with non-empty
+  // stack"), so every page of a cold write ran interpreted. JitShapeSpec
+  // fails on any such loop in graft.
+  private val seq: PageScan = scanPage()
+  val min: Long = seq.min
+  val max: Long = seq.max
+  val runCount: Int = seq.runCount
+  val sorted: Boolean = seq.sorted
+  val maxDelta: Long = seq.maxDelta
+  val zzOk: Boolean = seq.zzOk
+  val maxZz: Long = seq.maxZzDelta
+
+  /** One pass over the page: the sequential statistics (unless the
+    * writer's append path already kept them in `precomputed`) fused with
+    * the distinct count and majority vote, then the Freq verify pass. */
+  private def scanPage(): PageScan = {
     // bail threshold: the map exists only to qualify Dict, and the chooser
     // only ever picks Dict when its estimated size beats the ratio gate —
     // so count no further than the largest distinct count that could still
@@ -439,41 +451,14 @@ final class IntStats(values: Array[Long], n: Int, countDistinct: Boolean = true,
       if (forcedDictFamily) math.min(DistinctCap, n >>> 1)
       else math.min(math.min(DistinctCap, n >>> 1),
         IntStats.maxUsefulDistinct(n, width, ratio))
-    if (precomputed != null && n > 0) {
-      // the writer's append path already scanned the page — reuse
-      min = precomputed.min; max = precomputed.max
-      runCount = precomputed.runCount; sorted = precomputed.sorted
-      maxDelta = precomputed.maxDelta
-      zzOk = precomputed.zzOk; maxZz = precomputed.maxZzDelta
-    }
-    if (precomputed == null || countDistinct) {
-      val scanSequential = precomputed == null
+    // the writer's append path already scanned the page — reuse
+    val reuse = precomputed != null && n > 0
+    val scan = if (reuse) precomputed else new PageScan
+    if (!reuse || countDistinct) {
       var i = 0
       while (i < n) {
         val v = values(i)
-        if (scanSequential) {
-          if (v < min) min = v
-          if (v > max) max = v
-          if (i > 0) {
-            val prev = values(i - 1)
-            if (v != prev) runCount += 1
-            if (v < prev) sorted = false
-            else if (sorted) {
-              val d = v - prev
-              if (d < 0) sorted = false // delta overflows Long: not delta-packable
-              else if (d > maxDelta) maxDelta = d
-            }
-            if (zzOk) {
-              val d = v - prev
-              if (((v ^ prev) & (v ^ d)) < 0) zzOk = false
-              else {
-                val zz = (d << 1) ^ (d >> 63)
-                if (zz < 0) zzOk = false
-                else if (zz > maxZz) maxZz = zz
-              }
-            }
-          }
-        }
+        if (!reuse) scan.update(v)
         if (countDistinct) {
           if (candCnt == 0) { cand = v; candCnt = 1 }
           else if (v == cand) candCnt += 1
@@ -514,6 +499,7 @@ final class IntStats(values: Array[Long], n: Int, countDistinct: Boolean = true,
       while (i < n) { if (values(i) == cand) c += 1; i += 1 }
       topValue = cand; topCount = c
     }
+    scan
   }
 
   def distinct: Int = nDistinct

@@ -165,14 +165,18 @@ final class NullPage(val n: Int) extends DecodedPage {
   * falls back to binary search. NOT thread-safe (neither are the
   * underlying pages). Lives here because [[DecodedPage]] is sealed. */
 final class ConcatPage(pages: Array[DecodedPage]) extends DecodedPage {
-  private val starts: Array[Int] = {
+  private val starts: Array[Int] = pageStarts()
+  val numValues: Int = starts(pages.length)
+  private var cursor = 0
+
+  // a method, not the initializer: a loop in a `val` initializer runs with
+  // `this` on the operand stack, where HotSpot cannot OSR-compile it
+  private def pageStarts(): Array[Int] = {
     val a = new Array[Int](pages.length + 1)
     var p = 0
     while (p < pages.length) { a(p + 1) = a(p) + pages(p).numValues; p += 1 }
     a
   }
-  val numValues: Int = starts(pages.length)
-  private var cursor = 0
 
   private def locate(i: Int): Int = {
     if (i >= starts(cursor) && i < starts(cursor + 1)) return cursor

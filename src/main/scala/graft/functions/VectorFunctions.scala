@@ -185,7 +185,10 @@ case class HyperplaneBuckets(child: Expression, dim: Int, nPlanes: Int,
 
   /** Flat [band][plane][dim] Gaussian matrix; per-band seed keeps bands
     * independent (seed + 7919·band, matching the historical SQL layout). */
-  @transient private lazy val planesFlat: Array[Double] = {
+  @transient private lazy val planesFlat: Array[Double] = gaussianPlanes()
+  // a method, not the initializer: a loop in a `lazy val` initializer runs
+  // with `this` on the operand stack, where HotSpot cannot OSR-compile it
+  private def gaussianPlanes(): Array[Double] = {
     val out = new Array[Double](nBands * nPlanes * dim)
     var b = 0
     while (b < nBands) {

@@ -690,16 +690,22 @@ object StrawTableSidecar {
       s.properties.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${esc(k)}:${esc(v)}" }.mkString(",") + "}}"
 
-  /** Overwrite-in-place (ALTER TABLE property updates). */
+  /** Overwrite-in-place (ALTER TABLE property updates). The sidecar lives
+    * on the raw file system (no `.crc`, as the log's files do). There, on
+    * `file:`, rename is one `rename(2)`: a concurrent [[read]] sees the old
+    * or the new sidecar, never none, and no checksum of an older version
+    * can fail it. A store whose rename refuses to replace an existing file
+    * (HDFS) falls back to delete-then-rename. */
   def write(dir: String, s: StrawTableSidecar): Unit = {
-    val f = StrawIO.fs(dir)
-    val tmp = new Path(dir, s".$FileName.tmp")
+    val f = StrawLog.rawFs(dir)
+    val tmp = new Path(dir, s".$FileName.${java.util.UUID.randomUUID()}.tmp")
     val os = f.create(tmp, true)
     try os.write(render(s).getBytes("UTF-8")) finally os.close()
     val dst = new Path(dir, FileName)
-    f.delete(dst, false)
-    if (!f.rename(tmp, dst))
+    if (!f.rename(tmp, dst) && !(f.delete(dst, false) && f.rename(tmp, dst))) {
+      f.delete(tmp, false)
       throw new java.io.IOException(s"strawboat: rename $tmp -> $dst failed")
+    }
   }
 
   /** Create-if-absent (the CREATE TABLE claim): throws when the sidecar
@@ -708,7 +714,7 @@ object StrawTableSidecar {
     * check-then-act there), non-overwriting rename + verify elsewhere —
     * so racing creators serialize exactly like racing commits. */
   def claim(dir: String, s: StrawTableSidecar): Unit = {
-    val f = StrawIO.fs(dir)
+    val f = StrawLog.rawFs(dir)
     val json = render(s)
     val tmp = new Path(dir,
       s".$FileName.claim-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -720,7 +726,7 @@ object StrawTableSidecar {
   }
 
   def read(dir: String): Option[StrawTableSidecar] = {
-    val f = StrawIO.fs(dir)
+    val f = StrawLog.rawFs(dir)
     val p = new Path(dir, FileName)
     if (!f.exists(p)) return None
     val in = f.open(p)

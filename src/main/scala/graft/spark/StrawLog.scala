@@ -230,7 +230,7 @@ object StrawLog {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Raw FS (no checksum sidecars) — single-file atomic ops. */
-  private def rawFs(dir: String): FileSystem =
+  private[spark] def rawFs(dir: String): FileSystem =
     StrawIO.fs(dir) match {
       case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
       case other => other

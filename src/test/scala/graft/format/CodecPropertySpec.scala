@@ -204,4 +204,117 @@ class CodecPropertySpec extends AnyFunSuite {
       StrawFormat.i128ToBigInteger(h, l).mod(mod) == sum
     })
   }
+
+  /** Every public [[IntStats]] result against a naive reference over the
+    * same page, with and without the append path's [[PageScan]]; and the
+    * encoded page is the same bytes either way. */
+  private def checkIntStats(page: Array[Long], countDistinct: Boolean, width: Int,
+      withScan: Boolean, forcedDict: Boolean): Unit = {
+    val vals = if (width == 4) page.map(_.toInt.toLong) else page
+    val n = vals.length
+    def scanOf(vs: Array[Long]): PageScan = { val s = new PageScan; vs.foreach(s.update); s }
+    val st = new IntStats(vals, n, countDistinct, width, 2.0, forcedDict,
+      if (withScan) scanOf(vals) else null)
+    val ctx = s"n=$n countDistinct=$countDistinct width=$width scan=$withScan " +
+      s"forcedDict=$forcedDict page=${vals.take(8).mkString(",")}…"
+
+    val steps = (1 until n).map(i => BigInt(vals(i)) - BigInt(vals(i - 1)))
+    assert(st.min == (if (n == 0) Long.MaxValue else vals.min), ctx)
+    assert(st.max == (if (n == 0) Long.MinValue else vals.max), ctx)
+    assert(st.runCount == (if (n == 0) 0 else 1 + steps.count(_ != 0)), ctx)
+    // sorted: non-decreasing with every step a Long; maxDelta over the
+    // steps before the first one that breaks it
+    val sortedSteps = steps.takeWhile(d => d >= 0 && d <= BigInt(Long.MaxValue))
+    assert(st.sorted == (sortedSteps.size == steps.size), ctx)
+    assert(st.maxDelta == (BigInt(0) +: sortedSteps).max.toLong, ctx)
+    // zigzag: every step in [-2^62, 2^62); maxZz likewise over the prefix
+    val zzSteps = steps.takeWhile(d => d >= -(BigInt(1) << 62) && d < (BigInt(1) << 62))
+    assert(st.zzOk == (zzSteps.size == steps.size), ctx)
+    assert(st.maxZz ==
+      (BigInt(0) +: zzSteps.map(d => if (d >= 0) d * 2 else -d * 2 - 1)).max.toLong, ctx)
+
+    val distinct = vals.distinct.sorted
+    val capLimit = math.min(math.min(IntStats.DistinctCap, n >>> 1),
+      if (forcedDict) Int.MaxValue else IntStats.maxUsefulDistinct(n, width, 2.0))
+    val highCard = !countDistinct || distinct.length > capLimit
+    assert(st.highCardinality == highCard, ctx)
+    if (!highCard) {
+      assert(st.distinct == distinct.length, ctx)
+      assert(st.distinctValues.sameElements(distinct), ctx)
+    }
+    // a >=90% value is always reported; one under 80% never is (the
+    // majority vote's counter cannot reach 0.8n); in between it may be
+    val (mode, f) = if (n == 0) (0L, 0)
+      else vals.groupBy(identity).map { case (k, v) => (k, v.length) }.maxBy(_._2)
+    val top = countDistinct && n >= 64
+    if ((top && f * 10L >= 9L * n) || (top && f * 5L >= 4L * n && st.topCount != 0))
+      assert((st.topValue, st.topCount) == ((mode, f)), ctx)
+    else assert((st.topValue, st.topCount) == ((0L, 0)), ctx)
+
+    for (opts <- Seq(WriteOptions(), WriteOptions(forced = Some(Codec.Dict)))) {
+      val plain = new ByteBuf()
+      IntCodec.encode(vals.clone(), n, width, opts, 0, plain, countDistinct = countDistinct)
+      val scanned = new ByteBuf()
+      IntCodec.encode(vals.clone(), n, width, opts, 0, scanned,
+        countDistinct = countDistinct, scan = scanOf(vals))
+      assert(java.util.Arrays.equals(plain.buf, 0, plain.len, scanned.buf, 0, scanned.len),
+        s"$ctx forced=${opts.forced}")
+    }
+  }
+
+  private def checkIntStatsAllModes(page: Array[Long]): Unit =
+    for (cd <- Seq(true, false); w <- Seq(4, 8); sc <- Seq(true, false); fd <- Seq(true, false))
+      checkIntStats(page, cd, w, sc, fd)
+
+  test("IntStats equals a naive reference on every page shape") {
+    val shapes = Seq(
+      Array.empty[Long],
+      // steps past ±2^62 and past the Long range: delta and zigzag overflow
+      Array(0L, 5L, Long.MaxValue, Long.MinValue, 1L << 62, -(1L << 62), 0L),
+      Array(Long.MinValue, -(1L << 62) - 1, 0L, (1L << 62) - 1, Long.MaxValue),
+      // range under 2^16: the bitmap path under a PageScan; few distinct,
+      // then all distinct (the capLimit bail inside the bitmap)
+      Array.tabulate(3000)(i => 1000L + (i % 37) * 1700),
+      Array.tabulate(3000)(i => -5000L + (i * 7919L) % 65536),
+      // few distinct values over a wide range: the hash map, then its bail
+      Array.tabulate(3000)(i => (i % 17) * 1000003L * 1000003L),
+      Array.tabulate(3000)(i => i * 0x9E3779B97F4A7C15L),
+      // a >=90% majority: the Freq verify pass
+      Array.tabulate(3000)(i => if (i % 31 == 0) i.toLong else 42L),
+      // sorted with growing steps
+      Array.tabulate(3000)(i => i.toLong * i))
+    shapes.foreach(checkIntStatsAllModes)
+
+    val anyLong = Gen.chooseNum(Long.MinValue, Long.MaxValue)
+    val genPage: Gen[Array[Long]] = Gen.oneOf(
+      Gen.listOf(Gen.oneOf(Long.MinValue, Long.MaxValue, 0L, 1L << 62, -(1L << 62),
+        (1L << 62) - 1, -(1L << 62) - 1)).map(_.toArray),
+      for {
+        base <- Gen.chooseNum(-(1L << 40), 1L << 40)
+        range <- Gen.oneOf(1, 50, 4000, 65535)
+        n <- Gen.chooseNum(1, 3000)
+        offs <- Gen.listOfN(n, Gen.chooseNum(0, range))
+      } yield offs.map(base + _).toArray,
+      for {
+        k <- Gen.chooseNum(1, 40)
+        dict <- Gen.listOfN(k, anyLong)
+        n <- Gen.chooseNum(1, 3000)
+        idx <- Gen.listOfN(n, Gen.chooseNum(0, k - 1))
+      } yield idx.map(dict).toArray,
+      Gen.chooseNum(1, 3000).flatMap(n => Gen.listOfN(n, anyLong)).map(_.toArray),
+      for {
+        n <- Gen.chooseNum(64, 3000)
+        top <- anyLong
+        pct <- Gen.chooseNum(80, 100)
+        rest <- Gen.listOfN(n, Gen.chooseNum(-1000L, 1000L))
+        seed <- Gen.long
+      } yield new scala.util.Random(seed).shuffle(
+        rest.zipWithIndex.map { case (v, i) => if (i * 100L < pct.toLong * n) top else v })
+        .toArray)
+    check(Prop.forAllNoShrink(genPage, Gen.oneOf(true, false), Gen.oneOf(4, 8),
+      Gen.oneOf(true, false), Gen.oneOf(true, false)) { (page, cd, w, sc, fd) =>
+      checkIntStats(page, cd, w, sc, fd)
+      true
+    })
+  }
 }

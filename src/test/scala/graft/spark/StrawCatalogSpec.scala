@@ -2,6 +2,8 @@ package graft.spark
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.scalatest.funsuite.AnyFunSuite
@@ -136,6 +138,35 @@ class StrawCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     // empty shapes survive too
     StrawTableSidecar.write(dir, StrawTableSidecar(Seq.empty, Map.empty))
     assert(StrawTableSidecar.read(dir).contains(StrawTableSidecar(Seq.empty, Map.empty)))
+  }
+
+  test("sidecar rewrites replace it atomically: a concurrent reader always sees one") {
+    val dir = Files.createTempDirectory("sidecar-race").toString
+    val versions = (0 until 200).map(i => StrawTableSidecar(Seq("p"), Map("v" -> i.toString)))
+    StrawTableSidecar.claim(dir, versions.head) // as CREATE TABLE leaves it
+    val problems = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val firstRead = new java.util.concurrent.CountDownLatch(1)
+    @volatile var done = false
+    var reads = 0
+    val reader = new Thread(() => {
+      while (!done) {
+        try StrawTableSidecar.read(dir) match {
+          case Some(s) if versions.contains(s) => reads += 1
+          case other => problems.add(s"read $other")
+        } catch { case e: Exception => problems.add(e.toString) }
+        firstRead.countDown()
+      }
+    })
+    reader.start()
+    try {
+      firstRead.await()
+      versions.foreach(StrawTableSidecar.write(dir, _))
+    } finally { done = true; reader.join() }
+    if (!problems.isEmpty)
+      fail(s"${problems.size} bad reads, first: " + problems.asScala.take(3).mkString("; "))
+    assert(reads > 1)
+    assert(StrawTableSidecar.read(dir).contains(versions.last))
+    assert(!new java.io.File(dir).list().exists(_.endsWith(".tmp")))
   }
 
   test("external strawboat directory surfaces as a catalog table") {
