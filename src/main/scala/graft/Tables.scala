@@ -14,7 +14,10 @@ object Tables {
   // (v4: transaction-log commits with operation lines)
   private val FormatVersion = "v7" // v7: ALP (decimal reals) + ALP_RD (true reals) live for float/double pages
 
-  private def strawRoot = s"/root/repo/target/strawdata/$FormatVersion"
+  // under the working directory's target/, so each checkout keeps its own
+  // cache; the resolved root is absolute, as every path handed to Spark is
+  private def strawRoot =
+    Paths.get("target", "strawdata", FormatVersion).toAbsolutePath.toString
 
   // per-destination locks so distinct tables convert CONCURRENTLY (Spark
   // schedules jobs from multiple threads fine); the lock only prevents a

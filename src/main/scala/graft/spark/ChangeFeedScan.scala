@@ -119,32 +119,6 @@ private[spark] class ChangeFeedReaderFactory(dataSchemaJson: String,
 // Streaming change feed
 // ---------------------------------------------------------------------------
 
-/** Position in a change-feed stream: every task of versions `< version` is
-  * consumed, plus the first `idx` tasks of `version` in the stream's
-  * deterministic per-version order ([[ChangeFeedMicroBatchStream.tasksOf]]).
-  * Commit files and sidecars are write-once, so any `(start, end]` replays
-  * to the same task list. */
-private[spark] case class CdfStreamOffset(version: Long, idx: Int)
-  extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = s"""{"v":$version,"i":$idx}"""
-  def key: (Long, Int) = (version, idx)
-}
-
-private[spark] object CdfStreamOffset {
-  def fromJson(json: String): CdfStreamOffset = {
-    val s = json.trim
-    require(s.startsWith("{") && s.endsWith("}"), s"bad cdf stream offset: $s")
-    def field(k: String): String = {
-      val i = s.indexOf(s""""$k":""")
-      require(i >= 0, s"bad cdf stream offset (no $k): $s")
-      s.substring(i + k.length + 3).takeWhile(c => c == '-' || c.isDigit)
-    }
-    CdfStreamOffset(field("v").toLong, field("i").toInt)
-  }
-  def leq(a: CdfStreamOffset, b: CdfStreamOffset): Boolean =
-    Ordering[(Long, Int)].lteq(a.key, b.key)
-}
-
 /** Micro-batch source over the change data feed: each trigger delivers the
   * row-level changes of committed versions past the stream's position —
   * including the DELETEs and UPDATEs the append-only table stream must
@@ -157,8 +131,11 @@ private[spark] object CdfStreamOffset {
   * LOUDLY rather than under-reporting. The schema is pinned at stream
   * start (a later-added column is dropped; an absent one null-fills per
   * file). Admission control caps tasks (`maxFilesPerTrigger`) or bytes
-  * (`maxBytesPerTrigger`) per micro-batch, prefix-only so the offset
-  * always describes a contiguous consumed range. */
+  * (`maxBytesPerTrigger`) per micro-batch ([[StreamAdmission]]). The
+  * offset is the table stream's [[StrawLogStreamOffset]]: every task of
+  * versions `< version`, plus the first `idx` tasks of `version` in
+  * [[tasksOf]] order. Commit files and sidecars are write-once, so any
+  * `(start, end]` replays to the same task list. */
 private[spark] class ChangeFeedMicroBatchStream(dir: String, from: Long,
     bound: Option[Long], dataSchema: StructType,
     maxFilesPerTrigger: Option[Int] = None,
@@ -191,15 +168,15 @@ private[spark] class ChangeFeedMicroBatchStream(dir: String, from: Long,
 
   /** Every unconsumed (position-after-it, task) from `start` through
     * version `hi`, in delivery order. */
-  private def pendingFrom(start: CdfStreamOffset, hi: Long)
-      : Seq[(CdfStreamOffset, StrawChanges.ChangeTask)] = {
-    val out = Seq.newBuilder[(CdfStreamOffset, StrawChanges.ChangeTask)]
+  private def pendingFrom(start: StrawLogStreamOffset, hi: Long)
+      : IndexedSeq[(StrawLogStreamOffset, StrawChanges.ChangeTask)] = {
+    val out = IndexedSeq.newBuilder[(StrawLogStreamOffset, StrawChanges.ChangeTask)]
     var v = math.max(start.version, from)
     while (v <= hi) {
       val ts = tasksOf(v)
       var i = if (v == start.version) start.idx else 0
       while (i < ts.size) {
-        out += ((CdfStreamOffset(v, i + 1), ts(i)))
+        out += ((StrawLogStreamOffset(v, i + 1), ts(i)))
         i += 1
       }
       v += 1
@@ -207,69 +184,27 @@ private[spark] class ChangeFeedMicroBatchStream(dir: String, from: Long,
     out.result()
   }
 
-  override def initialOffset(): Offset = CdfStreamOffset(from, 0)
-  override def deserializeOffset(json: String): Offset = CdfStreamOffset.fromJson(json)
-  override def reportLatestOffset(): Offset = CdfStreamOffset(latestNow() + 1, 0)
+  override def initialOffset(): Offset = StrawLogStreamOffset(from, 0)
+  override def deserializeOffset(json: String): Offset = StrawLogStreamOffset.fromJson(json)
+  override def reportLatestOffset(): Offset = StrawLogStreamOffset(latestNow() + 1, 0)
   override def latestOffset(): Offset = throw new UnsupportedOperationException(
     "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = maxFilesPerTrigger.map(ReadLimit.maxFiles).toSeq ++
-      maxBytesPerTrigger.map(ReadLimit.maxBytes).toSeq
-    limits match {
-      case Seq() => ReadLimit.allAvailable()
-      case Seq(one) => one
-      case many => ReadLimit.compositeLimit(many.toArray)
-    }
-  }
-
-  /** Prefix-only admission (mirrors the table stream's applyLimit): a gap
-    * could advance the offset past a skipped task and lose it. */
-  private def admit(pending: Seq[(CdfStreamOffset, StrawChanges.ChangeTask)],
-      limit: ReadLimit): Int = limit match {
-    case mf: org.apache.spark.sql.connector.read.streaming.ReadMaxFiles =>
-      math.min(pending.size, mf.maxFiles())
-    case mb: org.apache.spark.sql.connector.read.streaming.ReadMaxBytes =>
-      var budget = mb.maxBytes()
-      var n = 0
-      var stop = false
-      for ((_, t) <- pending if !stop) {
-        if (n == 0 || t.len <= budget) { n += 1; budget -= t.len }
-        else stop = true
-      }
-      n
-    case c: org.apache.spark.sql.connector.read.streaming.CompositeReadLimit =>
-      c.getReadLimits.foldLeft(pending.size)((acc, l) =>
-        math.min(acc, admit(pending, l)))
-    case _ => pending.size
-  }
+  override def getDefaultReadLimit: ReadLimit =
+    StreamAdmission.defaultLimit(maxFilesPerTrigger, maxBytesPerTrigger)
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val so = start.asInstanceOf[CdfStreamOffset]
+    val so = start.asInstanceOf[StrawLogStreamOffset]
     val hi = latestNow()
-    if (so.version > hi) return so
-    val pending = pendingFrom(so, hi)
-    if (pending.isEmpty) {
-      // only task-less versions (compaction) ahead: fast-forward past them
-      // so the position never lags into the vacuumLog horizon
-      val ff = CdfStreamOffset(hi + 1, 0)
-      if (CdfStreamOffset.leq(ff, so)) so else ff
-    } else {
-      val n = admit(pending, limit)
-      if (n <= 0) so
-      else if (n == pending.size) CdfStreamOffset(hi + 1, 0)
-      else pending(n - 1)._1
-    }
+    StreamAdmission.endOffset(so, hi, pendingFrom(so, hi), limit)(_.len)
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[CdfStreamOffset]
-    val e = end.asInstanceOf[CdfStreamOffset]
-    // enumerate through e.version (its first e.idx tasks), never touching a
-    // version past the consumed range — e may be the (hi+1, 0) sentinel
-    val hi = if (e.idx > 0) e.version else e.version - 1
-    pendingFrom(s, hi)
-      .filter { case (pos, _) => CdfStreamOffset.leq(pos, e) }
+    val e = end.asInstanceOf[StrawLogStreamOffset]
+    // enumerate through e's last version, never touching a version past
+    // the consumed range — e may be the (hi+1, 0) sentinel
+    pendingFrom(start.asInstanceOf[StrawLogStreamOffset], e.tailBound)
+      .filter { case (pos, _) => StrawLogStreamOffset.leq(pos, e) }
       .map { case (_, t) => ChangeFeedPartition(t): InputPartition }
       .toArray
   }

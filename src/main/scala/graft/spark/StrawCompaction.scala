@@ -21,9 +21,9 @@ import graft.format.WriteOptions
   *  1. rewrite bins DISTRIBUTED (one Spark task per bin) into files staged
   *     under a job-scoped suffix — invisible to every reader;
   *  2. rename outputs visible, stamped with the bin's MAX INPUT mtime (not
-  *     commit time: compaction moves bytes, not data — a file-stream reader
-  *     whose high-water mark already passed the inputs must not see the
-  *     rewrite as fresh rows);
+  *     commit time: compaction moves bytes, not data — a stream's initial
+  *     snapshot delivers in (mtime, path) order, and the rewrite keeps the
+  *     place its inputs held there);
   *  3. commit the generation switch to the [[StrawLog]] transaction log in
   *     ONE atomic version file (adds = outputs, removes = inputs) — log
   *     readers observe the old or the new generation, never both;
@@ -49,23 +49,14 @@ import graft.format.WriteOptions
   * generations mid-vacuum. Readers that captured a pre-compaction snapshot
   * can fail (not mis-answer) when the vacuum deletes inputs under them.
   *
-  * Streaming a directory AS A SOURCE while compacting it is OUT OF
-  * CONTRACT unless the stream's high-water mark has already advanced past
-  * `max input mtime` — and note the mark trails the newest seen file by
-  * the source's safety lag (5 minutes), so compacting files a live stream
-  * saw less than that ago WILL re-deliver the rewritten rows under their
-  * new paths. Compact stream SOURCES only when the feeding stream is
-  * stopped/drained and the inputs are older than the lag, or when
-  * downstream re-delivery is acceptable. Under a LOG-mode stream the
-  * failure shape flips but the contract is the same: the stream skips
-  * maintenance commits (no re-delivery, ever), yet the input vacuum
-  * destroys any not-yet-delivered backlog the stream's offset still
-  * points at — compact a streamed table only after the stream's offset
-  * has passed the inputs' commit versions. (Stream SINKS are always safe
-  * to compact: the writing query's exactly-once bookkeeping is the log's
-  * txn actions + engine checkpoint, which compaction never touches.) This
-  * is the same limitation Spark's own FileStreamSource has for files
-  * rewritten in place.
+  * Streaming a table AS A SOURCE while compacting it: the stream skips
+  * maintenance commits, so compaction never re-delivers rows, yet the
+  * input vacuum destroys any not-yet-delivered backlog the stream's
+  * offset still points at — compact a streamed table only after the
+  * stream's offset has passed the inputs' commit versions. (Stream SINKS
+  * are always safe to compact: the writing query's exactly-once
+  * bookkeeping is the log's txn actions + engine checkpoint, which
+  * compaction never touches.)
   */
 /** Mechanics shared by compaction ([[StrawCompaction]]) and the row-level
   * ops ([[StrawDelete]], [[StrawUpdate]], [[StrawMerge]], [[StrawMergeScan]],
@@ -400,8 +391,8 @@ private[spark] object MaintenanceOps {
 
   /** Rename staged outputs visible, each group stamped with its mtime
     * BEFORE the rename (a reader must never list a file under a wrong
-    * mtime; maintenance stamps the inputs' max mtime so a file-stream
-    * source that already saw the data does not re-deliver it). On any
+    * mtime; maintenance stamps the inputs' max mtime so the rewrite keeps
+    * its inputs' place in a stream's (mtime, path) snapshot order). On any
     * failure every output already made visible is deleted (the inputs are
     * untouched until the caller's vacuum, so nothing is lost) and this
     * job's staged debris swept before rethrowing — an ordinary IO error is

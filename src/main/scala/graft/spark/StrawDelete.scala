@@ -35,10 +35,10 @@ import graft.format.WriteOptions
   * concurrent vacuum off them meanwhile; any failure rolls fresh outputs
   * back; a concurrent remover or competing delete on the same file
   * surfaces as [[StrawLog.ConflictException]] (the DV commit carries the
-  * expected prior sidecar — lost-update safe). The data files' mtimes
-  * never change under merge-on-read, so file-stream sources re-deliver
-  * nothing (deletes simply do not propagate to an already-streamed row —
-  * retraction is out of streaming's contract).
+  * expected prior sidecar — lost-update safe). A stream skips `delete`
+  * commits, so it re-delivers nothing (deletes simply do not propagate to
+  * an already-streamed row — the change feed is the surface that carries
+  * retractions).
   */
 object StrawDelete {
 

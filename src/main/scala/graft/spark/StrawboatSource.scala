@@ -698,16 +698,6 @@ object StrawWriteOptions {
         s"strawboat: bucketBy lists a column twice or is empty: '$c'")
       o = o.copy(bucketBy = Some(cols.mkString(",")), buckets = n)
     }
-    // float codec variant: auto (default, per-page trial) | ring | prev
-    Option(options.get("patasVariant")).foreach { v =>
-      o = o.copy(patasRing = v.toLowerCase match {
-        case "auto" => None
-        case "ring" => Some(true)
-        case "prev" => Some(false)
-        case other => throw new IllegalArgumentException(
-          s"strawboat: unknown patasVariant '$other' (auto|ring|prev)")
-      })
-    }
     o
   }
 
@@ -716,11 +706,12 @@ object StrawWriteOptions {
     * option surface without loss, so the fallback writes the SAME layout
     * (codec, paging, blooms, buckets) the columnar path would have.
     * Fields with no option key ([[WriteOptions.forced]],
-    * [[WriteOptions.ratio]] — test-only knobs) must be at their defaults. */
+    * [[WriteOptions.ratio]], [[WriteOptions.patasRing]] — test-only knobs)
+    * must be at their defaults. */
   def unparse(o: WriteOptions): Map[String, String] = {
     val d = WriteOptions()
-    require(o.forced == d.forced && o.ratio == d.ratio,
-      "strawboat: forced/ratio have no writer-option spelling")
+    require(o.forced == d.forced && o.ratio == d.ratio && o.patasRing == d.patasRing,
+      "strawboat: forced/ratio/patasRing have no writer-option spelling")
     val m = Map.newBuilder[String, String]
     if (o.base != d.base) m += "compression" -> (o.base match {
       case Codec.Plain => "none"
@@ -742,7 +733,6 @@ object StrawWriteOptions {
       m += "bucketBy" -> c
       m += "buckets" -> o.buckets.toString
     }
-    o.patasRing.foreach(r => m += "patasVariant" -> (if (r) "ring" else "prev"))
     m.result()
   }
 }
@@ -2238,7 +2228,7 @@ object StrawSchemaResolver {
 // ---------------------------------------------------------------------------
 
 class StrawWriteBuilder(path: String, schema: StructType, opts: WriteOptions,
-    partitionCols: Seq[String] = Seq.empty, queryId: String = "none",
+    partitionCols: Seq[String], queryId: String,
     mergeSchema: Boolean = false, sortBy: Seq[String] = Seq.empty,
     distribute: Seq[String] = Seq.empty)
   extends WriteBuilder with SupportsTruncate with SupportsDynamicOverwrite {
@@ -2376,10 +2366,12 @@ object StrawCommitProtocol {
 
   /** Rename this job's staged files to their visible names; returns the
     * final paths. Parallel IO: one rename per file, driver-side. The
-    * modification time is bumped to COMMIT time: rename preserves the
-    * task-side write mtime, and streaming sources classify seen-ness by
-    * mtime high-water mark — a file committed long after it was written
-    * must not appear under the mark. */
+    * modification time is bumped to COMMIT time (rename preserves the
+    * task-side write mtime), and the log records it: a stream's initial
+    * snapshot delivers in (mtime, path) order, which is then commit order,
+    * and [[StrawLog.vacuumUnreferenced]] ages a renamed-but-not-yet-
+    * committed file from its rename, not from a task that wrote it long
+    * before. */
   def finalizeFiles(path: String, jobId: String, staged: Seq[String])
       : Seq[StrawIO.FileMeta] = {
     val f = StrawIO.fs(path)
@@ -2391,10 +2383,10 @@ object StrawCommitProtocol {
       // capture the length now — rename preserves it, and the log
       // entry then needs no post-rename status RPC
       val len = f.getFileStatus(sp).getLen
-      // bump mtime BEFORE the rename that makes the file visible: a reader
-      // listing between rename and a later setTimes could classify the file
-      // as below its high-water mark and never admit it (rename preserves
-      // mtime on local/HDFS; object-store renames are copies and refresh it)
+      // bump mtime BEFORE the rename that makes the file visible, so no
+      // vacuum walk between rename and a later setTimes sees the old write
+      // time (rename preserves mtime on local/HDFS; object-store renames
+      // are copies and refresh it)
       f.setTimes(sp, now, -1)
       if (!f.rename(sp, dst))
         throw new java.io.IOException(s"strawboat: commit rename $sp -> $dst failed")

@@ -1,95 +1,53 @@
 package graft.spark
 
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
-import graft.format.StrawFileReader
-
 /** Structured Streaming over the strawboat format.
   *
-  * Read side, LOG MODE (tables with a [[StrawLog]] — everything this
-  * library writes): the stream consumes committed VERSION DELTAS. The
-  * offset is a position in the commit history ([[StrawLogStreamOffset]]);
-  * each trigger reads only the commit files past it — exact, O(delta),
-  * no listing, no mtime safety lag. A new stream starts from the latest
-  * snapshot (initial-snapshot phase) and then follows the tail. Only
-  * data-bearing commits deliver (append / streaming epoch / truncate);
-  * compaction moves bytes, not data, and delivers NOTHING — rewriting
-  * files under a live stream no longer re-delivers their rows — while
-  * row-level delete/update cannot be represented in an append-only
+  * Read side: the stream consumes committed VERSION DELTAS of the table's
+  * [[StrawLog]]. The offset is a position in the commit history
+  * ([[StrawLogStreamOffset]]); each trigger reads only the commit files
+  * past it — exact, O(delta), no listing. A new stream starts from the
+  * latest snapshot (initial-snapshot phase) and then follows the tail.
+  * Only data-bearing commits deliver (append / streaming epoch /
+  * truncate); compaction moves bytes, not data, and delivers NOTHING —
+  * rewriting files under a live stream never re-delivers their rows —
+  * while row-level delete/update cannot be represented in an append-only
   * stream and are skipped (no retraction; a stream started AFTER them
   * sees the post-mutation state via the snapshot + current deletion
   * vectors).
   *
-  * Read side, LISTING MODE (no log — foreign directories): the legacy
-  * micro-batch file stream — each trigger lists `.strb` files not yet
-  * seen, ordered by (modificationTime, path). The offset is an mtime
-  * high-water mark plus the explicit entries at or above it, bounded the
-  * way FileStreamSource compacts its seen-log. A checkpointed stream
-  * keeps its mode: offsets are self-describing, and a restart dispatches
-  * on the offset shape.
+  * A path with no log yet starts at the tail, version 1, when it holds no
+  * data files (absent or empty): its first commit is the first delivery,
+  * a bootstrap commit included. A log-less path that already holds data
+  * files fails at stream start — commit to it once through the connector
+  * (the first commit adopts the existing files) or read it as a batch.
   *
   * Write side: per-epoch rolling files via the same [[StrawDataWriter]] as
   * batch, staged under a job-scoped suffix and made visible only at epoch
   * commit ([[StrawCommitProtocol]]).
   */
-object StrawOffset {
-  def toJson(files: Seq[String]): String =
-    files.map(f => "\"" + f.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
-
-  def fromJson(json: String): Seq[String] = {
-    // minimal JSON string-array parser (offsets are written by toJson only)
-    val s = json.trim
-    require(s.startsWith("[") && s.endsWith("]"), s"bad offset json: $s")
-    val body = s.substring(1, s.length - 1).trim
-    if (body.isEmpty) Seq.empty
-    else {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val sb = new StringBuilder
-      var inStr = false
-      var escape = false
-      body.foreach { c =>
-        if (escape) { sb.append(c); escape = false }
-        else if (c == '\\') escape = true
-        else if (c == '"') { if (inStr) { out += sb.toString; sb.clear() }; inStr = !inStr }
-        else if (inStr) sb.append(c)
-      }
-      out.toSeq
-    }
-  }
-}
-
-/** A file is SEEN iff its modTime is below `highWater` OR its path appears
-  * in `files`. The mark only ever advances past files already admitted to a
-  * batch, and trails the newest seen file by a safety lag — accepting the
-  * same mtime-race tradeoff as Spark's FileStreamSource (a file that later
-  * lands with an mtime older than the mark is treated as already seen). */
-case class StrawStreamOffset(highWater: Long, files: Seq[(Long, String)]) extends Offset {
-  override def json(): String = {
-    // each entry serialized "modTime|path" inside a plain string array
-    val entries = files.map { case (m, p) => s"$m|$p" }
-    s"""{"hw":$highWater,"files":${StrawOffset.toJson(entries)}}"""
-  }
-  def fileSet: Set[String] = files.map(_._2).toSet
-}
-
-/** Log-mode stream offset: a position in the table's commit history.
+/** Stream offset: a position in the table's commit history. The table
+  * stream ([[StrawMicroBatchStream]]) and the change-feed stream
+  * ([[ChangeFeedMicroBatchStream]]) both use it; the items of a version
+  * are its deliverable files or its change tasks, in the stream's
+  * deterministic per-version order.
   *
-  *  - `version > 0`: every deliverable add of versions `< version` is
-  *    consumed, plus the first `idx` adds (path-sorted) of `version`.
-  *  - `version < 0` (initial-snapshot phase): the stream started from the
-  *    full snapshot AT `-version`; the first `idx` of its files (sorted by
-  *    the log-recorded (mtime, path) — delivery order) are consumed. Once
-  *    the snapshot drains, the position advances into the tail at
-  *    `-version + 1`.
+  *  - `version > 0`: every item of versions `< version` is consumed, plus
+  *    the first `idx` items of `version`.
+  *  - `version < 0` (table stream's initial-snapshot phase): the stream
+  *    started from the full snapshot AT `-version`; the first `idx` of its
+  *    files (sorted by the log-recorded (mtime, path) — delivery order)
+  *    are consumed. Once the snapshot drains, the position advances into
+  *    the tail at `-version + 1`.
   *
   * Replay is exact: commit files are write-once, so `(start, end]` always
-  * re-derives the same file list (a vacuumed-away commit file fails the
+  * re-derives the same item list (a vacuumed-away commit file fails the
   * stream loudly instead of skipping data). */
 case class StrawLogStreamOffset(version: Long, idx: Int) extends Offset {
   override def json(): String = s"""{"v":$version,"i":$idx}"""
@@ -97,6 +55,9 @@ case class StrawLogStreamOffset(version: Long, idx: Int) extends Offset {
     * tail phase (which starts at V+1). */
   def key: (Long, Int, Int) =
     if (version < 0) (-version, 0, idx) else (version, 1, idx)
+  /** The last tail version whose items `(_, this]` can include. */
+  def tailBound: Long =
+    if (version < 0) -version - 1 else if (idx == 0) version - 1 else version
 }
 
 object StrawLogStreamOffset {
@@ -115,24 +76,58 @@ object StrawLogStreamOffset {
     Ordering[(Long, Int, Int)].lteq(a.key, b.key)
 }
 
-object StrawStreamOffset {
-  def fromJson(json: String): StrawStreamOffset = {
-    val s = json.trim
-    require(s.startsWith("{") && s.endsWith("}"), s"bad stream offset json: $s")
-    val hwKey = "\"hw\":"
-    val hwIdx = s.indexOf(hwKey)
-    require(hwIdx >= 0, s"bad stream offset json (no hw): $s")
-    val hw = s.substring(hwIdx + hwKey.length)
-      .takeWhile(c => c == '-' || c.isDigit).toLong
-    val arrStart = s.indexOf('[')
-    val arrEnd = s.lastIndexOf(']')
-    require(arrStart >= 0 && arrEnd > arrStart, s"bad stream offset json (no files): $s")
-    val files = StrawOffset.fromJson(s.substring(arrStart, arrEnd + 1)).map { e =>
-      val cut = e.indexOf('|')
-      require(cut > 0, s"bad stream offset entry: $e")
-      (e.substring(0, cut).toLong, e.substring(cut + 1))
+/** Admission control of both log-position streams:
+  * `maxFilesPerTrigger` caps the items (files, change tasks) and
+  * `maxBytesPerTrigger` their summed length per micro-batch. Admission is
+  * a PREFIX of the pending items in delivery order, never
+  * skip-and-continue, so an end offset always describes a contiguous
+  * consumed range. Lengths come from the log itself: zero status RPCs
+  * even on a deep backlog. */
+private[spark] object StreamAdmission {
+  def defaultLimit(maxFiles: Option[Int], maxBytes: Option[Long]): ReadLimit =
+    maxFiles.map(ReadLimit.maxFiles).toSeq ++ maxBytes.map(ReadLimit.maxBytes) match {
+      case Seq() => ReadLimit.allAvailable()
+      case Seq(one) => one
+      case many => ReadLimit.compositeLimit(many.toArray)
     }
-    StrawStreamOffset(hw, files)
+
+  /** How many leading items, of byte lengths `lens`, `limit` admits. A
+    * byte cap admits at least one item, so a single over-cap file cannot
+    * wedge the stream; a composite admits the fewest of its parts. */
+  def admitted(lens: IndexedSeq[Long], limit: ReadLimit): Int = limit match {
+    case mf: ReadMaxFiles => math.min(lens.size, mf.maxFiles())
+    case mb: ReadMaxBytes => withinBytes(lens, mb.maxBytes())
+    case c: CompositeReadLimit =>
+      c.getReadLimits.foldLeft(lens.size)((n, l) => math.min(n, admitted(lens, l)))
+    case _ => lens.size
+  }
+
+  private def withinBytes(lens: IndexedSeq[Long], maxBytes: Long): Int = {
+    var budget = maxBytes
+    var n = 0
+    while (n < lens.size && (n == 0 || lens(n) <= budget)) {
+      budget -= lens(n)
+      n += 1
+    }
+    n
+  }
+
+  /** The end offset of the next micro-batch: the position after the last
+    * admitted item of `pending` (position-after-it, item) from `start`
+    * through tail version `bound`. Once everything is admitted — or
+    * nothing was pending — the position moves past `bound`, which
+    * fast-forwards over data-less versions (compaction, delete, update)
+    * so it never lags into the vacuumLog horizon. An unmoved position is
+    * `start` itself (json-identical): the engine's no-new-data signal. */
+  def endOffset[T](start: StrawLogStreamOffset, bound: Long,
+      pending: IndexedSeq[(StrawLogStreamOffset, T)], limit: ReadLimit)(
+      len: T => Long): StrawLogStreamOffset = {
+    val n = admitted(pending.map(p => len(p._2)), limit)
+    if (n == pending.size) {
+      val past = StrawLogStreamOffset(bound + 1, 0)
+      if (StrawLogStreamOffset.leq(past, start)) start else past
+    } else if (n == 0) start
+    else pending(n - 1)._1
   }
 }
 
@@ -143,19 +138,6 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
     skipFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
   extends MicroBatchStream with SupportsAdmissionControl
   with SupportsTriggerAvailableNow {
-
-  /** The high-water mark stays this far behind the newest seen mtime, so
-    * files still being copied in (or written by a skewed clock) within the
-    * window are not wrongly classified as seen. Our own sinks bump mtime to
-    * COMMIT time on rename (finalizeFiles), so this guards foreign writers
-    * (copies, distcp) — five minutes of slack trades a slightly larger
-    * explicit list for tolerance of slow multi-file copy-ins. */
-  private val SafetyLagMs = 5 * 60 * 1000L
-
-  /** Log mode iff the table carries a transaction log at stream start.
-    * A RESTARTED stream dispatches on its checkpointed offset's shape, so
-    * the mode is sticky per query regardless of this flag. */
-  private val logMode: Boolean = StrawLog.latestVersion(path).isDefined
 
   // ---- engine-side filter pruning (wired by [[StreamFilterPruning]]) ----
   // Spark runs no V2 filter pushdown for streaming scans (the ScanBuilder
@@ -185,30 +167,14 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
     if (hasUnfilteredConsumer) Nil else consumerSets
 
   // Trigger.AvailableNow: pin the drain target once — the latest log
-  // version (log mode) or the file-set snapshot (listing mode); subsequent
-  // capped micro-batches drain exactly this backlog, then the query stops.
-  @volatile private var availableNowSnapshot: Option[Seq[StrawIO.FileMeta]] = None
+  // version; subsequent capped micro-batches drain exactly this backlog,
+  // then the query stops.
   @volatile private var availableNowVersion: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit = {
-    // pin BOTH drain targets: the offset SHAPE follows the checkpoint,
-    // not this stream's logMode flag — a listing-mode checkpoint restarted
-    // after the table gained a log must still drain against a pinned file
-    // snapshot, and vice versa
-    if (logMode) availableNowVersion = Some(latestVersionNow())
-    availableNowSnapshot = Some(currentFiles())
-  }
-  override def reportLatestOffset(): Offset =
-    if (logMode) StrawLogStreamOffset(latestVersionNow() + 1, 0)
-    else
-      // an everything-visible upper bound: hw at -inf, all files explicit
-      StrawStreamOffset(Long.MinValue,
-        availableNowSnapshot.getOrElse(currentFiles()).map(m => (m.mtime, m.path)))
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowVersion = Some(latestVersionNow())
+  override def reportLatestOffset(): Offset = StrawLogStreamOffset(latestVersionNow() + 1, 0)
 
-  /** Visible files in admission order — log-aware ([[StrawIO
-    * .listFilesMeta]]), recursive so hive-partitioned sinks stream too. */
-  private def currentFiles(): Seq[StrawIO.FileMeta] =
-    StrawIO.listFilesMeta(path).sortBy(m => (m.mtime, m.path))
-
+  /** The latest committed version (0: no log yet), or the pinned one. */
   private def latestVersionNow(): Long =
     availableNowVersion.getOrElse(StrawLog.latestVersion(path).getOrElse(0L))
 
@@ -219,13 +185,11 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
     * the whole commit trades its genuine inserts for never
     * double-delivering, the same no-retraction bias as delete/update).
     *
-    * NOTE the standing backlog contract (unchanged from the listing-mode
-    * source): maintenance that VACUUMS files the stream has not yet
-    * delivered destroys that backlog — compact/delete/update/merge a
-    * streamed table only after the stream's offset passed the inputs. A
-    * commit the stream already consumed re-delivers nothing under any
-    * later maintenance, which is the guarantee the mtime path could not
-    * give. */
+    * NOTE the standing backlog contract: maintenance that VACUUMS files
+    * the stream has not yet delivered destroys that backlog —
+    * compact/delete/update/merge a streamed table only after the stream's
+    * offset passed the inputs. A commit the stream already consumed
+    * re-delivers nothing under any later maintenance. */
   private def deliverableOp(op: String): Boolean =
     !(op.startsWith("compact") || op.startsWith("delete") ||
       op.startsWith("update") || op.startsWith("merge") ||
@@ -249,12 +213,12 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
           "position) — restart the stream from a fresh checkpoint")
     }
 
-  /** The full file set at version `v` in DELIVERY order: (mtime, path),
-    * the listing-mode admission order — a consumer that relies on rough
-    * arrival ordering (e.g. event-time watermarks fed by time-ranged
-    * files) sees the same sequence whichever mode the source runs in.
-    * Deterministic on replay: both keys come from the LOG's recorded
-    * entries, never a live listing. */
+  /** The full file set at version `v` in DELIVERY order: (mtime, path).
+    * Commits stamp their files with commit time, so this is commit order —
+    * a consumer that relies on rough arrival ordering (e.g. event-time
+    * watermarks fed by time-ranged files) sees the files in the order
+    * they landed, whatever their paths. Deterministic on replay: both
+    * keys come from the LOG's recorded entries, never a live listing. */
   private def snapshotFilesAt(v: Long): Seq[StrawIO.FileMeta] =
     StrawLog.snapshotAt(path, v).getOrElse(throw new IllegalStateException(
       s"strawboat: streaming source cannot reconstruct snapshot $v of $path " +
@@ -264,8 +228,8 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
   /** Every unconsumed (position-after-it, file) from `start` through the
     * tail version `bound`, in delivery order. */
   private def pendingFrom(start: StrawLogStreamOffset, bound: Long)
-      : Seq[(StrawLogStreamOffset, StrawIO.FileMeta)] = {
-    val out = Seq.newBuilder[(StrawLogStreamOffset, StrawIO.FileMeta)]
+      : IndexedSeq[(StrawLogStreamOffset, StrawIO.FileMeta)] = {
+    val out = IndexedSeq.newBuilder[(StrawLogStreamOffset, StrawIO.FileMeta)]
     var firstTail = start.version
     if (start.version < 0) {
       val v0 = -start.version
@@ -290,129 +254,51 @@ class StrawMicroBatchStream(path: String, fullSchema: StructType,
     out.result()
   }
 
-  override def initialOffset(): Offset =
-    if (logMode) StrawLogStreamOffset(-latestVersionNow(), 0)
-    else StrawStreamOffset(Long.MinValue, Seq.empty)
-  override def latestOffset(): Offset =
-    if (logMode) StrawLogStreamOffset(latestVersionNow() + 1, 0)
-    else StrawStreamOffset(Long.MinValue, currentFiles().map(m => (m.mtime, m.path)))
+  /** A new stream starts at the latest snapshot; a path with no log yet
+    * starts at the tail, version 1 — unless it already holds data files,
+    * which no position in a commit history describes. */
+  override def initialOffset(): Offset = {
+    val v = latestVersionNow()
+    if (v > 0) StrawLogStreamOffset(-v, 0)
+    else if (StrawLog.latestVersion(path).isEmpty && StrawIO.listFilesMeta(path).nonEmpty)
+      throw new IllegalStateException(
+        s"strawboat: cannot stream $path: it holds data files but no transaction " +
+          "log (_straw_log). Commit to it once through the connector (the first " +
+          "commit adopts the existing files) or read the directory as a batch")
+    else StrawLogStreamOffset(1, 0)
+  }
+  override def latestOffset(): Offset = reportLatestOffset()
 
   // backpressure: cap the files and/or bytes admitted per micro-batch
   // (.option("maxFilesPerTrigger", n) / .option("maxBytesPerTrigger", b))
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = maxFilesPerTrigger.map(ReadLimit.maxFiles).toSeq ++
-      maxBytesPerTrigger.map(ReadLimit.maxBytes).toSeq
-    limits match {
-      case Seq() => ReadLimit.allAvailable()
-      case Seq(one) => one
-      case many => ReadLimit.compositeLimit(many.toArray)
-    }
-  }
+  override def getDefaultReadLimit: ReadLimit =
+    StreamAdmission.defaultLimit(maxFilesPerTrigger, maxBytesPerTrigger)
 
-  /** Apply one admission limit to the candidate list (in admission order).
-    * Byte caps use the length carried from the listing/log itself —
-    * zero per-candidate status RPCs even on a deep backlog — and always
-    * admit at least one file so a single over-cap file can't wedge the
-    * stream. */
-  private def applyLimit(fresh: Seq[StrawIO.FileMeta], limit: ReadLimit): Seq[StrawIO.FileMeta] =
-    limit match {
-      case mf: org.apache.spark.sql.connector.read.streaming.ReadMaxFiles =>
-        fresh.take(mf.maxFiles())
-      case mb: org.apache.spark.sql.connector.read.streaming.ReadMaxBytes =>
-        // PREFIX admission only (stop at the first file over budget, never
-        // skip-and-continue): the offset compaction treats the admitted set
-        // as a prefix of the backlog — a gap could advance the high-water
-        // mark past a skipped file and lose it permanently
-        var budget = mb.maxBytes()
-        val out = scala.collection.mutable.ArrayBuffer.empty[StrawIO.FileMeta]
-        var stop = false
-        for (e <- fresh if !stop) {
-          if (out.isEmpty || e.len <= budget) { out += e; budget -= e.len }
-          else stop = true
-        }
-        out.toSeq
-      case c: org.apache.spark.sql.connector.read.streaming.CompositeReadLimit =>
-        c.getReadLimits.foldLeft(fresh)(applyLimit)
-      case _ => fresh
-    }
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = start match {
-    case lo: StrawLogStreamOffset =>
-      val bound = latestVersionNow()
-      val pending = pendingFrom(lo, bound)
-      if (pending.isEmpty) {
-        // nothing deliverable — fast-forward past data-less versions
-        // (compaction/delete/update commits) so the offset never lags into
-        // the vacuumLog horizon; same position → start unchanged
-        // (json-identical), the engine's no-new-data signal
-        val ff = StrawLogStreamOffset(bound + 1, 0)
-        if (StrawLogStreamOffset.leq(ff, lo)) lo else ff
-      } else {
-        val admitted = applyLimit(pending.map(_._2), limit)
-        if (admitted.isEmpty) lo
-        else if (admitted.size == pending.size) StrawLogStreamOffset(bound + 1, 0)
-        else pending(admitted.size - 1)._1
-      }
-    case so: StrawStreamOffset => mtimeLatestOffset(so, limit)
-  }
-
-  private def mtimeLatestOffset(so: StrawStreamOffset, limit: ReadLimit): Offset = {
-    val seenSet = so.fileSet
-    val visible = availableNowSnapshot.getOrElse(currentFiles())
-    val fresh = visible.filter(m =>
-      m.mtime >= so.highWater && !seenSet.contains(m.path))
-    val admitted = applyLimit(fresh, limit)
-    // nothing new: return the START offset unchanged (json-identical), which
-    // is how the engine detects no-new-data and AvailableNow terminates
-    if (admitted.isEmpty) so
-    else {
-      val allSeen = so.files ++ admitted.map(m => (m.mtime, m.path))
-      // compaction: advance the mark past admitted files, but never past
-      //  (a) a not-yet-admitted backlog file (it must stay unseen),
-      //  (b) any file admitted THIS batch (replays of (start, this] must
-      //      still find it in the explicit list), or
-      //  (c) newest-seen-mtime minus the safety lag.
-      val unadmittedMin = fresh.drop(admitted.size).map(_.mtime)
-        .minOption.getOrElse(Long.MaxValue)
-      val admittedMin = admitted.map(_.mtime).min
-      val maxSeenMod = allSeen.map(_._1).max
-      val newHw = math.max(so.highWater,
-        math.min(math.min(unadmittedMin, admittedMin), maxSeenMod - SafetyLagMs))
-      StrawStreamOffset(newHw,
-        allSeen.filter(_._1 >= newHw).sortBy(identity))
-    }
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val lo = start.asInstanceOf[StrawLogStreamOffset]
+    val bound = latestVersionNow()
+    StreamAdmission.endOffset(lo, bound, pendingFrom(lo, bound), limit)(_.len)
   }
 
   override def deserializeOffset(json: String): Offset =
-    // offsets are self-describing: log-mode {"v":..,"i":..} vs listing-mode
-    // {"hw":..,"files":[..]} — a restarted stream keeps its mode
-    if (json.contains("\"hw\":")) StrawStreamOffset.fromJson(json)
+    if (json.contains("\"hw\":")) throw new IllegalStateException(
+      s"strawboat: the checkpoint of a stream over $path holds a listing-mode " +
+        "(mtime high-water) offset; listing-mode checkpoints are no longer " +
+        "readable — restart the stream from a fresh checkpoint")
     else StrawLogStreamOffset.fromJson(json)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    // derived from the two offsets ALONE (log mode: plus the write-once
-    // commit files they index): deterministic on replay from a checkpoint —
-    // the pruning below is a pure function of the (static) pushed filters
-    // and each file's footer, so a replayed batch prunes identically
-    val fresh: Seq[String] = (start, end) match {
-      case (lo: StrawLogStreamOffset, eo: StrawLogStreamOffset) =>
-        val bound =
-          if (eo.version < 0) -eo.version - 1
-          else if (eo.idx == 0) eo.version - 1
-          else eo.version
-        pendingFrom(lo, bound)
-          .filter { case (post, _) => StrawLogStreamOffset.leq(post, eo) }
-          .map(_._2.path)
-      case (so: StrawStreamOffset, eo: StrawStreamOffset) =>
-        val seenSet = so.fileSet
-        eo.files
-          .filter { case (m, p) => m >= so.highWater && !seenSet.contains(p) }
-          .map(_._2)
-      case _ => throw new IllegalStateException(
-        s"strawboat: mixed stream offset modes: ${start.json()} .. ${end.json()}")
-    }
+    // derived from the two offsets ALONE (plus the write-once commit files
+    // they index): deterministic on replay from a checkpoint — the pruning
+    // below is a pure function of the (static) pushed filters and each
+    // file's footer, so a replayed batch prunes identically
+    val lo = start.asInstanceOf[StrawLogStreamOffset]
+    val eo = end.asInstanceOf[StrawLogStreamOffset]
+    val fresh: Seq[String] = pendingFrom(lo, eo.tailBound)
+      .filter { case (post, _) => StrawLogStreamOffset.leq(post, eo) }
+      .map(_._2.path)
     // pushed filters prune the streaming read like the batch path: whole
     // hive partition directories first (zero footer IO for excluded ones),
     // then pages by their zone maps/blooms. Admission already marked the
@@ -499,20 +385,14 @@ case class StrawStreamingWriterFactory(path: String, schema: StructType,
   * the replayed epoch commits cleanly; after it, the txn in the snapshot
   * identifies the epoch as committed and the replay's re-staged files are
   * discarded — no partial-duplication window remains, unlike parquet's v1
-  * protocol. Hidden epoch-marker files serve only the `queryId == "none"`
-  * construction path and pre-log sinks; markers older than a few epochs
-  * are deleted as commits advance. Epochs are serial within a query, so
-  * sweeping this job's staged leftovers at commit/abort only removes
-  * dead-task debris of the same epoch. */
+  * protocol. Epochs are serial within a query, so sweeping this job's
+  * staged leftovers at abort only removes dead-task debris of the same
+  * epoch. */
 class StrawStreamingWrite(path: String, schema: StructType,
-    opts: graft.format.WriteOptions, partitionCols: Seq[String] = Seq.empty,
-    queryId: String = "none",
+    opts: graft.format.WriteOptions, partitionCols: Seq[String], queryId: String,
     checker: StrawConstraints.RowChecker = null, ordered: Boolean = false)
   extends StreamingWrite {
   private val jobId = java.util.UUID.randomUUID().toString.take(8)
-
-  private def epochMarker(epochId: Long) =
-    new org.apache.hadoop.fs.Path(path, s".commit-$queryId-$epochId")
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     StrawStreamingWriterFactory(path, schema, opts, jobId,
@@ -520,34 +400,24 @@ class StrawStreamingWrite(path: String, schema: StructType,
       checker, ordered)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val f = StrawIO.fs(path)
     val staged = messages.flatMap { case StrawCommitMessage(fs) => fs }.toSeq
-    // Epoch idempotence is a TXN ACTION in the transaction log: the log
-    // commit that makes the epoch's files visible and the replay guard are
-    // one atomic write, so there is no marker-vs-log crash window left.
-    // The engine-visible queryId is the txn app id; "none" (non-streaming
-    // construction paths) falls back to marker files, whose window is the
-    // pre-log behavior. Markers written by pre-log code are still honored.
-    val txn: Option[(String, Long)] =
-      if (queryId != "none") Some((queryId, epochId)) else None
-    val marker = epochMarker(epochId)
-    val alreadyCommitted =
-      StrawLog.snapshot(path).exists(
-        _.txns.getOrElse(queryId, Long.MinValue) >= epochId) || f.exists(marker)
+    // Epoch idempotence is a TXN ACTION in the transaction log, keyed by
+    // the engine's queryId: the log commit that makes the epoch's files
+    // visible and the replay guard are one atomic write, so no crash
+    // window lies between them.
+    val alreadyCommitted = StrawLog.snapshot(path).exists(
+      _.txns.getOrElse(queryId, Long.MinValue) >= epochId)
     if (alreadyCommitted) {
       // replayed epoch: its rows are already visible — drop this attempt
+      val f = StrawIO.fs(path)
       staged.foreach(s => f.delete(new org.apache.hadoop.fs.Path(s), false))
     } else {
       val fresh = StrawCommitProtocol.finalizeFiles(path, jobId, staged)
       val adds = StrawIO.mapParallel(fresh)(StrawLog.entryFor)
-      StrawLog.commit(path, adds, txn = txn, op = s"streaming epoch $epochId")
-      if (txn.isEmpty) f.create(marker, true).close()
+      StrawLog.commit(path, adds, txn = Some((queryId, epochId)),
+        op = s"streaming epoch $epochId")
       StrawBucket.recordSpec(path, opts, truncate = false)
     }
-    // retire markers the engine can no longer replay (it only ever replays
-    // the last uncommitted epoch) so the sink dir doesn't accumulate one
-    // hidden file per epoch forever
-    if (epochId >= 3) f.delete(epochMarker(epochId - 3), false): Unit
     // no per-epoch staged sweep: success-path staged files are all
     // reported-and-renamed or task-abort-deleted; a whole-table walk per
     // MICRO-BATCH is the worst place to pay O(files) listings (see

@@ -146,11 +146,4 @@ class ChangeFeedStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(collected(sink) == (0L until 5L).map(i => (i, "insert", 1L)),
       "the bounded stream must stop at endingVersion")
   }
-
-  test("cdf stream offset json round-trips") {
-    val o = CdfStreamOffset(42L, 7)
-    assert(CdfStreamOffset.fromJson(o.json()) == o)
-    assert(CdfStreamOffset.leq(CdfStreamOffset(42L, 7), CdfStreamOffset(43L, 0)))
-    assert(!CdfStreamOffset.leq(CdfStreamOffset(43L, 0), CdfStreamOffset(42L, 7)))
-  }
 }

@@ -205,5 +205,9 @@ class StrawBulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(StrawBucket.specOf(out).exists(_._2 == 4),
       "fallback dropped the bucket layout")
     assert(spark.read.format("strawboat").load(out).count() == 200)
+    // a test-only knob has no writer-option spelling: the fallback refuses
+    // it rather than write a different layout
+    intercept[IllegalArgumentException](StrawWriteOptions.unparse(
+      graft.format.WriteOptions(patasRing = Some(true))))
   }
 }

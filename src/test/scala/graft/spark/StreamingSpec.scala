@@ -63,46 +63,164 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(oneSide.map(_.path).toSet.size < all.map(_.path).toSet.size)
   }
 
-  test("stream offsets are bounded: admitted history compacts behind the high-water mark") {
+  test("log-less directory: stream start fails naming the path; one connector append adopts it") {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    // json round trip, including quotes/backslashes in paths
-    val probe = StrawStreamOffset(12345L, Seq((12345L, "/a/b.strb"), (12350L, "/a/c\"x\\y.strb")))
-    assert(StrawStreamOffset.fromJson(probe.json()) == probe)
-
-    val data = s"$dir/offsetcompact"
+    val data = s"$dir/logless"
     new java.io.File(data).mkdirs()
     val schema = StructType(Seq(StructField("v", LongType)))
-    def mkFile(name: String, mtime: Long): Unit = {
+    // files written by the format layer alone: data, but no _straw_log
+    for (f <- 0 until 3) {
       val w = new graft.format.StrawFileWriter(schema, graft.format.WriteOptions())
-      w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](Long.box(1L))))
-      val f = new java.io.File(data, name)
-      val os = new java.io.FileOutputStream(f)
+      for (r <- 0 until 10) w.write(new org.apache.spark.sql.catalyst.expressions
+        .GenericInternalRow(Array[Any](Long.box(f * 10L + r))))
+      val os = new java.io.FileOutputStream(new java.io.File(data, s"old-$f.strb"))
       try w.writeTo(os) finally os.close()
-      assert(f.setLastModified(mtime))
     }
-    // old files far outside the 5-minute safety-lag window
-    val now = System.currentTimeMillis()
-    for (i <- 0 until 10) mkFile(f"old-$i%02d.strb", now - 3600000 + i * 1000)
+    assert(StrawLog.latestVersion(data).isEmpty)
+    def drain(name: String): Set[Long] = {
+      val q = spark.readStream.format("strawboat").load(data)
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", s"$dir/${name}Ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination(60000) finally q.stop()
+      spark.table(name).collect().map(_.getLong(0)).toSet
+    }
+    val err = intercept[Exception](drain("logless1"))
+    val msg = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msg.contains(data) && msg.contains("no transaction log"), msg)
 
+    // the first connector commit folds the existing files into version 1
+    spark.range(30, 40).select(col("id").as("v")).coalesce(1)
+      .write.format("strawboat").mode("append").save(data)
+    assert(StrawLog.commitAdds(data, 1L).exists(_._1 == "append (bootstrap)"))
+    assert(drain("logless2") == (0L until 40L).toSet)
+    // followed as a TAIL commit, the bootstrap version delivers the old
+    // files too
     val stream = new StrawMicroBatchStream(data, schema, schema)
-    val limit = stream.getDefaultReadLimit
-    val off0 = stream.initialOffset().asInstanceOf[StrawStreamOffset]
-    val off1 = stream.latestOffset(off0, limit).asInstanceOf[StrawStreamOffset]
-    assert(off1.files.size == 10) // first batch: everything explicit
+    val tail = StrawLogStreamOffset(1, 0)
+    val end = stream.latestOffset(tail, stream.getDefaultReadLimit)
+    val delivered = stream.planInputPartitions(tail, end)
+      .map(_.asInstanceOf[StrawInputPartition].path).distinct
+    assert(delivered.length == 4 &&
+      (0 until 3).forall(f => delivered.exists(_.endsWith(s"old-$f.strb"))),
+      delivered.toSeq)
+  }
 
-    for (i <- 0 until 10) mkFile(f"new-$i%02d.strb", now)
-    val off2 = stream.latestOffset(off1, limit).asInstanceOf[StrawStreamOffset]
-    // the 10 old admitted files fell behind the mark; only the recent
-    // window stays explicit — the offset no longer grows with history
-    assert(off2.files.size == 10, s"expected compaction, got ${off2.files.size}")
-    assert(off2.highWater > now - 3600000 + 9000)
-    // batch (off1, off2] replays exactly the 10 new files from offsets alone
-    val parts = stream.planInputPartitions(off1, off2)
-    assert(parts.length == 10)
-    // idle stream: offset unchanged (json-identical) → no-new-data signal
-    val off3 = stream.latestOffset(off2, limit)
-    assert(off3.json() == off2.json())
+  test("absent directory: a stream started before the first write delivers each append once") {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val data = s"$dir/notyet"
+    val q = spark.readStream.format("strawboat")
+      .schema(StructType(Seq(StructField("id", LongType)))).load(data)
+      .writeStream.format("memory").queryName("notyet")
+      .option("checkpointLocation", s"$dir/notyetCkpt")
+      .trigger(Trigger.ProcessingTime("100 milliseconds")).start()
+    try {
+      q.processAllAvailable()
+      spark.range(0, 10).coalesce(1).write.format("strawboat").mode("append").save(data)
+      q.processAllAvailable()
+      spark.range(10, 25).coalesce(1).write.format("strawboat").mode("append").save(data)
+      q.processAllAvailable()
+    } finally q.stop()
+    val ids = spark.table("notyet").collect().map(_.getLong(0)).toSeq
+    assert(ids.sorted == (0L until 25L), s"each append exactly once: ${ids.sorted}")
+  }
+
+  test("stream offset: json round trip, phase order, change-feed checkpoints") {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    for (o <- Seq(StrawLogStreamOffset(-3L, 17), StrawLogStreamOffset(42L, 7),
+        StrawLogStreamOffset(1L, 0)))
+      assert(StrawLogStreamOffset.fromJson(o.json()) == o)
+    // the initial-snapshot phase of V orders before V's successor's tail
+    val snap = StrawLogStreamOffset(-5L, 1000)
+    val tail = StrawLogStreamOffset(6L, 0)
+    assert(StrawLogStreamOffset.leq(snap, tail) && !StrawLogStreamOffset.leq(tail, snap))
+    assert(StrawLogStreamOffset.leq(StrawLogStreamOffset(42L, 7), StrawLogStreamOffset(43L, 0)))
+    assert(!StrawLogStreamOffset.leq(StrawLogStreamOffset(43L, 0), StrawLogStreamOffset(42L, 7)))
+    // a change-feed checkpoint offset keeps its position
+    val schema = StructType(Seq(StructField("id", LongType)))
+    val cdf = new ChangeFeedMicroBatchStream(s"$dir/cdfckpt", 1L, None, schema)
+    assert(cdf.deserializeOffset("""{"v":42,"i":7}""") == StrawLogStreamOffset(42L, 7))
+    // a listing-mode checkpoint offset fails loudly
+    val table = new StrawMicroBatchStream(s"$dir/cdfckpt", schema, schema)
+    val e = intercept[IllegalStateException](
+      table.deserializeOffset("""{"hw":12345,"files":["12345|/a/b.strb"]}"""))
+    assert(e.getMessage.contains("listing-mode checkpoints are no longer readable"))
+  }
+
+  test("stream admission: one helper admits what both streams' former rules did") {
+    import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadLimit,
+      ReadMaxBytes, ReadMaxFiles}
+    // the table stream's former rule: a prefix fold over the files
+    def tableRule(fresh: Seq[Long], limit: ReadLimit): Seq[Long] = limit match {
+      case mf: ReadMaxFiles => fresh.take(mf.maxFiles())
+      case mb: ReadMaxBytes =>
+        var budget = mb.maxBytes()
+        val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+        var stop = false
+        for (e <- fresh if !stop) {
+          if (out.isEmpty || e <= budget) { out += e; budget -= e }
+          else stop = true
+        }
+        out.toSeq
+      case c: CompositeReadLimit => c.getReadLimits.foldLeft(fresh)(tableRule)
+      case _ => fresh
+    }
+    // the change feed's former rule: the fewest any part admits
+    def cdfRule(pending: Seq[Long], limit: ReadLimit): Int = limit match {
+      case mf: ReadMaxFiles => math.min(pending.size, mf.maxFiles())
+      case mb: ReadMaxBytes =>
+        var budget = mb.maxBytes()
+        var n = 0
+        var stop = false
+        for (t <- pending if !stop) {
+          if (n == 0 || t <= budget) { n += 1; budget -= t }
+          else stop = true
+        }
+        n
+      case c: CompositeReadLimit =>
+        c.getReadLimits.foldLeft(pending.size)((acc, l) => math.min(acc, cdfRule(pending, l)))
+      case _ => pending.size
+    }
+    val limits = Seq(
+      StreamAdmission.defaultLimit(None, None),
+      StreamAdmission.defaultLimit(Some(2), None),
+      StreamAdmission.defaultLimit(None, Some(250L)),
+      StreamAdmission.defaultLimit(Some(2), Some(150L)),
+      ReadLimit.compositeLimit(Array(ReadLimit.maxBytes(150L), ReadLimit.maxFiles(3))),
+      ReadLimit.compositeLimit(Array(ReadLimit.maxFiles(5),
+        ReadLimit.compositeLimit(Array(ReadLimit.maxBytes(1000L), ReadLimit.maxFiles(4))))))
+    val rnd = new scala.util.Random(7)
+    val inputs = Seq(Vector.empty[Long], Vector(100L, 100L, 100L, 100L),
+      Vector(500L, 10L, 10L), Vector(10L, 500L, 10L)) ++
+      Seq.fill(50)(Vector.fill(rnd.nextInt(12))(1L + rnd.nextInt(400)))
+    for (lens <- inputs; l <- limits) {
+      val n = StreamAdmission.admitted(lens, l)
+      assert(n == tableRule(lens, l).size && n == cdfRule(lens, l), s"$lens under $l")
+    }
+    val bytes100 = ReadLimit.maxBytes(100L)
+    // a single file over the byte cap is still admitted, alone
+    assert(StreamAdmission.admitted(Vector(500L, 10L, 10L), bytes100) == 1)
+    assert(StreamAdmission.admitted(Vector(10L, 500L, 10L), bytes100) == 1)
+    assert(StreamAdmission.admitted(Vector(100L, 100L, 100L, 100L),
+      StreamAdmission.defaultLimit(Some(3), Some(250L))) == 2)
+
+    // end offsets: a partial batch stops after its last admitted item; a
+    // full one, or nothing pending, moves past the bound; an unmoved
+    // position is the start itself
+    val start = StrawLogStreamOffset(3L, 0)
+    val pending = IndexedSeq((StrawLogStreamOffset(3L, 1), 10L),
+      (StrawLogStreamOffset(3L, 2), 10L), (StrawLogStreamOffset(5L, 1), 10L))
+    val all = ReadLimit.allAvailable()
+    assert(StreamAdmission.endOffset(start, 5L, pending, ReadLimit.maxFiles(2))(identity) ==
+      StrawLogStreamOffset(3L, 2))
+    assert(StreamAdmission.endOffset(start, 5L, pending, all)(identity) ==
+      StrawLogStreamOffset(6L, 0))
+    assert(StreamAdmission.endOffset(start, 5L, IndexedSeq.empty[(StrawLogStreamOffset, Long)],
+      all)(identity) == StrawLogStreamOffset(6L, 0))
+    val idle = StrawLogStreamOffset(6L, 0)
+    assert(StreamAdmission.endOffset(idle, 5L, IndexedSeq.empty[(StrawLogStreamOffset, Long)],
+      all)(identity) eq idle)
   }
 
   test("log-mode stream: compaction during a live stream re-delivers nothing") {
@@ -116,15 +234,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val limit = stream.getDefaultReadLimit
     val o0 = stream.initialOffset()
     assert(o0.isInstanceOf[StrawLogStreamOffset], "connector tables stream in log mode")
-    // json round trip
-    assert(StrawLogStreamOffset.fromJson(
-      StrawLogStreamOffset(-3L, 17).json()) == StrawLogStreamOffset(-3L, 17))
     val o1 = stream.latestOffset(o0, limit)
     val firstBatch = stream.planInputPartitions(o0, o1)
     assert(firstBatch.nonEmpty, "initial snapshot must deliver")
     // compact the table mid-stream: files are rewritten under new paths
-    // with data unchanged — the mtime source would re-deliver them (all
-    // mtimes are within the safety lag); the log source must not
+    // with data unchanged — the stream must not re-deliver them
     val res = StrawCompaction.compact(spark, data)
     assert(res.inputFiles > 0, res.toString)
     val o2 = stream.latestOffset(o1, limit)
@@ -355,7 +469,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // hive layout makes path order provably DISAGREE with commit order:
     // g=z commits first but path-sorts last. A watermark-style consumer
     // depends on rough arrival ordering, so the snapshot phase must
-    // deliver the older file first (the listing-mode admission order).
+    // deliver the older file first.
     Seq((1L, "z")).toDF("id", "g").coalesce(1)
       .write.format("strawboat").option("partitionBy", "g")
       .mode("overwrite").save(data)
